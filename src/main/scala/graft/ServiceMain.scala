@@ -289,19 +289,22 @@ object ServiceMain {
       }
     }
 
-    // 3. ONE offset-indexed MQTT log source; each query routes its slice
-    val msgs = spark.readStream
+    // 3. ONE offset-indexed MQTT log; each query reads the topics it routes
+    def source(topics: String): DataFrame = spark.readStream
       .format("graft.streaming.MqttLikeSource")
-      .option("topics", "#")
+      .option("topics", topics)
       .load()
       .withColumn("payload", col("payload").cast("string"))
+    val msgs = source("#")
 
     // control plane: `{action, thing:{id}}` events -> registry MERGE.
     // REST enrichment is driver-side per micro-batch — control-plane
     // volume (the reference does one GET per event too, :322-341). An
     // event may carry its transducer list inline (engine extension for
     // offline drills); otherwise it comes from REST; delete needs neither.
-    val controlQ = reg(msgs.filter(col("topic") === evTopic)
+    // Its source is scoped to the events topic, so data-plane traffic
+    // never wakes it: no micro-batch runs until an event is published.
+    val controlQ = reg(source(evTopic).filter(col("topic") === evTopic)
       .select(col("payload"), unix_micros(col("ts")).as("ts_us"))
       .writeStream
       .option("checkpointLocation", cp("control"))

@@ -582,29 +582,34 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     // first write per measurement and a conflicting later write is a
     // partial-write 400, never a silent flip): registration commits FIRST
     // — a crash between the two leaves a registered type with no data,
-    // which only ever REJECTS more, never corrupts — and re-reads inside
-    // the retry so of two writers racing an unseen field, the commit
-    // loser re-derives against the winner's registration (first-seen wins
-    // JVM- and process-wide, the registry is ACID like the data)
-    val types = TxLogTable.retryOnConflict() {
-      val known = fieldTypes(db)
+    // which only ever REJECTS more, never corrupts. A registration is a
+    // compare-and-set on the registry version it was derived from: it
+    // carries the txn fence (FieldTypesTxn, that version + 1), so of two
+    // writers deriving from one version the second's append is fenced off
+    // and it re-derives against the winner's types (first-seen wins JVM-
+    // and process-wide, the registry is ACID like the data)
+    @scala.annotation.tailrec
+    def register(): Map[(String, String), String] = {
+      val at = fieldTypesTable.version
+      val known = fieldTypes(db, at)
       val fresh = LineProtocol.firstSeenTypes(lines, known, tsUnitNs)
-      if (fresh.nonEmpty) {
+      if (fresh.isEmpty) known
+      else {
         import spark.implicits._
         fieldTypesTable.append(fresh.toSeq
           .map { case ((m, f), t) => (db, m, f, t) }
-          .toDF("db", "measurement", "field", "ftype"))
+          .toDF("db", "measurement", "field", "ftype"),
+          txn = Some((InfluxCatalog.FieldTypesTxn, at.fold(0L)(_ + 1))))
+        register()
       }
-      known ++ fresh
     }
-    // conflict-retried: concurrent /write clients and the maintenance
-    // compactor race this commit routinely — a lost optimistic round is
-    // a retry, never an error surfaced to the HTTP client
-    val v = TxLogTable.retryOnConflict() {
-      pointsTable(db).append(
-        LineProtocol.narrowPoints(lines, serverTsUs = Some(serverTsUs),
-          tsUnitNs = tsUnitNs, fieldTypes = types))
-    }
+    val types = register()
+    // concurrent /write clients and the maintenance compactor race this
+    // commit routinely; the append rebases a lost race itself, so it is
+    // never an error surfaced to the HTTP client
+    val v = pointsTable(db).append(
+      LineProtocol.narrowPoints(lines, serverTsUs = Some(serverTsUs),
+        tsUnitNs = tsUnitNs, fieldTypes = types))
     LpWriteResult(v, LineProtocol.errors(lines, tsUnitNs, fieldTypes = types),
       LineProtocol.narrowDropped(lines, serverTsAssigned = true,
         tsUnitNs = tsUnitNs, fieldTypes = types))
@@ -622,13 +627,13 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
   /** The registered first-seen types of `db` as a driver map (bounded by
     * the db's schema size — fields × measurements, never points).
     */
-  def fieldTypes(db: String): Map[(String, String), String] = {
-    val t = fieldTypesTable
-    if (t.version.isEmpty) Map.empty
-    else t.read().filter(col("db") === db)
-      .select("measurement", "field", "ftype").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-  }
+  def fieldTypes(db: String, at: Option[Long] = fieldTypesTable.version)
+      : Map[(String, String), String] =
+    at.fold(Map.empty[(String, String), String]) { v =>
+      fieldTypesTable.readVersion(v).filter(col("db") === db)
+        .select("measurement", "field", "ftype").collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+    }
 
   /** One statement in, one DataFrame out — the full dialect with database
     * routing. SELECT plans against the FROM qualifier's db (`defaultDb`
@@ -987,6 +992,12 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
 }
 
 object InfluxCatalog {
+  /** The txn app id every field-type registration commits under: its
+    * sequence is the registry version the registration was derived from,
+    * plus one, which makes the append a compare-and-set on that version.
+    */
+  private[influxql] val FieldTypesTxn = "field-types"
+
   /** Statement-family routing is by PREFIX, never `contains`: a SELECT
     * whose measurement, tag, or string literal merely mentions
     * "subscription" (a perfectly plausible business word) must reach the

@@ -71,10 +71,13 @@ object Ingest {
   /** R6 — registry membership filter (influx_service.py:134-137): drop
     * messages whose device is not registered. The registry is a small
     * dimension, so this plans as a broadcast left-semi join (no shuffle of
-    * the fact side).
+    * the fact side). A semi join keeps each message at most once however
+    * often its device repeats in `registry`, so no distinct runs here: it
+    * would put an Exchange + HashAggregate under the broadcast on every
+    * execution.
     */
   def registryFilter(df: DataFrame, registry: DataFrame): DataFrame =
-    df.join(broadcast(registry.select("device_id").distinct()), Seq("device_id"), "left_semi")
+    df.join(broadcast(registry.select("device_id")), Seq("device_id"), "left_semi")
 
   /** R8 — narrow point projection (influx_service.py:183-189): one row per
     * (device, transducer, ts) with the value variant. The narrow table is the

@@ -6,6 +6,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal ACID table layer in the transaction-log style (the Delta/Iceberg
   * pattern, BASELINE.md names Parquet/Delta as the reference's table layer):
@@ -18,17 +19,23 @@ import org.apache.spark.sql.functions._
   * Layout under `path`:
   * {{{
   *   d-<uuid>/part-*.parquet     -- immutable data directories
-  *   _txlog/<version>.json       -- {"version":N,"op":"...","dirs":[...]}
+  *   _txlog/<version>.json       -- {"version":N,"op":"...","dirs":[...],"schema":"..."}
   * }}}
+  *
+  * Every entry records its snapshot's schema (Delta's `metaData.schemaString`
+  * idea), so every read of the table's data directories hands the parquet
+  * reader that schema instead of launching a footer-inference Spark job.
   *
   * Commit protocol: write the entry to a temp file, then atomically
   * hard-link it to `<version>.json` (link(2) fails with EEXIST on a
   * committed version; rename(2) would silently replace — not a commit
   * primitive). Two writers racing on the same version see exactly one
   * winner; the loser gets [[TxLogTable.CommitConflict]] and retries by
-  * re-reading. Holds on local filesystems and HDFS (createLink/no-replace
-  * create); an object store deployment needs a conditional-put commit
-  * service instead — the same caveat Delta's LogStore abstracts.
+  * re-reading — except an append, whose new dirs fit any base: it rebases
+  * its commit itself and keeps the data it already wrote. Holds on local
+  * filesystems and HDFS (createLink/no-replace create); an object store
+  * deployment needs a conditional-put commit service instead — the same
+  * caveat Delta's LogStore abstracts.
   *
   * Scale posture: plain MERGE rewrites the full snapshot — correct for
   * dimension tables (registries: small, slowly changing). Big keyed tables
@@ -81,7 +88,24 @@ class TxLogTable(spark: SparkSession, path: String) {
     val e = readEntry(v)
     if (e.dirs.isEmpty)
       throw new IllegalStateException(s"version $v of $path is empty")
-    spark.read.parquet(e.dirs.map(d => root.resolve(d).toString): _*)
+    readDirs(e.dirs, e.schema)
+  }
+
+  /** The schema of version `v`: the one its entry records, or — for an
+    * entry committed before entries carried one — the parquet footer's
+    * (one inference job).
+    */
+  def schemaOf(v: Long): StructType = {
+    val e = readEntry(v)
+    e.schema.getOrElse(readDirs(e.dirs, None).schema)
+  }
+
+  /** Data directories (names relative to the table root) as one frame,
+    * read with the recorded schema when there is one: no inference job.
+    */
+  private def readDirs(dirs: Seq[String], schema: Option[StructType]): DataFrame = {
+    val paths = dirs.map(d => root.resolve(d).toString)
+    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
   }
 
   /** Append-only commit: previous snapshot plus the new rows.
@@ -108,29 +132,46 @@ class TxLogTable(spark: SparkSession, path: String) {
           "append() would break the key-uniqueness invariant granular " +
           "merges depend on; use merge(), appendClustered() or overwrite()")
     }
-    val base = version
-    val fenced = txn.exists { case (appId, seq) => txnHighWatermark(appId).exists(_ >= seq) }
-    if (fenced)
-      base.getOrElse(throw new IllegalStateException(
-        s"txn fence ${txn.get} exists but $path has no version"))
-    else {
-      // schema drift fails LOUDLY at write time: multi-dir parquet reads
-      // resolve the schema from ONE footer (no mergeSchema), so an append
-      // with different columns/types would silently drop or null columns
-      // on every later read instead of erroring here
-      base.foreach { v =>
-        val cur = readVersion(v).schema
-        val curFields = cur.fields.map(f => (f.name, f.dataType)).toSet
-        val newFields = df.schema.fields.map(f => (f.name, f.dataType)).toSet
+    appendCommit(df.schema, txn)(Seq(writeDataDir(df)))._1
+  }
+
+  /** The commit half [[append]] and [[appendClustered]] share. Against
+    * the current base it checks the txn fence and the schema, runs `write`
+    * (the Spark write of the new data dirs) once, and commits. Appended
+    * dirs are valid on top of ANY base, so a lost commit race re-resolves
+    * only the new base — fence and schema re-checked against it — and
+    * commits again; it never redoes the write. A retry that finds the
+    * fence taken or the schema evolved leaves the written dirs
+    * unreferenced, for [[vacuum]]. Returns the version and the dirs this
+    * call committed (none when the fence skipped it).
+    */
+  private def appendCommit(schema: StructType, txn: Option[(String, Long)])(
+      write: => Seq[String]): (Long, Seq[String]) = {
+    var written: Option[Seq[String]] = None
+    while (true) {
+      val base = version
+      val fenced = txn.exists { case (appId, seq) => txnHighWatermark(appId).exists(_ >= seq) }
+      if (fenced)
+        return (base.getOrElse(throw new IllegalStateException(
+          s"txn fence ${txn.get} exists but $path has no version")), Nil)
+      // schema drift fails LOUDLY at write time: a snapshot reads with ONE
+      // schema, so an append with different columns/types would silently
+      // drop or null columns on every later read instead of erroring here
+      val cur = base.map(schemaOf)
+      cur.foreach { c =>
+        val curFields = c.fields.map(f => (f.name, f.dataType)).toSet
+        val newFields = nullable(schema).fields.map(f => (f.name, f.dataType)).toSet
         if (curFields != newFields)
           throw new IllegalArgumentException(
-            s"append schema ${df.schema.simpleString} does not match table " +
-              s"$path schema ${cur.simpleString}; rewrite via overwrite() to evolve")
+            s"append schema ${schema.simpleString} does not match table " +
+              s"$path schema ${c.simpleString}; rewrite via overwrite() to evolve")
       }
-      val dirs = base.map(readEntry(_).dirs).getOrElse(Nil)
-      val dir = writeDataDir(df)
-      commit("append", dirs :+ dir, base, txn)
+      val dirs = written.getOrElse { val w = write; written = Some(w); w }
+      try return (commit("append", base.map(readEntry(_).dirs).getOrElse(Nil) ++ dirs,
+        base, cur.getOrElse(nullable(schema)), txn), dirs)
+      catch { case _: CommitConflict => () } // another writer won: rebase
     }
+    throw new IllegalStateException("unreachable")
   }
 
   /** [[append]], materialized as MANY range-clustered data directories in
@@ -148,21 +189,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     require(nDirs > 0, "nDirs must be positive")
     requireRangeCastable(df, rangeCol, "appendClustered")
     markClustered(rangeCol)
-    val base = version
-    val fenced = txn.exists { case (appId, seq) => txnHighWatermark(appId).exists(_ >= seq) }
-    if (fenced)
-      base.getOrElse(throw new IllegalStateException(
-        s"txn fence ${txn.get} exists but $path has no version"))
-    else {
-      base.foreach { v =>
-        val cur = readVersion(v).schema
-        val curFields = cur.fields.map(f => (f.name, f.dataType)).toSet
-        val newFields = df.schema.fields.map(f => (f.name, f.dataType)).toSet
-        if (curFields != newFields)
-          throw new IllegalArgumentException(
-            s"append schema ${df.schema.simpleString} does not match table " +
-              s"$path schema ${cur.simpleString}; rewrite via overwrite() to evolve")
-      }
+    val (v, dirs) = appendCommit(df.schema, txn) {
       // one partitioned write into a staging dir, then each slice subdir
       // moves to its d-<uuid> name. The moves are data STAGING (nothing is
       // visible until the log commit below), not a commit primitive — the
@@ -182,14 +209,14 @@ class TxLogTable(spark: SparkSession, path: String) {
       deleteRecursively(staged)
       // an empty input still commits a schema-preserving empty dir, so the
       // snapshot stays readable (same rule as removeDirs' last-dir case)
-      val dirs = if (names.nonEmpty) names else Seq(writeDataDir(df.limit(0)))
-      val v = commit("append", base.map(readEntry(_).dirs).getOrElse(Nil) ++ dirs, base, txn)
-      // materialize the range column's stats sidecars NOW (the data is
-      // page-cache warm): they are the part of the index a granular merge
-      // plans against, so the first fold shouldn't pay a lazy corpus scan
-      dirColStats(rangeCol, dirs)
-      v
+      if (names.nonEmpty) names else Seq(writeDataDir(df.limit(0)))
     }
+    // materialize the range column's stats sidecars NOW (the data is
+    // page-cache warm): they are the part of the index a granular merge
+    // plans against, so the first fold shouldn't pay a lazy corpus scan
+    // (a fenced replay wrote nothing and has nothing to index)
+    if (dirs.nonEmpty) dirColStats(rangeCol, dirs, schemaOf(v))
+    v
   }
 
   /** Highest committed transaction sequence for `appId`, if any — the
@@ -212,7 +239,9 @@ class TxLogTable(spark: SparkSession, path: String) {
 
   /** The version whose commit carried transaction (appId, seq), if any. */
   def versionOfTxn(appId: String, seq: Long): Option[Long] =
-    version.flatMap(v => (0L to v).find(readEntry(_).txn.contains((appId, seq))))
+    // newest first: the fence admits each (appId, seq) at most once, and
+    // the caller is almost always asking about a commit it just made
+    version.flatMap(v => (v to 0L by -1L).find(readEntry(_).txn.contains((appId, seq))))
 
   /** Absolute paths of the data directories visible at version `v` —
     * for external per-commit maintenance (e.g. lockstep stats indexing).
@@ -230,7 +259,7 @@ class TxLogTable(spark: SparkSession, path: String) {
   def overwrite(df: DataFrame): Long = {
     val base = version
     val dir = writeDataDir(df)
-    commit("overwrite", Seq(dir), base)
+    commit("overwrite", Seq(dir), base, nullable(df.schema))
   }
 
   /** Row-level DELETE: drop rows matching `predicate`, keep everything
@@ -245,7 +274,7 @@ class TxLogTable(spark: SparkSession, path: String) {
       throw new IllegalStateException(s"no committed version at $path")))
     val kept = readVersion(base.get).filter(!coalesce(predicate, lit(false)))
     val dir = writeDataDir(kept)
-    commit("delete", Seq(dir), base)
+    commit("delete", Seq(dir), base, nullable(kept.schema))
   }
 
   /** Shard-level drop (InfluxQL DROP SHARD): publish a snapshot whose dir
@@ -265,10 +294,11 @@ class TxLogTable(spark: SparkSession, path: String) {
     require(unknown.isEmpty,
       s"not data dirs of version $base: ${unknown.mkString(", ")}")
     val kept = cur.filterNot(d => absPaths.contains(abs(d)))
+    val schema = schemaOf(base)
     if (kept.isEmpty) {
       val dir = writeDataDir(readVersion(base).limit(0))
-      commit("dropshard", Seq(dir), Some(base))
-    } else commit("dropshard", kept, Some(base))
+      commit("dropshard", Seq(dir), Some(base), schema)
+    } else commit("dropshard", kept, Some(base), schema)
   }
 
   /** MERGE upsert by `keys`: for each key, one surviving row. With
@@ -320,14 +350,15 @@ class TxLogTable(spark: SparkSession, path: String) {
             dedupKeys(tagged, keys, orderCol)
         }
         val dir = writeDataDir(merged)
-        commit("merge", Seq(dir), base)
+        commit("merge", Seq(dir), base, nullable(merged.schema))
     }
   }
 
   private def mergeGranular(updates: DataFrame, keys: Seq[String],
                             orderCol: Option[String], rc: String, v: Long): Long = {
     val dirs = readEntry(v).dirs
-    val stats = dirColStats(rc, dirs)
+    val schema = schemaOf(v)
+    val stats = dirColStats(rc, dirs, schema)
     // updates feed both the key probe and the rewrite union — one pass
     val up = updates.persist()
     try {
@@ -353,11 +384,15 @@ class TxLogTable(spark: SparkSession, path: String) {
       val (rewrite, carried) = dirs.partition(hit.contains)
       val tagged =
         if (rewrite.isEmpty) up.withColumn("__src", lit(1))
-        else spark.read.parquet(rewrite.map(d => root.resolve(d).toString): _*)
+        else readDirs(rewrite, Some(schema))
           .withColumn("__src", lit(0))
           .unionByName(up.withColumn("__src", lit(1)))
-      val dir = writeDataDir(dedupKeys(tagged, keys, orderCol))
-      commit("merge", carried :+ dir, Some(v))
+      val merged = dedupKeys(tagged, keys, orderCol)
+      val dir = writeDataDir(merged)
+      // the snapshot reads as its FIRST directory's footer would: a carried
+      // one keeps the base schema, else the rewrite's
+      commit("merge", carried :+ dir, Some(v),
+        if (carried.nonEmpty) schema else nullable(merged.schema))
     } finally up.unpersist()
   }
 
@@ -384,12 +419,13 @@ class TxLogTable(spark: SparkSession, path: String) {
     val base = Some(version.getOrElse(
       throw new IllegalStateException(s"no committed version at $path")))
     val dirs = readEntry(base.get).dirs
+    val schema = schemaOf(base.get)
     // per-directory [min, max] from the sidecar cache ([[dirColStats]]):
     // one column-pruned job over the UNCACHED dirs only, never one job per
     // dir, and repeat expiries are pure sidecar reads. min/max ignore
     // nulls, so a dir also reports whether null-ts rows exist: those
     // survive expiry and block the pure-drop shortcut.
-    val statsByDir = dirColStats(tsCol, dirs)
+    val statsByDir = dirColStats(tsCol, dirs, schema)
     val classified = dirs.map { d =>
       val cls = statsByDir(d) match {
         case DirColStats(_, _, None, _) => "keep" // empty or all-null ts
@@ -407,12 +443,11 @@ class TxLogTable(spark: SparkSession, path: String) {
     val rewritten =
       if (straddling.isEmpty) Nil
       else {
-        val filtered = spark.read
-          .parquet(straddling.map(d => root.resolve(d).toString): _*)
+        val filtered = readDirs(straddling, Some(schema))
           .filter(col(tsCol).isNull || col(tsCol) >= cutoff)
         Seq(writeDataDir(filtered))
       }
-    commit("expire", kept ++ rewritten, base)
+    commit("expire", kept ++ rewritten, base, schema)
   }
 
   /** Per-directory statistics of a long-castable column, resolved from
@@ -425,7 +460,8 @@ class TxLogTable(spark: SparkSession, path: String) {
     * (temp + link) and deterministic per dir, so racing writers are
     * harmless; a lost sidecar only means one re-computation.
     */
-  private[graft] def dirColStats(colName: String, dirs: Seq[String]): Map[String, DirColStats] = {
+  private[graft] def dirColStats(colName: String, dirs: Seq[String],
+                                 schema: StructType): Map[String, DirColStats] = {
     require(colName.matches("[A-Za-z0-9_][A-Za-z0-9_.\\-]*"),
       s"stats sidecars need a plain column name, got '$colName'")
     val cached = dirs.flatMap { d =>
@@ -437,7 +473,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     val missing = dirs.filterNot(cached.contains)
     if (missing.isEmpty) return cached
     val scanned: Map[String, DirColStats] =
-      spark.read.parquet(missing.map(d => root.resolve(d).toString): _*)
+      readDirs(missing, Some(schema))
         .groupBy(element_at(split(input_file_name(), "/"), -2).as("__dir"))
         .agg(count(lit(1)).as("n"), count(col(colName)).as("nn"),
           min(col(colName)).cast("long").as("mn"),
@@ -481,7 +517,8 @@ class TxLogTable(spark: SparkSession, path: String) {
     val v = version.getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
     val dirs = readEntry(v).dirs
-    val stats = dirColStats(rangeCol, dirs)
+    val schema = schemaOf(v)
+    val stats = dirColStats(rangeCol, dirs, schema)
     val ks = keys.distinct
     val hit = dirs.filter { d =>
       stats(d) match {
@@ -491,7 +528,7 @@ class TxLogTable(spark: SparkSession, path: String) {
       }
     }
     if (hit.isEmpty) readVersion(v).filter(lit(false))
-    else spark.read.parquet(hit.map(d => root.resolve(d).toString): _*)
+    else readDirs(hit, Some(schema))
   }
 
   /** [min, max] of a long-castable column over the CURRENT snapshot — from
@@ -499,7 +536,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     * None when the table is empty or the column is all-null.
     */
   def colRange(colName: String): Option[(Long, Long)] = version.flatMap { v =>
-    val st = dirColStats(colName, readEntry(v).dirs).values
+    val st = dirColStats(colName, readEntry(v).dirs, schemaOf(v)).values
     val mns = st.flatMap(_.min)
     if (mns.isEmpty) None else Some((mns.min, st.flatMap(_.max).max))
   }
@@ -527,9 +564,9 @@ class TxLogTable(spark: SparkSession, path: String) {
     val dirs = base.map(readEntry(_).dirs).getOrElse(Nil)
     val (small, big) = dirs.partition(d => dirSize(root.resolve(d)) <= maxBytes)
     if (small.size < 2) return base.get // nothing to fold
-    val folded = spark.read.parquet(small.map(d => root.resolve(d).toString): _*)
-    val dir = writeDataDir(folded)
-    commit("compact", big :+ dir, base)
+    val schema = schemaOf(base.get)
+    val dir = writeDataDir(readDirs(small, Some(schema)))
+    commit("compact", big :+ dir, base, schema)
   }
 
   /** Change feed between two committed versions: row-level diff of the two
@@ -565,7 +602,7 @@ class TxLogTable(spark: SparkSession, path: String) {
       .sortWithinPartitions("__z")
       .drop("__z")
     val dir = writeDataDir(clustered)
-    commit("optimize", Seq(dir), base)
+    commit("optimize", Seq(dir), base, nullable(clustered.schema))
   }
 
   /** Cheap change feed for an APPEND-ONLY version range: the rows added
@@ -586,7 +623,7 @@ class TxLogTable(spark: SparkSession, path: String) {
           "use changes() (snapshot diff) for ranges containing rewrites")
     val added = readEntry(toV).dirs.filterNot(readEntry(fromV).dirs.toSet)
     if (added.isEmpty) readVersion(toV).limit(0)
-    else spark.read.parquet(added.map(d => root.resolve(d).toString): _*)
+    else readDirs(added, Some(schemaOf(toV)))
   }
 
   /** Delete data directories no longer referenced by the LATEST version.
@@ -661,7 +698,8 @@ class TxLogTable(spark: SparkSession, path: String) {
     val manifest =
       s"""{"version":$ver,"op":"${e.op}",""" +
         s""""dirs":[${e.dirs.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""files":[${files.map { case (p, sz) => s"""["$p",$sz]""" }.mkString(",")}]$clusterPart}"""
+        s""""files":[${files.map { case (p, sz) => s"""["$p",$sz]""" }.mkString(",")}]$clusterPart""" +
+        schemaPart(e.schema) + "}"
     Files.write(dest.resolve("manifest.json"), manifest.getBytes("UTF-8"))
     ver
   }
@@ -702,10 +740,11 @@ class TxLogTable(spark: SparkSession, path: String) {
     Files.createDirectories(logDir)
     // restore the clustered marker BEFORE the commit lands: a reader that
     // sees the restored version must already see the append refusal
-    """"cluster":"([^"]+)"""".r.findFirstMatchIn(
-      new String(Files.readAllBytes(src.resolve("manifest.json")), "UTF-8"))
+    val manifest = new String(Files.readAllBytes(src.resolve("manifest.json")), "UTF-8")
+    """"cluster":"([^"]+)"""".r.findFirstMatchIn(manifest)
       .foreach(m => markClustered(m.group(1)))
-    writeCommitFile(logDir, ver, renderEntry(LogEntry(ver, "restore", dirs, None)))
+    writeCommitFile(logDir, ver,
+      renderEntry(LogEntry(ver, "restore", dirs, None, parseSchema(manifest))))
     ver
   }
 
@@ -792,10 +831,10 @@ class TxLogTable(spark: SparkSession, path: String) {
     * commit's data (optimistic concurrency, the Delta protocol's rule).
     */
   private def commit(op: String, dirs: Seq[String], base: Option[Long],
-                     txn: Option[(String, Long)] = None): Long = {
+                     schema: StructType, txn: Option[(String, Long)] = None): Long = {
     Files.createDirectories(logDir)
     val next = base.map(_ + 1).getOrElse(0L)
-    writeCommitFile(logDir, next, renderEntry(LogEntry(next, op, dirs, txn)))
+    writeCommitFile(logDir, next, renderEntry(LogEntry(next, op, dirs, txn, Some(schema))))
     // The commit is durable once the link above lands. The checkpoint is an
     // optimization; if IT fails (disk full, permissions) the commit must
     // still report success — a caller retrying an "apparent failure" here
@@ -899,8 +938,39 @@ object TxLogTable {
     throw new IllegalStateException("unreachable")
   }
 
+  /** `schema` is None only in entries committed before entries recorded
+    * one; reads of those fall back to footer inference.
+    */
   private[graft] case class LogEntry(version: Long, op: String, dirs: Seq[String],
-                                     txn: Option[(String, Long)] = None)
+                                     txn: Option[(String, Long)] = None,
+                                     schema: Option[StructType] = None)
+
+  /** A schema as the parquet reader infers it for this engine's own files:
+    * the writer's schema (Spark stores it in the footer) with every field,
+    * element and map value nullable.
+    */
+  private def nullable(schema: StructType): StructType =
+    nullableType(schema).asInstanceOf[StructType]
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  // the schema's JSON holds quotes and brackets, which the hand-rolled
+  // entry regexes must never see: it rides base64-encoded
+  private def schemaPart(schema: Option[StructType]): String =
+    schema.map(s => s""","schema":"${java.util.Base64.getEncoder
+      .encodeToString(s.json.getBytes("UTF-8"))}"""").getOrElse("")
+
+  private def parseSchema(s: String): Option[StructType] =
+    """"schema":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(s).map(m =>
+      DataType.fromJson(new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
+        .asInstanceOf[StructType])
 
   /** Parse a snapshot's manifest and verify every listed file is present
     * with its recorded byte size — the refusal gate shared by
@@ -955,7 +1025,8 @@ object TxLogTable {
       require(!a.exists(c => c == '"' || c == '[' || c == ']'), s"txn appId must not contain quotes/brackets: $a")
       s""","txn":["$a",$s]"""
     }.getOrElse("")
-    s"""{"version":${e.version},"op":"${e.op}","dirs":[${e.dirs.map(d => s""""$d"""").mkString(",")}]$txnPart}"""
+    s"""{"version":${e.version},"op":"${e.op}","dirs":[${e.dirs.map(d => s""""$d"""").mkString(",")}]$txnPart""" +
+      schemaPart(e.schema) + "}"
   }
 
   // same no-escaping rationale as renderEntry: app ids are documented to
@@ -978,7 +1049,7 @@ object TxLogTable {
     val dirs = """"([^"]+)"""".r.findAllMatchIn(dirsRaw).map(_.group(1)).toSeq
     val txn = """"txn":\["([^"]*)",(\d+)\]""".r.findFirstMatchIn(s)
       .map(m => (m.group(1), m.group(2).toLong))
-    LogEntry(version, op, dirs, txn)
+    LogEntry(version, op, dirs, txn, parseSchema(s))
   }
 
   // java.nio directory streams hold an fd until closed; these helpers close

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** R14 — auto-create of unseen transducers (influx_service.py:215-274): when
@@ -53,16 +53,19 @@ object AutoCreate {
       .trigger(trigger)
       .start()
 
+  /** The catalog's fixed layout: every read passes it, so no footer
+    * inference job runs per micro-batch.
+    */
+  val CatalogSchema: StructType = StructType(Seq(
+    StructField("device_id", StringType), StructField("transducer", StringType)))
+
   def existingCatalog(spark: SparkSession, catalogPath: String): DataFrame =
-    try spark.read.parquet(catalogPath)
+    try spark.read.schema(CatalogSchema).parquet(catalogPath)
     catch {
       // ONLY path-not-yet-created falls back to empty; a transient IO error
       // must propagate — an empty catalog would re-fire create() for every
       // known key and append duplicates
       case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("device_id", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("transducer", org.apache.spark.sql.types.StringType))))
+        spark.createDataFrame(java.util.List.of[Row](), CatalogSchema)
     }
 }

@@ -38,6 +38,18 @@ object MqttBus {
   def size: Long = synchronized(messages.size.toLong)
   def slice(from: Long, until: Long): Seq[(String, Array[Byte], Long)] =
     synchronized(messages.slice(from.toInt, until.toInt).toSeq)
+
+  /** One past the last message in [from, until) whose topic matches
+    * `regex`, if any — a scan of the range, no copy.
+    */
+  private[streaming] def lastMatchEnd(from: Long, until: Long,
+                                      regex: java.util.regex.Pattern): Option[Long] =
+    synchronized {
+      var i = math.min(until, messages.size.toLong) - 1
+      while (i >= from && !regex.matcher(messages(i.toInt)._1).matches()) i -= 1
+      if (i >= from) Some(i + 1) else None
+    }
+
   def clear(): Unit = synchronized(messages.clear())
 
   /** MQTT topic filter -> regex: `+` matches one level, `#` the rest. */
@@ -89,10 +101,34 @@ case class MqttOffset(index: Long) extends Offset {
   * bounds each batch to a fixed offset budget (counted on the raw log,
   * pre-wildcard-filter, since offsets index the log) so recovery drains as
   * several normal-sized batches instead.
+  *
+  * A stream scoped to a narrower pattern than `#` wakes only on its own
+  * topics: its latest offset is the position just past the last MATCHING
+  * message, so other topics' traffic leaves it unchanged and Spark runs
+  * no micro-batch. Offsets stay raw log indexes (a batch still spans the
+  * other topics' messages in between, filtered out at planning).
   */
 class MqttMicroBatchStream(topics: String, maxPerTrigger: Option[Long] = None)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-  private val regex = MqttBus.patternToRegex(topics)
+  private val pattern = java.util.regex.Pattern.compile(MqttBus.patternToRegex(topics))
+
+  // incremental cursor: the log prefix [0, scanned) has been searched, and
+  // matchEnd is one past its last matching message — each trigger scans
+  // only the messages that arrived since the last one
+  private var scanned = 0L
+  private var matchEnd = 0L
+
+  /** Where the data this stream reads currently ends, never below `from`
+    * (the log before `from` is already consumed). For `#` the backward
+    * scan stops at the newest message, so the cursor costs O(1) there.
+    */
+  private def availableEnd(from: Long): Long = {
+    val size = MqttBus.size
+    if (scanned < from) { scanned = from; matchEnd = math.max(matchEnd, from) }
+    MqttBus.lastMatchEnd(scanned, size, pattern).foreach(e => matchEnd = e)
+    scanned = math.max(scanned, size)
+    math.max(from, matchEnd)
+  }
 
   // Trigger.AvailableNow: without SupportsTriggerAvailableNow, Spark wraps
   // the source and fetches latestOffset ONCE with allAvailable — silently
@@ -101,23 +137,26 @@ class MqttMicroBatchStream(topics: String, maxPerTrigger: Option[Long] = None)
   // lets the rate limit apply across the catch-up batches.
   @volatile private var availableNowEnd: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(MqttBus.size)
+    availableNowEnd = Some(availableEnd(0L))
 
   override def getDefaultReadLimit: ReadLimit =
     maxPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[MqttOffset].index
-    val avail = availableNowEnd.getOrElse(MqttBus.size)
+    val avail = math.max(s, availableNowEnd.getOrElse(availableEnd(s)))
+    // nothing past start: no offset at all, so not even a fresh query's
+    // first trigger runs an empty micro-batch
+    if (avail == s) return null
     limit match {
       // saturating form: `s + maxRows` could overflow Long for an
       // "effectively unlimited" cap and regress the end offset below start
-      case r: ReadMaxRows => MqttOffset(s + math.min(r.maxRows(), math.max(0L, avail - s)))
+      case r: ReadMaxRows => MqttOffset(s + math.min(r.maxRows(), avail - s))
       case _ => MqttOffset(avail)
     }
   }
 
-  override def latestOffset(): Offset = MqttOffset(MqttBus.size)
+  override def latestOffset(): Offset = MqttOffset(availableEnd(0L))
   override def initialOffset(): Offset = MqttOffset(0L)
   override def deserializeOffset(json: String): Offset = MqttOffset(json.toLong)
   override def commit(end: Offset): Unit = ()
@@ -130,8 +169,8 @@ class MqttMicroBatchStream(topics: String, maxPerTrigger: Option[Long] = None)
     val chunk = 4096L
     Iterator.range(s, e, chunk).map { lo =>
       MqttInputPartition(MqttBus.slice(lo, math.min(lo + chunk, e))
-        .filter(_._1.matches(regex)).toArray): InputPartition
-    }.toArray
+        .filter(m => pattern.matcher(m._1).matches()).toArray)
+    }.filter(_.rows.nonEmpty).toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -133,26 +133,19 @@ object StreamingIngest {
         // must not do)
         val batch = perBatch(batch0)
         if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.storage.TxLogTable.retryOnConflict() {
-            val clustered = batch
-              .repartitionByRange(nFilesPerBatch, col("device_id"), col("ts"))
-              .sortWithinPartitions("device_id", "ts")
-            table.append(clustered, txn = Some((appId, batchId)))
-            // the batch's own commit — found by fence even on replay
-            val v = table.versionOfTxn(appId, batchId).getOrElse(
-              throw new IllegalStateException(s"append of batch $batchId left no txn commit"))
-            val newDirs =
-              if (v == 0L) table.dirPaths(v)
-              else table.dirPaths(v).diff(table.dirPaths(v - 1))
-            if (newDirs.nonEmpty) {
-              val stats = graft.storage.StatsIndex.build(
-                spark.read.parquet(newDirs: _*), Seq("device_id"))
-              statsTable.append(stats, txn = Some((appId, batchId)))
-            }
-            ()
-          }
+          // no conflict retry: an append rebases a lost commit race itself
+          val clustered = batch
+            .repartitionByRange(nFilesPerBatch, col("device_id"), col("ts"))
+            .sortWithinPartitions("device_id", "ts")
+          table.append(clustered, txn = Some((appId, batchId)))
+          // the batch's own commit — found by fence even on replay
+          val v = table.versionOfTxn(appId, batchId).getOrElse(
+            throw new IllegalStateException(s"append of batch $batchId left no txn commit"))
+          val added = if (v == 0L) table.readVersion(v) else table.appendsBetween(v - 1, v)
+          statsTable.append(graft.storage.StatsIndex.build(added, Seq("device_id")),
+            txn = Some((appId, batchId)))
         }
+        ()
       }
       .start()
 

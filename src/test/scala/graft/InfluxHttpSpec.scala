@@ -380,6 +380,28 @@ class InfluxHttpSpec extends SparkSuite {
     assert(cat.run("SHOW QUERIES").collect().isEmpty)
   }
 
+  test("concurrent /write requests to one database all land exactly once") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    cat.run("CREATE DATABASE race")
+    val n = 16
+    val lines = 25
+    // every request races the others on the same points table AND on the
+    // first-seen registration of the same field
+    val fs = (0 until n).map { j =>
+      Future(post("/write?db=race&precision=u", (0 until lines).map { l =>
+        s"rw,device=d${l % 4} value=$j.$l ${1000000L + j * lines + l}"
+      }.mkString("\n")))
+    }
+    val rs = Await.result(Future.sequence(fs), 120.seconds)
+    assert(rs.forall(_.statusCode() == 204), rs.map(r => s"${r.statusCode()} ${r.body()}"))
+    val ts = cat.points("race").select("ts_us").as[Long].collect()
+    assert(ts.length == n * lines, s"${ts.length} points for ${n * lines} lines")
+    assert(ts.toSet == (0 until n * lines).map(1000000L + _).toSet)
+    assert(cat.fieldTypes("race") == Map(("rw", "value") -> "float"))
+  }
+
   test("review regressions: GROUP BY * tags, typo'd GET, corrupt gzip") {
     // GROUP BY * must answer the SAME tagged-series shape as naming the
     // tags — the starred form expands at plan time

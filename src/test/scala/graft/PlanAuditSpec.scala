@@ -322,6 +322,35 @@ class PlanAuditSpec extends SparkSuite {
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 1, p)
   }
 
+  test("points semi-join: the registry broadcasts from a LocalTableScan, no exchange or aggregate under it") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("plan_registry").toString + "/registry"
+    new graft.storage.TxLogTable(spark, path).merge(Seq(
+      graft.streaming.RegistryCdc.RegistrySnapshot("d1", Seq("temp"), active = true, asOfUs = 1L),
+      graft.streaming.RegistryCdc.RegistrySnapshot("d2", Seq("temp"), active = false, asOfUs = 1L))
+      .toDF(), keys = Seq("deviceId"), orderCol = Some("asOfUs"))
+    val registry = graft.streaming.RegistryMaintenance.activeDevices(spark, path)
+    // the fact side is a real scan (a local one would fold differently)
+    val msgDir = java.nio.file.Files.createTempDirectory("plan_msgs").toString + "/m"
+    Seq(("d1", 1.0), ("d2", 2.0), ("d3", 3.0), ("d1", 4.0)).toDF("device_id", "v")
+      .write.parquet(msgDir)
+    val kept = graft.ingest.Ingest.registryFilter(spark.read.parquet(msgDir), registry)
+    assert(kept.select("v").as[Double].collect().sorted.toSeq == Seq(1.0, 4.0))
+    object H extends AdaptiveSparkPlanHelper
+    val executed = kept.queryExecution.executedPlan
+    val bx = H.collect(executed) { case b: BroadcastExchangeExec => b }
+    assert(bx.size == 1, s"expected one broadcast in:\n$executed")
+    val under: Seq[SparkPlan] = H.collect(bx.head.child) { case p => p }
+    assert(under.exists(_.isInstanceOf[LocalTableScanExec]),
+      s"registry side is not a LocalTableScan:\n${bx.head}")
+    assert(!under.exists(p => p.isInstanceOf[ShuffleExchangeExec] || p.isInstanceOf[HashAggregateExec]),
+      s"an exchange or aggregate runs under the registry broadcast:\n${bx.head}")
+  }
+
   test("q_influxql_kama: recursion scan joins back without a cartesian") {
     // the kamaScan pattern: sc per bucket via windows, one repartition on
     // the series key for the sequential scan, equi-join back on

@@ -14,6 +14,9 @@ import graft.streaming.{InProcessTransport, MqttBus}
 class ServiceMainSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Spark jobs one data-only micro-batch of the points query may run. */
+  val DataJobsPerBatch = 9.0
+
   test("composed service: CDC registers, data ingests ACID + queryable, junk dead-letters, restart resumes") {
     MqttBus.clear()
     val dir = Files.createTempDirectory("svc_e2e").toString
@@ -117,6 +120,60 @@ class ServiceMainSpec extends SparkSuite {
     // append per non-empty data batch (phases 2, 2b, 2c) — versions 0..2
     assert(cat.pointsTable("oc").version.contains(2L),
       s"expected exactly three commits, got version ${cat.pointsTable("oc").version}")
+  }
+
+  test("composed service: data-only micro-batches stay within the job budget; the control query never wakes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_jobs").toString
+    val conf = Map("service_id" -> "svcjobs", "data_dir" -> dir,
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+    // registry bootstrap: one drained run over a control event
+    MqttBus.publish(ServiceMain.eventsTopic("svcjobs"),
+      """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
+    val boot = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      trigger = Trigger.AvailableNow())
+    try boot.queries.foreach(q => assert(q.awaitTermination(120000)))
+    finally ServiceMain.stop(boot)
+
+    // Spark jobs by job group: a streaming query runs each micro-batch
+    // under its runId's group, so this attributes every job to its query
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Int, b: Int) => a + b))
+    }
+    spark.sparkContext.addSparkListener(l)
+    val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      val control = h.queries(0)
+      val data = h.queries(1)
+      (1 to 4).foreach { i =>
+        MqttBus.publish("openchirp/device/d1/temp", s"$i.5")
+        MqttBus.publish("openchirp/device/d9/temp", s"$i.0") // unregistered
+        data.processAllAvailable()
+      }
+      h.queries.foreach(_.processAllAvailable())
+      Thread.sleep(1000) // the listener bus is asynchronous
+      val dataBatches = data.recentProgress.count(_.numInputRows > 0)
+      val perBatch = jobs.getOrDefault(data.runId.toString, 0).toDouble / dataBatches
+      assert(dataBatches >= 2, s"expected several data micro-batches, got $dataBatches")
+      info(f"points query: $perBatch%.2f jobs per micro-batch over $dataBatches batches")
+      // the points query's own work: the batch's emptiness probe, the
+      // range-partitioned append (sampling + write), the stats index
+      // (aggregate + write) — no footer inference, no registry scan
+      assert(perBatch <= DataJobsPerBatch,
+        f"points query ran $perBatch%.1f jobs per micro-batch (budget $DataJobsPerBatch)")
+      assert(control.recentProgress.forall(p => !p.durationMs.containsKey("addBatch")),
+        "the control query ran a micro-batch with no control event published")
+      assert(!jobs.containsKey(control.runId.toString), "the control query ran a Spark job")
+      assert(new graft.influxql.InfluxCatalog(spark, dir, "oc").points("oc").count() == 4L)
+    } finally {
+      ServiceMain.stop(h)
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 
   test("full wire drill: authed TLS MQTT ingest + line protocol through HTTP, one InfluxQL surface answers both") {

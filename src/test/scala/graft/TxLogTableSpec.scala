@@ -363,7 +363,7 @@ class TxLogTableSpec extends SparkSuite {
     // slices are contiguous, non-overlapping key ranges: every dir's
     // [min, max] is disjoint from every other's
     val stats = t.dirColStats("k", t.version.map(vv => t.dirPaths(vv)).get
-      .map(_.split('/').last))
+      .map(_.split('/').last), t.schemaOf(t.version.get))
     val ranges = stats.values.map(s => (s.min.get, s.max.get)).toSeq.sortBy(_._1)
     ranges.sliding(2).foreach {
       case Seq((_, hi1), (lo2, _)) => assert(hi1 < lo2, s"overlapping slices: $ranges")
@@ -599,6 +599,144 @@ class TxLogTableSpec extends SparkSuite {
     assert(TxLogTable.parseEntry(TxLogTable.renderEntry(e)) == e)
     val t = TxLogTable.LogEntry(9L, "append", Seq("d-cc"), Some(("sink-a", 41L)))
     assert(TxLogTable.parseEntry(TxLogTable.renderEntry(t)) == t)
+  }
+
+  test("log entry roundtrip with a recorded schema; the log regexes never see it") {
+    import org.apache.spark.sql.types._
+    // field names that would derail the hand-rolled regexes if the schema
+    // rode the entry as raw JSON
+    val schema = StructType(Seq(
+      StructField("dirs", ArrayType(StringType)),
+      StructField("txn", MapType(StringType, LongType)),
+      StructField("version", StructType(Seq(StructField("op", DoubleType))))))
+    val e = TxLogTable.LogEntry(5L, "append", Seq("d-aa"), Some(("app", 3L)), Some(schema))
+    assert(TxLogTable.parseEntry(TxLogTable.renderEntry(e)) == e)
+  }
+
+  // the schema a version's entry RECORDS (not the inference fallback)
+  private def recorded(path: String, v: Long) = TxLogTable.parseEntry(new String(
+    Files.readAllBytes(java.nio.file.Paths.get(path, "_txlog", s"$v.json")), "UTF-8")).schema
+
+  test("every commit op records the schema the parquet reader infers for its snapshot") {
+    val wide = Seq(
+      (1L, "a", 1.5, true, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+        Seq(1L, 2L), Map("x" -> 1.0), (7, "s")),
+      (2L, "b", 2.5, false, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
+        Seq(3L), Map("y" -> 2.0), (8, "t")),
+      (3L, null, 3.5, true, null, Nil, Map.empty[String, Double], (9, null))
+    ).toDF("k", "s", "d", "b", "ts", "arr", "m", "st")
+    def rowsFrom(lo: Long) = wide.withColumn("k", col("k") + lo)
+    def check(t: TxLogTable, path: String, op: String): Unit = {
+      val v = t.version.get
+      assert(t.opOf(v) == op)
+      val got = recorded(path, v)
+      assert(got.isDefined, s"$op left no schema in its entry")
+      val inferred = spark.read.parquet(t.dirPaths(v): _*).schema
+      assert(got.get == inferred, s"$op recorded ${got.get.simpleString}, reader infers ${inferred.simpleString}")
+      assert(t.read().schema == inferred)
+    }
+    val p = tmp()
+    val t = new TxLogTable(spark, p)
+    t.append(rowsFrom(0)); check(t, p, "append")
+    t.append(rowsFrom(10)); check(t, p, "append")
+    t.merge(rowsFrom(10).withColumn("s", lit("upd")), keys = Seq("k")); check(t, p, "merge")
+    t.append(rowsFrom(20)); t.append(rowsFrom(30))
+    t.delete(col("k") === 21L); check(t, p, "delete")
+    t.append(rowsFrom(40)); t.append(rowsFrom(50))
+    t.expireOlderThan("k", 42L); check(t, p, "expire")
+    t.append(rowsFrom(60))
+    t.compact(); check(t, p, "compact")
+    t.append(rowsFrom(70))
+    t.removeDirs(Set(t.dirPaths(t.version.get).last)); check(t, p, "dropshard")
+    t.removeDirs(t.dirPaths(t.version.get).toSet); check(t, p, "dropshard")
+    t.overwrite(rowsFrom(80)); check(t, p, "overwrite")
+    t.optimizeZOrder(col("k"), col("st._1"), bits = 8, nFiles = 2); check(t, p, "optimize")
+
+    val pc = tmp()
+    val c = new TxLogTable(spark, pc)
+    c.appendClustered(rowsFrom(0).unionByName(rowsFrom(100)), "k", nDirs = 2)
+    check(c, pc, "append")
+    // granular: one slice overlaps the update keys and rewrites, one carries
+    c.merge(rowsFrom(100).withColumn("d", lit(9.5)), keys = Seq("k"), rangeCol = Some("k"))
+    check(c, pc, "merge")
+    assert(c.read().filter(col("k") === 101L).select("d").as[Double].collect().toSeq == Seq(9.5))
+  }
+
+  test("read() and append() launch no schema-inference job on a recorded-schema table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = new TxLogTable(spark, tmp())
+    (0 until 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("k", "v")))
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    def jobs(body: => Unit): Long = {
+      awaitStable(() => n.get())
+      val before = n.get()
+      body
+      awaitStable(() => n.get()) - before
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(jobs(t.read()) == 0L, "building the snapshot frame must not run a job")
+      // an append runs exactly the jobs of writing its frame, nothing more
+      val batch = Seq((9L, "v9")).toDF("k", "v")
+      val bare = jobs(batch.write.parquet(tmp()))
+      assert(jobs(t.append(batch)) == bare, "append ran a job beyond its write")
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(t.read().count() == 4)
+  }
+
+  test("a legacy log entry without a schema still reads, and the next commit records one") {
+    val p = tmp()
+    val t = new TxLogTable(spark, p)
+    t.append(Seq((1L, "a")).toDF("k", "v"))
+    // rewrite version 0 the way a log written before schemas looked
+    val f = java.nio.file.Paths.get(p, "_txlog", "0.json")
+    val e = TxLogTable.parseEntry(new String(Files.readAllBytes(f), "UTF-8"))
+    Files.write(f, TxLogTable.renderEntry(e.copy(schema = None)).getBytes("UTF-8"))
+    assert(recorded(p, 0L).isEmpty)
+    assert(t.read().as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    assert(t.schemaOf(0L) == spark.read.parquet(t.dirPaths(0L): _*).schema)
+    // the drift check still works against the inferred schema
+    intercept[IllegalArgumentException](t.append(Seq((2L, 2.0)).toDF("k", "v")))
+    t.append(Seq((2L, "b")).toDF("k", "v"))
+    assert(recorded(p, 1L).contains(t.schemaOf(0L)))
+    assert(t.read().count() == 2)
+  }
+
+  test("snapshot export/import keeps the recorded schema") {
+    val p = tmp()
+    val t = new TxLogTable(spark, p)
+    t.append(Seq((1L, "a", Seq(1.0))).toDF("k", "v", "xs"))
+    t.append(Seq((2L, "b", Seq(2.0))).toDF("k", "v", "xs"))
+    val snap = Files.createTempDirectory("txlog_snap").resolve("s").toString
+    val v = t.exportSnapshot(snap)
+    val rp = tmp()
+    val r = new TxLogTable(spark, rp)
+    assert(r.importSnapshot(snap) == v)
+    assert(recorded(rp, v).isDefined && recorded(rp, v) == recorded(p, v))
+    assert(r.read().count() == 2)
+  }
+
+  test("a lost commit race re-runs only the commit: concurrent appends all land, no data rewritten") {
+    val p = tmp()
+    new TxLogTable(spark, p).append(Seq((0L, "base")).toDF("k", "v"))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val n = 8
+    val appends = (1 to n).map { i =>
+      Future(new TxLogTable(spark, p).append(Seq((i.toLong, s"v$i")).toDF("k", "v")))
+    }
+    val versions = Await.result(Future.sequence(appends), 120.seconds)
+    // every append succeeded, each at its own version
+    assert(versions.toSet == (1L to n.toLong).toSet, s"versions: $versions")
+    val t = new TxLogTable(spark, p)
+    assert(t.read().as[(Long, String)].collect().map(_._1).sorted.toSeq == (0L to n.toLong))
+    // a retried Spark write would leave an orphan data dir behind
+    val onDisk = new java.io.File(p).listFiles.count(_.getName.startsWith("d-"))
+    assert(onDisk == n + 1, s"$onDisk data dirs on disk for ${n + 1} appends")
   }
 
   test("txn fence: replayed append is a no-op, fence state is queryable") {
