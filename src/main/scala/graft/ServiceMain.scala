@@ -17,14 +17,18 @@ import graft.streaming._
   *   2. MQTT connect + subscribe with auth/TLS from config; the connection
   *      manager re-subscribes on every reconnect (R1, influx_service.py:66-76)
   *   3. registry snapshot bootstrap over REST (`load_devices`, R12)
-  *   4. five streaming queries off the one MQTT log source:
+  *   4. six streaming queries off the one MQTT log source:
   *      - control: service events -> registry CDC MERGE (R11, REST-enriched)
-  *      - data: parse -> infer -> registry semi-join -> ACID indexed append
-  *        (R3-R9; exactly-once via batch-id transaction fence)
+  *      - data: parse -> infer -> registry semi-join -> ACID append, one
+  *        write and one commit per micro-batch (R3-R9; exactly-once via
+  *        batch-id transaction fence)
   *      - dead-letter: unroutable topics quarantined, replayable (R3)
   *      - status: windowed points-written/device counts published to the
   *        status topic (R10/R15, influx_service.py:310-322)
   *      - auto-create: unseen (device, transducer) keys POSTed once (R14)
+  *      - subscriptions: registered points forwarded as line protocol to
+  *        every CREATE SUBSCRIPTION destination (InfluxDB's subscriber
+  *        service)
   *      plus one watermarked downsample stream per continuous query
   *      registered in [[graft.influxql.ContinuousQueries]] (InfluxDB's CQ
   *      service runs registered CQs the same way)
@@ -190,7 +194,6 @@ object ServiceMain {
     val catalog = new graft.influxql.InfluxCatalog(spark, dataDir, db)
     catalog.run(s"CREATE DATABASE $db")
     val pointsTable = catalog.pointsTable(db)
-    val statsTable = new TxLogTable(spark, s"$dataDir/$db/points_stats")
     val registryPath = s"$dataDir/registry"
     val catalogPath = s"$dataDir/transducer_catalog"
     def registryTable = new TxLogTable(spark, registryPath)
@@ -342,17 +345,19 @@ object ServiceMain {
 
     // data plane: parse + infer stream-side (map-only), registry semi-join
     // per BATCH against the current dimension (a stream-static join would
-    // freeze the registry at stream start), fenced ACID append + stats
-    // index — exactly-once under replay
+    // freeze the registry at stream start; the version-keyed cache runs no
+    // job while the registry is unchanged), fenced ACID append —
+    // exactly-once under replay
     val parsed = Ingest.inferTypes(Ingest.parseTopic(
       msgs.filter(Ingest.dataTopicFilter)))
-    val dataQ = reg(StreamingIngest.startIndexedAppendSink(
-      parsed, pointsTable, statsTable, appId = s"service-$serviceId",
+    def liveRegistry(b: DataFrame): DataFrame =
+      Ingest.registryFilter(b, RegistryMaintenance.activeDevices(spark, registryPath))
+    val dataQ = reg(StreamingIngest.startAppendSink(
+      parsed, pointsTable, appId = s"service-$serviceId",
       checkpoint = cp("points"), trigger = trigger,
       // ts_us alongside ts: the InfluxQL planner's time column, so the
       // live service table answers dialect queries with no adapter
-      perBatch = b => Ingest.narrowPoints(Ingest.registryFilter(
-          b, RegistryMaintenance.activeDevices(spark, registryPath)))
+      perBatch = b => Ingest.narrowPoints(liveRegistry(b))
         .withColumn("ts_us", unix_micros(col("ts")))))
 
     // dead-letter: everything that routes nowhere, kept replayable
@@ -360,9 +365,9 @@ object ServiceMain {
       s"$dataDir/dead_letter", cp("dead_letter"), trigger))
 
     // status: the reference's 10-minute points-written/#devices payload
-    // (PUBLISH_STATS_INTERVAL=600); the stats pipeline keys on the
-    // bootstrap registry — status is an operational gauge, not the gate
-    // the per-batch data join is
+    // (PUBLISH_STATS_INTERVAL=600); the stateful status and CQ pipelines
+    // key on the registry as of start — status is an operational gauge,
+    // not the gate the per-batch data join is
     val statusPoints = StreamingIngest.pointsStream(msgs,
       RegistryMaintenance.activeDevices(spark, registryPath))
     val statusQ = reg(StatusPublisher.start(
@@ -370,9 +375,11 @@ object ServiceMain {
         interval = conf.getOrElse("stats_interval", "10 minutes")),
       statusTopic(serviceId), publish, cp("status"), trigger))
 
-    // auto-create: unseen (device, transducer) keys POST once, idempotent
-    val autoQ = reg(AutoCreate.start(statusPoints, catalogPath, cp("autocreate"),
-      rest.map(_.createFn).getOrElse((_, _) => ()), trigger))
+    // auto-create: unseen (device, transducer) keys POST once, idempotent;
+    // gated per batch on the live registry, like the data plane
+    val autoQ = reg(AutoCreate.start(Ingest.narrowPoints(parsed), catalogPath,
+      cp("autocreate"), rest.map(_.createFn).getOrElse((_, _) => ()), trigger,
+      perBatch = liveRegistry))
 
     // registered continuous queries start with the service (InfluxDB runs
     // its CQ service the same way): each downsamples the registry-filtered
@@ -384,17 +391,19 @@ object ServiceMain {
 
     // registered subscriptions fan every ingested point out to their
     // destinations as line protocol (InfluxDB's subscriber service); the
-    // registry re-reads each batch, so CREATE SUBSCRIPTION takes effect
+    // subscription and device registries both re-read each batch, so
+    // CREATE SUBSCRIPTION and a device's register/delete take effect
     // without a restart. Executor-side publishing rides the in-process
     // bus — the same fabric the service's own MQTT loop consumes. The
     // numeric face of the narrow layout is what forwards (line protocol's
     // value field); bool points ride as 1/0, string payloads stay local.
     val subQ = reg(graft.influxql.Subscriptions.start(
-      statusPoints.select(col("device_id").as("device"), col("transducer"),
+      parsed.select(col("device_id"), col("device_id").as("device"), col("transducer"),
         unix_micros(col("ts")).as("ts_us"),
         coalesce(col("num"), col("bool").cast("double")).as("value"))
         .filter(col("value").isNotNull),
       db, dataDir, checkpoint = cp("subscriptions"), trigger = trigger,
+      perBatch = liveRegistry,
       // optional liveness bound: a slow subscriber can then delay a batch
       // by at most cap×publish-latency; the excess counts into
       // Subscriptions.droppedRows instead of stalling ingest

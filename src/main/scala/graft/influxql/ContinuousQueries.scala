@@ -124,7 +124,7 @@ object ContinuousQueries {
     p.expectKw("ON")
     val db = p.ident()
     if (requireDb != null) requireDb(db)
-    val exists = defs(spark, root)
+    def exists: Boolean = defs(spark, root)
       .filter(col("db") === db && col("name") === name).limit(1).count() > 0
     if (!create) {
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
@@ -160,25 +160,27 @@ object ContinuousQueries {
     // every fill mode densifies at emission (linear retroactively,
     // through the keyed MERGE) — nothing left to reject here
     InfluxQL.validateResample(p, rs, q)
-    if (exists) throw new IllegalArgumentException(
-      s"InfluxQL: continuous query already exists: $name on $db")
-    // sole-writer contract, enforced at DDL time (a CQ that could never
-    // hold its fill invariant must fail at CREATE): the raw points table
-    // belongs to the write faces — a CQ merging into it would both break
-    // its own dense-grid frontier under every external write AND flip the
-    // table merge-maintained, refusing the ingest path's appends; and a
-    // SECOND CQ on the same target is just another external writer from
-    // the first one's point of view
-    val target = q.into.get
-    if (target == "points")
-      p.fail("a continuous query cannot target the raw 'points' measurement" +
-        " — the write faces own it and would break the CQ's fill invariant")
-    if (cqTargets(spark, root, db).contains(target))
-      throw new IllegalArgumentException(
-        s"InfluxQL: continuous query target $target on $db already belongs " +
-          "to another continuous query (CQ targets have exactly one writer)")
-    table(spark, root).append(
-      Seq((db, name, text.trim)).toDF("db", "name", "query"))
+    // of concurrent CREATEs of one name or target exactly one lands
+    table(spark, root).appendChecked(
+        Seq((db, name, text.trim)).toDF("db", "name", "query")) {
+      if (exists) throw new IllegalArgumentException(
+        s"InfluxQL: continuous query already exists: $name on $db")
+      // sole-writer contract, enforced at DDL time (a CQ that could never
+      // hold its fill invariant must fail at CREATE): the raw points table
+      // belongs to the write faces — a CQ merging into it would both break
+      // its own dense-grid frontier under every external write AND flip the
+      // table merge-maintained, refusing the ingest path's appends; and a
+      // SECOND CQ on the same target is just another external writer from
+      // the first one's point of view
+      val target = q.into.get
+      if (target == "points")
+        p.fail("a continuous query cannot target the raw 'points' measurement" +
+          " — the write faces own it and would break the CQ's fill invariant")
+      if (cqTargets(spark, root, db).contains(target))
+        throw new IllegalArgumentException(
+          s"InfluxQL: continuous query target $target on $db already belongs " +
+            "to another continuous query (CQ targets have exactly one writer)")
+    }
     show(spark, root)
   }
 

@@ -153,10 +153,12 @@ object InfluxAuth {
       val pw = str(p)
       val admin = p.kw("WITH") && { p.expectKw("ALL"); p.kw("PRIVILEGES"); true }
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      if (userExists(spark, root, u)) throw new IllegalArgumentException(
-        s"InfluxQL: user already exists: $u")
-      uTab.append(Seq((u, hashPassword(u, pw), admin))
-        .toDF("user", "pw_hash", "is_admin"))
+      // of concurrent CREATEs of one user exactly one lands
+      uTab.appendChecked(Seq((u, hashPassword(u, pw), admin))
+          .toDF("user", "pw_hash", "is_admin")) {
+        if (userExists(spark, root, u)) throw new IllegalArgumentException(
+          s"InfluxQL: user already exists: $u")
+      }
       return showUsers(spark, root)
     }
     if (p.kw("DROP")) {

@@ -583,11 +583,11 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     // partial-write 400, never a silent flip): registration commits FIRST
     // — a crash between the two leaves a registered type with no data,
     // which only ever REJECTS more, never corrupts. A registration is a
-    // compare-and-set on the registry version it was derived from: it
-    // carries the txn fence (FieldTypesTxn, that version + 1), so of two
-    // writers deriving from one version the second's append is fenced off
-    // and it re-derives against the winner's types (first-seen wins JVM-
-    // and process-wide, the registry is ACID like the data)
+    // compare-and-set on the registry version it was derived from
+    // (appendIfAt), so of two writers deriving from one version the
+    // second's commit is refused and it re-derives against the winner's
+    // types (first-seen wins JVM- and process-wide, the registry is ACID
+    // like the data)
     @scala.annotation.tailrec
     def register(): Map[(String, String), String] = {
       val at = fieldTypesTable.version
@@ -596,10 +596,9 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
       if (fresh.isEmpty) known
       else {
         import spark.implicits._
-        fieldTypesTable.append(fresh.toSeq
+        fieldTypesTable.appendIfAt(fresh.toSeq
           .map { case ((m, f), t) => (db, m, f, t) }
-          .toDF("db", "measurement", "field", "ftype"),
-          txn = Some((InfluxCatalog.FieldTypesTxn, at.fold(0L)(_ + 1))))
+          .toDF("db", "measurement", "field", "ftype"), at)
         register()
       }
     }
@@ -992,12 +991,6 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
 }
 
 object InfluxCatalog {
-  /** The txn app id every field-type registration commits under: its
-    * sequence is the registry version the registration was derived from,
-    * plus one, which makes the append a compare-and-set on that version.
-    */
-  private[influxql] val FieldTypesTxn = "field-types"
-
   /** Statement-family routing is by PREFIX, never `contains`: a SELECT
     * whose measurement, tag, or string literal merely mentions
     * "subscription" (a perfectly plausible business word) must reach the

@@ -94,7 +94,7 @@ object Subscriptions {
     p.expectSym(".")
     val rp = p.ident()
     requireRp(db, rp)
-    val exists = defs(spark, root).filter(
+    def exists: Boolean = defs(spark, root).filter(
       col("db") === db && col("retention_policy") === rp &&
         col("name") === name).limit(1).count() > 0
     if (!create) {
@@ -120,10 +120,12 @@ object Subscriptions {
     dests += dest()
     while (p.sym(",")) dests += dest()
     if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-    if (exists) throw new IllegalArgumentException(
-      s"InfluxQL: subscription already exists: $name on $db.$rp")
-    table(spark, root).append(Seq((db, rp, name, mode, dests.result().mkString(DestSep)))
-      .toDF("db", "retention_policy", "name", "mode", "destinations"))
+    // of concurrent CREATEs of one name exactly one lands
+    table(spark, root).appendChecked(Seq((db, rp, name, mode, dests.result().mkString(DestSep)))
+        .toDF("db", "retention_policy", "name", "mode", "destinations")) {
+      if (exists) throw new IllegalArgumentException(
+        s"InfluxQL: subscription already exists: $name on $db.$rp")
+    }
     show(spark, root)
   }
 
@@ -192,24 +194,30 @@ object Subscriptions {
     * each batch forwards at most that many rows (deterministic limit) and
     * counts the excess into [[droppedRows]] — InfluxDB's own
     * write-buffer-overflow drop, made explicit and observable.
+    *
+    * `perBatch` re-resolves batch-time state before the fan-out, e.g. the
+    * CURRENT device registry's semi-join (a device deleted after start
+    * stops forwarding at its next batch).
     */
   def start(points: DataFrame, db: String, root: String,
             publishFactory: () => (String, String) => Unit =
               () => (dest, payload) => graft.streaming.MqttBus.publish(dest, payload),
             checkpoint: String,
             trigger: Trigger = Trigger.AvailableNow(),
+            perBatch: DataFrame => DataFrame = identity,
             maxRowsPerBatch: Option[Int] = None): StreamingQuery = {
     val spark = points.sparkSession
     points.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch0: DataFrame, _: Long) =>
         // control-plane read: one row per subscription for this db
         val subs = defs(spark, root).filter(col("db") === db)
           .select("mode", "destinations").collect()
           .map(r => (r.getString(0), r.getString(1).split(DestSep).toSeq))
           .toSeq
         if (subs.nonEmpty) {
+          val batch = perBatch(batch0)
           val factory = publishFactory
           val capped = maxRowsPerBatch match {
             case Some(cap) =>

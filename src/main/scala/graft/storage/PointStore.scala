@@ -127,22 +127,4 @@ object PointStore {
     }
     dropped.map(_.getFileName.toString)
   }
-
-  /** The same device probe over a CONTINUOUSLY-ingested ACID point table
-    * whose stats index is maintained in lockstep by
-    * [[graft.streaming.StreamingIngest.startIndexedAppendSink]]: prune the
-    * file list by per-file device range before any footer is opened, then
-    * apply the precise predicate. Valid while maintenance is append-only —
-    * a compaction/rewrite retires files the index lists and must rebuild
-    * it (the [[StatsIndex]] staleness rule).
-    */
-  def readDeviceIndexed(spark: SparkSession, table: TxLogTable, statsTable: TxLogTable,
-                        device: String, from: String, to: String): DataFrame = {
-    val files = StatsIndex.candidateFiles(
-      statsTable.read(), "device_id", lit(device), lit(device))
-    if (files.isEmpty) table.read().where(lit(false))
-    else spark.read.parquet(files: _*)
-      .filter(col("device_id") === device)
-      .filter(col("ts") >= lit(from).cast("timestamp") && col("ts") < lit(to).cast("timestamp"))
-  }
 }

@@ -119,56 +119,112 @@ class TxLogTable(spark: SparkSession, path: String) {
     * the same commit file as the data it fences.
     */
   def append(df: DataFrame, txn: Option[(String, Long)] = None): Long = {
-    // a range-clustered merge-maintained table REFUSES plain appends: the
-    // granular merge's correctness rests on the committed snapshot being
-    // key-unique, and an append between granular merges can smear a
-    // duplicate key across two carried directories where it survives
-    // every later merge silently. The evolution paths for such tables are
-    // overwrite()/appendClustered()/merge() — all of which keep (or reset)
-    // the invariant.
+    refuseIfClustered()
+    appendCommit(df.schema, txn)(Seq(writeDataDir(df)))._1.get
+  }
+
+  /** [[append]] of a frame that may hold no rows (a micro-batch a filter
+    * may empty) without an `isEmpty`/`count` job re-executing its plan:
+    * the row count is read from the written files' parquet footers on the
+    * driver, and a zero-row write is deleted uncommitted. Returns the
+    * version this call committed; None when fenced or empty.
+    */
+  def appendIfRows(df: DataFrame, txn: Option[(String, Long)] = None): Option[Long] = {
+    refuseIfClustered()
+    val conf = spark.sessionState.newHadoopConf()
+    def rows(dir: Path): Long = listDir(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    val (v, dirs) = appendCommit(df.schema, txn) {
+      val d = writeDataDir(df)
+      if (rows(root.resolve(d)) > 0) Seq(d) else { deleteRecursively(root.resolve(d)); Nil }
+    }
+    if (dirs.isEmpty) None else v
+  }
+
+  /** Compare-and-set append: commits `df` only as the version right after
+    * `at` (None: the first commit) and says whether it did. A check-then-
+    * append registry checks at version `at`, calls this, and re-checks on
+    * false — so of concurrent CREATEs of one name exactly one lands, even
+    * across a fence-less commit (a DROP's delete), which a txn fence would
+    * miss.
+    */
+  def appendIfAt(df: DataFrame, at: Option[Long]): Boolean = {
+    refuseIfClustered()
+    if (version != at) return false
+    val cur = at.map(schemaOf)
+    requireSameSchema(cur, df.schema)
+    val dir = writeDataDir(df)
+    try { commit("append", at.map(readEntry(_).dirs).getOrElse(Nil) :+ dir, at,
+      cur.getOrElse(nullable(df.schema))); true }
+    catch { case _: CommitConflict => deleteRecursively(root.resolve(dir)); false }
+  }
+
+  /** Check-then-append as one compare-and-set: `check` throws to refuse;
+    * `df` commits only on the version `check` ran against, re-checked from
+    * a fresh version until it lands or `check` refuses.
+    */
+  def appendChecked(df: DataFrame)(check: => Unit): Unit =
+    while ({ val at = version; check; !appendIfAt(df, at) }) ()
+
+  // a range-clustered merge-maintained table REFUSES plain appends: the
+  // granular merge's correctness rests on the committed snapshot being
+  // key-unique, and an append between granular merges can smear a
+  // duplicate key across two carried directories where it survives
+  // every later merge silently. The evolution paths for such tables are
+  // overwrite()/appendClustered()/merge() — all of which keep (or reset)
+  // the invariant.
+  private def refuseIfClustered(): Unit =
     clusteredOn.foreach { rc =>
       throw new IllegalStateException(
         s"$path is range-clustered on '$rc' and merge-maintained: plain " +
           "append() would break the key-uniqueness invariant granular " +
           "merges depend on; use merge(), appendClustered() or overwrite()")
     }
-    appendCommit(df.schema, txn)(Seq(writeDataDir(df)))._1
-  }
 
-  /** The commit half [[append]] and [[appendClustered]] share. Against
-    * the current base it checks the txn fence and the schema, runs `write`
-    * (the Spark write of the new data dirs) once, and commits. Appended
-    * dirs are valid on top of ANY base, so a lost commit race re-resolves
-    * only the new base — fence and schema re-checked against it — and
-    * commits again; it never redoes the write. A retry that finds the
-    * fence taken or the schema evolved leaves the written dirs
-    * unreferenced, for [[vacuum]]. Returns the version and the dirs this
-    * call committed (none when the fence skipped it).
+  // schema drift fails LOUDLY at write time: a snapshot reads with ONE
+  // schema, so an append with different columns/types would silently
+  // drop or null columns on every later read instead of erroring here
+  private def requireSameSchema(cur: Option[StructType], schema: StructType): Unit =
+    cur.foreach { c =>
+      val curFields = c.fields.map(f => (f.name, f.dataType)).toSet
+      val newFields = nullable(schema).fields.map(f => (f.name, f.dataType)).toSet
+      if (curFields != newFields)
+        throw new IllegalArgumentException(
+          s"append schema ${schema.simpleString} does not match table " +
+            s"$path schema ${c.simpleString}; rewrite via overwrite() to evolve")
+    }
+
+  /** The commit half [[append]], [[appendIfRows]] and [[appendClustered]]
+    * share. Against the current base it checks the txn fence and the
+    * schema, runs `write` (the Spark write of the new data dirs) once, and
+    * commits them (nothing when `write` returned none). Appended dirs are
+    * valid on top of ANY base, so a lost commit race re-resolves only the
+    * new base — fence and schema re-checked against it — and commits
+    * again; it never redoes the write. A retry that finds the fence taken
+    * or the schema evolved leaves the written dirs unreferenced, for
+    * [[vacuum]]. Returns the table's version after the call and the dirs
+    * this call committed (none when fenced or empty).
     */
   private def appendCommit(schema: StructType, txn: Option[(String, Long)])(
-      write: => Seq[String]): (Long, Seq[String]) = {
+      write: => Seq[String]): (Option[Long], Seq[String]) = {
     var written: Option[Seq[String]] = None
     while (true) {
       val base = version
       val fenced = txn.exists { case (appId, seq) => txnHighWatermark(appId).exists(_ >= seq) }
       if (fenced)
-        return (base.getOrElse(throw new IllegalStateException(
-          s"txn fence ${txn.get} exists but $path has no version")), Nil)
-      // schema drift fails LOUDLY at write time: a snapshot reads with ONE
-      // schema, so an append with different columns/types would silently
-      // drop or null columns on every later read instead of erroring here
+        return (Some(base.getOrElse(throw new IllegalStateException(
+          s"txn fence ${txn.get} exists but $path has no version"))), Nil)
       val cur = base.map(schemaOf)
-      cur.foreach { c =>
-        val curFields = c.fields.map(f => (f.name, f.dataType)).toSet
-        val newFields = nullable(schema).fields.map(f => (f.name, f.dataType)).toSet
-        if (curFields != newFields)
-          throw new IllegalArgumentException(
-            s"append schema ${schema.simpleString} does not match table " +
-              s"$path schema ${c.simpleString}; rewrite via overwrite() to evolve")
-      }
+      requireSameSchema(cur, schema)
       val dirs = written.getOrElse { val w = write; written = Some(w); w }
-      try return (commit("append", base.map(readEntry(_).dirs).getOrElse(Nil) ++ dirs,
-        base, cur.getOrElse(nullable(schema)), txn), dirs)
+      if (dirs.isEmpty) return (base, Nil)
+      try return (Some(commit("append", base.map(readEntry(_).dirs).getOrElse(Nil) ++ dirs,
+        base, cur.getOrElse(nullable(schema)), txn)), dirs)
       catch { case _: CommitConflict => () } // another writer won: rebase
     }
     throw new IllegalStateException("unreachable")
@@ -189,7 +245,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     require(nDirs > 0, "nDirs must be positive")
     requireRangeCastable(df, rangeCol, "appendClustered")
     markClustered(rangeCol)
-    val (v, dirs) = appendCommit(df.schema, txn) {
+    val (committed, dirs) = appendCommit(df.schema, txn) {
       // one partitioned write into a staging dir, then each slice subdir
       // moves to its d-<uuid> name. The moves are data STAGING (nothing is
       // visible until the log commit below), not a commit primitive — the
@@ -215,6 +271,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     // page-cache warm): they are the part of the index a granular merge
     // plans against, so the first fold shouldn't pay a lazy corpus scan
     // (a fenced replay wrote nothing and has nothing to index)
+    val v = committed.get
     if (dirs.nonEmpty) dirColStats(rangeCol, dirs, schemaOf(v))
     v
   }
@@ -237,14 +294,8 @@ class TxLogTable(spark: SparkSession, path: String) {
       (base.toSeq ++ suffix).reduceOption(_ max _)
     }
 
-  /** The version whose commit carried transaction (appId, seq), if any. */
-  def versionOfTxn(appId: String, seq: Long): Option[Long] =
-    // newest first: the fence admits each (appId, seq) at most once, and
-    // the caller is almost always asking about a commit it just made
-    version.flatMap(v => (v to 0L by -1L).find(readEntry(_).txn.contains((appId, seq))))
-
   /** Absolute paths of the data directories visible at version `v` —
-    * for external per-commit maintenance (e.g. lockstep stats indexing).
+    * for external per-commit inspection (e.g. SHOW SHARDS).
     */
   def dirPaths(v: Long): Seq[String] =
     readEntry(v).dirs.map(d => root.resolve(d).toString)

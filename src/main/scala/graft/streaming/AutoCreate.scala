@@ -31,17 +31,20 @@ object AutoCreate {
     * side effect once per key, and append them to the catalog parquet so the
     * next batch's anti-join sees them. The catalog append is the
     * idempotence point (replays re-derive the same keys and re-anti-join).
+    * `perBatch` re-resolves batch-time state, e.g. the CURRENT device
+    * registry's semi-join.
     */
   def start(points: DataFrame, catalogPath: String, checkpoint: String,
             create: CreateFn = (_, _) => (),
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+            trigger: Trigger = Trigger.AvailableNow(),
+            perBatch: DataFrame => DataFrame = identity): StreamingQuery =
     points.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val catalog = existingCatalog(spark, catalogPath)
-        val unseen = unseenKeys(batch, catalog).collect() // bounded: new keys only
+        val unseen = unseenKeys(perBatch(batch), catalog).collect() // bounded: new keys only
         unseen.foreach(r => create(r.getString(0), r.getString(1)))
         if (unseen.nonEmpty) {
           import spark.implicits._

@@ -105,46 +105,31 @@ object StreamingIngest {
       }
       .start()
 
-  /** Streaming ingest into an ACID point table WITH lockstep file-skipping
-    * maintenance — the continuous-ingest complement to
-    * [[graft.storage.PointStore.writeIndexed]]: every micro-batch
-    * (a) clusters the batch on (device_id, ts) so its files carry tight
-    * device ranges, (b) appends it to the fact [[graft.storage.TxLogTable]]
-    * idempotently (batch-id transaction fence: a replayed batch after a
-    * crash is a no-op, exactly-once table effect), and (c) appends ONLY the
-    * new files' min/max stats to the index table under the SAME fence — so
-    * device-pruned reads see every commit without a full index rebuild, and
-    * a crash between (b) and (c) heals on replay (the data fence skips, the
-    * index fence doesn't, and the new dirs are recovered from the commit
-    * the batch originally created).
+  /** Streaming ingest into an ACID point table: each micro-batch is ONE
+    * Spark write and at most one [[graft.storage.TxLogTable]] commit. The
+    * batch is sorted on (device_id, ts) within its input splits — one file
+    * per split, no shuffle — so each file's parquet row-group min/max
+    * still skip on a device probe. The append carries a batch-id
+    * transaction fence: a batch replayed after a crash is a no-op
+    * (exactly-once table effect) and runs no write. Emptiness is decided
+    * from the written files' footers ([[graft.storage.TxLogTable.appendIfRows]]),
+    * never by an `isEmpty` job that would re-execute the batch's plan: a
+    * batch whose rows `perBatch` drops entirely commits nothing.
     */
-  def startIndexedAppendSink(points: DataFrame, table: graft.storage.TxLogTable,
-                             statsTable: graft.storage.TxLogTable, appId: String,
-                             checkpoint: String, nFilesPerBatch: Int = 4,
-                             trigger: Trigger = Trigger.AvailableNow(),
-                             perBatch: DataFrame => DataFrame = identity): StreamingQuery =
+  def startAppendSink(points: DataFrame, table: graft.storage.TxLogTable,
+                      appId: String, checkpoint: String,
+                      trigger: Trigger = Trigger.AvailableNow(),
+                      perBatch: DataFrame => DataFrame = identity): StreamingQuery =
     points.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // perBatch re-resolves batch-time state (e.g. the CURRENT registry
         // dimension for the semi-join — stream-static joins freeze the
         // static side at stream definition, exactly what a live registry
         // must not do)
-        val batch = perBatch(batch0)
-        if (!batch.isEmpty) {
-          // no conflict retry: an append rebases a lost commit race itself
-          val clustered = batch
-            .repartitionByRange(nFilesPerBatch, col("device_id"), col("ts"))
-            .sortWithinPartitions("device_id", "ts")
-          table.append(clustered, txn = Some((appId, batchId)))
-          // the batch's own commit — found by fence even on replay
-          val v = table.versionOfTxn(appId, batchId).getOrElse(
-            throw new IllegalStateException(s"append of batch $batchId left no txn commit"))
-          val added = if (v == 0L) table.readVersion(v) else table.appendsBetween(v - 1, v)
-          statsTable.append(graft.storage.StatsIndex.build(added, Seq("device_id")),
-            txn = Some((appId, batchId)))
-        }
+        table.appendIfRows(perBatch(batch).sortWithinPartitions("device_id", "ts"),
+          txn = Some((appId, batchId)))
         ()
       }
       .start()

@@ -1551,6 +1551,40 @@ class InfluxQLSpec extends SparkSuite {
       s"registry must deregister (drained=${drained.get()}, failure=${failure.get()})")
   }
 
+  test("registries: 8 concurrent CREATEs of one name land once, the rest refused") {
+    val root = java.nio.file.Files.createTempDirectory("catalog_cas").toString
+    val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    cat.run("CREATE DATABASE tele")
+    // a committed row in each registry first: the race then runs on top of
+    // an existing version, not only on the first commit
+    cat.run("CREATE CONTINUOUS QUERY c0 ON tele BEGIN SELECT count(num) AS c " +
+      "INTO cnt0 FROM temp GROUP BY time(1m) END")
+    cat.run("CREATE USER u0 WITH PASSWORD 'pw'")
+    cat.run("CREATE SUBSCRIPTION s0 ON tele.autogen DESTINATIONS ALL 'mq/s0'")
+    val cases = Seq(
+      ("CREATE CONTINUOUS QUERY c1 ON tele BEGIN SELECT count(num) AS c " +
+        "INTO cnt1 FROM temp GROUP BY time(1m) END", "_continuous_queries"),
+      ("CREATE USER u1 WITH PASSWORD 'pw'", "_users"),
+      ("CREATE SUBSCRIPTION s1 ON tele.autogen DESTINATIONS ALL 'mq/s1'", "_subscriptions"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try cases.foreach { case (stmt, registry) =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = (1 to 8).map(_ => pool.submit(() => {
+        start.await()
+        scala.util.Try(cat.run(stmt))
+      }))
+      start.countDown()
+      val results = futures.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(results.count(_.isSuccess) == 1, s"$registry: ${results.count(_.isSuccess)} CREATEs succeeded")
+      results.filter(_.isFailure).map(_.failed.get).foreach { e =>
+        assert(e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains("already exists"),
+          s"$registry: unexpected failure $e")
+      }
+      assert(new graft.storage.TxLogTable(spark, s"$root/$registry").read().count() == 2L,
+        s"$registry must hold the seed row and one created row")
+    } finally pool.shutdown()
+  }
+
   test("subscriptions: DDL registry; SHOW SHARDS/SHARD GROUPS/STATS/DIAGNOSTICS") {
     val root = java.nio.file.Files.createTempDirectory("catalog_subs").toString
     val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")

@@ -351,6 +351,50 @@ class PlanAuditSpec extends SparkSuite {
       s"an exchange or aggregate runs under the registry broadcast:\n${bx.head}")
   }
 
+  test("append sink: the points write plans no shuffle, only a within-split sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("plan_sink").toString
+    val table = new graft.storage.TxLogTable(spark, s"$root/points")
+    val registry = Seq("d1", "d2").toDF("device_id")
+    val in = MemoryStream[(String, Long, Double)](2)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val q = graft.streaming.StreamingIngest.startAppendSink(
+      in.toDF().toDF("device_id", "ts_us", "num").withColumn("ts", timestamp_micros(col("ts_us"))),
+      table, appId = "plan-sink", checkpoint = s"$root/cp", trigger = Trigger.ProcessingTime(0),
+      perBatch = b => graft.ingest.Ingest.registryFilter(b, registry))
+    try {
+      in.addData(("d2", 2L, 1.0), ("d1", 3L, 2.0), ("d3", 1L, 3.0), ("d1", 1L, 4.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    Thread.sleep(1000) // the listener bus is asynchronous
+    spark.listenerManager.unregister(l)
+    assert(table.read().count() == 3L)
+    object H extends AdaptiveSparkPlanHelper
+    val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(p => H.collect(p) { case w: DataWritingCommandExec => w })
+    assert(writes.size == 1, s"expected the batch's one write, got ${writes.size}")
+    val w = writes.head
+    val exchanges = H.collect(w.child) { case e: Exchange => e }
+    // the registry broadcast is the only exchange: no range shuffle
+    assert(exchanges.forall(_.isInstanceOf[BroadcastExchangeExec]),
+      s"the sink's write shuffles:\n$w")
+    assert(H.collect(w.child) { case s: SortExec if !s.global => s }.size == 1,
+      s"the sink's write is not sorted within partitions:\n$w")
+  }
+
   test("q_influxql_kama: recursion scan joins back without a cartesian") {
     // the kamaScan pattern: sc per bucket via windows, one repartition on
     // the series key for the sequential scan, equi-join back on

@@ -15,7 +15,7 @@ class ServiceMainSpec extends SparkSuite {
   import spark.implicits._
 
   /** Spark jobs one data-only micro-batch of the points query may run. */
-  val DataJobsPerBatch = 9.0
+  val DataJobsPerBatch = 3.0
 
   test("composed service: CDC registers, data ingests ACID + queryable, junk dead-letters, restart resumes") {
     MqttBus.clear()
@@ -73,9 +73,6 @@ class ServiceMainSpec extends SparkSuite {
     // ... and answers InfluxQL directly (live table, no adapter)
     assert(cat.run("SELECT count(num) FROM temp").as[Long].collect().toSeq == Seq(1L))
     assert(cat.run("SHOW MEASUREMENTS").as[String].collect().toSeq == Seq("mode", "temp"))
-    // the stats index tracked the append (one row per file per column set)
-    assert(new graft.storage.TxLogTable(spark, s"$dir/oc/points_stats")
-      .read().count() > 0, "stats index must cover the appended files")
     // junk is quarantined, not swallowed
     val dl = spark.read.parquet(s"$dir/dead_letter").select("topic")
       .as[String].collect().toSeq
@@ -161,9 +158,10 @@ class ServiceMainSpec extends SparkSuite {
       val perBatch = jobs.getOrDefault(data.runId.toString, 0).toDouble / dataBatches
       assert(dataBatches >= 2, s"expected several data micro-batches, got $dataBatches")
       info(f"points query: $perBatch%.2f jobs per micro-batch over $dataBatches batches")
-      // the points query's own work: the batch's emptiness probe, the
-      // range-partitioned append (sampling + write), the stats index
-      // (aggregate + write) — no footer inference, no registry scan
+      // the points query's own work is the one write of the append (its
+      // emptiness is read off the written footers on the driver) — no
+      // emptiness probe, no range shuffle, no stats index, no footer
+      // inference, no registry scan
       assert(perBatch <= DataJobsPerBatch,
         f"points query ran $perBatch%.1f jobs per micro-batch (budget $DataJobsPerBatch)")
       assert(control.recentProgress.forall(p => !p.durationMs.containsKey("addBatch")),
@@ -174,6 +172,43 @@ class ServiceMainSpec extends SparkSuite {
       ServiceMain.stop(h)
       spark.sparkContext.removeSparkListener(l)
     }
+  }
+
+  test("composed service: subscriptions and auto-create follow the live registry") {
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_live_reg").toString
+    val conf = Map("service_id" -> "svclive", "data_dir" -> dir,
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+    val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
+    cat.run("CREATE DATABASE oc")
+    cat.run("CREATE SUBSCRIPTION fwd ON oc.autogen DESTINATIONS ALL 'livesub/dest'")
+    val ev = ServiceMain.eventsTopic("svclive")
+    def forwarded = MqttBus.slice(0, MqttBus.size).filter(_._1 == "livesub/dest")
+      .map(m => new String(m._2, "UTF-8"))
+    // the service starts with an empty registry: d7 is unknown at start
+    val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      val control = h.queries(0)
+      MqttBus.publish(ev,
+        """{"action":"new","thing":{"id":"d7","transducers":[{"name":"temp"}]}}""")
+      control.processAllAvailable()
+      MqttBus.publish("openchirp/device/d7/temp", "12.5")
+      h.queries.foreach(_.processAllAvailable())
+      assert(forwarded.exists(_.startsWith("temp,device=d7 value=12.5 ")),
+        s"a device registered after start was not forwarded: $forwarded")
+      val catalogKeys = spark.read.parquet(s"$dir/transducer_catalog")
+        .as[(String, String)].collect().toSet
+      assert(catalogKeys == Set(("d7", "temp")), s"got $catalogKeys")
+
+      MqttBus.publish(ev, """{"action":"delete","thing":{"id":"d7"}}""")
+      control.processAllAvailable()
+      MqttBus.publish("openchirp/device/d7/temp", "13.5")
+      h.queries.foreach(_.processAllAvailable())
+      assert(!forwarded.exists(_.contains("value=13.5")),
+        s"a device deleted after start is still forwarded: $forwarded")
+      assert(cat.points("oc").select("num").as[Double].collect().toSeq == Seq(12.5))
+    } finally ServiceMain.stop(h)
   }
 
   test("full wire drill: authed TLS MQTT ingest + line protocol through HTTP, one InfluxQL surface answers both") {

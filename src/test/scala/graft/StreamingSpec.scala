@@ -769,43 +769,65 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("indexed append sink: every commit updates file skipping, device probe prunes") {
+  test("append sink: sorted files; replays and unregistered batches commit nothing") {
     implicit val sq = spark.sqlContext
-    val root = tmp("idx_sink")
+    val root = tmp("append_sink")
     val table = new graft.storage.TxLogTable(spark, s"$root/points")
-    val statsTable = new graft.storage.TxLogTable(spark, s"$root/stats")
-    val in = MemoryStream[(String, Long, Double)]
+    val registry = Seq("dev01", "dev02", "dev03").toDF("device_id")
+    // two input splits per batch: the sink writes one file per split
+    val in = MemoryStream[(String, Long, Double)](2)
     val points = in.toDF().toDF("device_id", "ts_us", "num")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = StreamingIngest.startIndexedAppendSink(points, table, statsTable,
-      appId = "idx-sink-test", checkpoint = tmp("idx_sink_cp"), nFilesPerBatch = 2,
-      trigger = Trigger.ProcessingTime(0))
+    val cp = tmp("append_sink_cp")
+    def start() = StreamingIngest.startAppendSink(points, table,
+      appId = "append-sink-test", checkpoint = cp, trigger = Trigger.ProcessingTime(0),
+      perBatch = b => graft.ingest.Ingest.registryFilter(b, registry))
+    def dataDirs = new java.io.File(s"$root/points").listFiles.count(_.getName.startsWith("d-"))
+    val q = start()
     try {
-      // three micro-batches over disjoint device ranges
-      in.addData(("dev01", us("2024-01-01 00:00:01"), 1.0), ("dev02", us("2024-01-01 00:00:02"), 2.0))
+      // arrival order is neither device- nor time-sorted
+      in.addData(("dev02", us("2024-01-01 00:00:03"), 1.0), ("dev01", us("2024-01-01 00:00:02"), 2.0),
+        ("ghost", us("2024-01-01 00:00:01"), 9.0), ("dev02", us("2024-01-01 00:00:01"), 3.0),
+        ("dev01", us("2024-01-01 00:00:01"), 4.0), ("dev03", us("2024-01-01 00:00:05"), 5.0),
+        ("dev01", us("2024-01-01 00:00:00"), 6.0), ("dev02", us("2024-01-01 00:00:02"), 7.0))
       q.processAllAvailable()
-      in.addData(("dev03", us("2024-01-02 00:00:01"), 3.0), ("dev04", us("2024-01-02 00:00:02"), 4.0))
+      assert(table.version.contains(0L) && dataDirs == 1)
+      // every row of this batch is unregistered: the write is discarded,
+      // the version stays, and no new dir is left behind
+      in.addData(("ghost", us("2024-01-02 00:00:01"), 1.0), ("ghost2", us("2024-01-02 00:00:02"), 2.0))
       q.processAllAvailable()
-      in.addData(("dev05", us("2024-01-03 00:00:01"), 5.0), ("dev06", us("2024-01-03 00:00:02"), 6.0))
+      assert(table.version.contains(0L), s"an all-unregistered batch committed: ${table.version}")
+      assert(dataDirs == 1, s"an all-unregistered batch left $dataDirs data dirs")
+      in.addData(("dev03", us("2024-01-03 00:00:02"), 8.0), ("dev01", us("2024-01-03 00:00:01"), 9.0))
       q.processAllAvailable()
-      // one fact commit + one index commit per micro-batch, in lockstep
-      assert(table.version.contains(2L) && statsTable.version.contains(2L))
-      // the index covers EVERY fact file — no commit left unindexed
-      val indexedFiles = statsTable.read().select("file").as[String].collect().toSet
-      val factRows = table.read().count()
-      assert(factRows == 6L)
-      assert(statsTable.read().agg(sum("n_rows")).as[Long].head() == factRows)
-      // the device probe prunes: candidate files are a strict subset
-      val cand = graft.storage.StatsIndex.candidateFiles(
-        statsTable.read(), "device_id", lit("dev05"), lit("dev05"))
-      assert(cand.nonEmpty && cand.size < indexedFiles.size,
-        s"no pruning: ${cand.size} of ${indexedFiles.size}")
-      // and the pruned read is exact
-      val got = graft.storage.PointStore.readDeviceIndexed(spark, table, statsTable,
-        "dev05", "2024-01-01", "2024-02-01")
-        .select("device_id", "num").as[(String, Double)].collect().toSeq
-      assert(got == Seq(("dev05", 5.0)))
+      assert(table.version.contains(1L) && dataDirs == 2)
     } finally q.stop()
+
+    // replay: drop the last batch's commit marker, so a restart from the
+    // checkpoint re-runs batch 2 — the txn fence makes it a no-op
+    val commits = new java.io.File(s"$cp/commits")
+    val last = commits.listFiles.map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(last == 2L)
+    new java.io.File(commits, last.toString).delete()
+    new java.io.File(commits, s".$last.crc").delete()
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(new java.io.File(commits, last.toString).exists(), "the restart did not re-run batch 2")
+    assert(table.version.contains(1L), s"a replayed batch committed again: ${table.version}")
+    assert(dataDirs == 2, s"a replayed batch wrote: $dataDirs data dirs")
+    assert(table.read().select("num").as[Double].collect().sorted.toSeq ==
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0))
+
+    // every committed file is sorted on (device_id, ts), so parquet
+    // row-group min/max skip a device probe
+    val files = table.dirPaths(1L).flatMap(d => new java.io.File(d).listFiles.toSeq)
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .map(_.getPath)
+    assert(files.size >= 2, s"expected one file per input split, got $files")
+    files.foreach { f =>
+      val rows = spark.read.parquet(f).select("device_id", "ts_us").as[(String, Long)].collect().toSeq
+      assert(rows == rows.sorted, s"$f is not sorted on (device_id, ts): $rows")
+    }
   }
 
   test("streaming wide view: dedup + map build close after watermark, duplicates collapse") {

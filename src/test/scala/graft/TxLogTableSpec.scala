@@ -739,6 +739,29 @@ class TxLogTableSpec extends SparkSuite {
     assert(onDisk == n + 1, s"$onDisk data dirs on disk for ${n + 1} appends")
   }
 
+  test("appendIfAt commits only on the version it read; appendIfRows drops empties") {
+    val p = tmp()
+    val t = new TxLogTable(spark, p)
+    assert(t.appendIfAt(Seq((1L, "a")).toDF("k", "v"), None)) // v0
+    assert(!t.appendIfAt(Seq((2L, "b")).toDF("k", "v"), None), "a stale first-commit CAS landed")
+    val at = t.version
+    // a fence-less commit (a DROP's delete) moves the version: a CAS
+    // derived from the old version must not land on top of it
+    t.delete(col("k") === 1L) // v1
+    assert(!t.appendIfAt(Seq((2L, "b")).toDF("k", "v"), at))
+    assert(t.appendIfAt(Seq((3L, "c")).toDF("k", "v"), t.version)) // v2
+    assert(t.version.contains(2L) && t.read().as[(Long, String)].collect().toSeq == Seq((3L, "c")))
+    def dirs = new java.io.File(p).listFiles.count(_.getName.startsWith("d-"))
+    val before = dirs
+    // the refused CASes left no data dir behind; neither does an empty write
+    assert(t.appendIfRows(Seq.empty[(Long, String)].toDF("k", "v"), txn = Some(("s", 0L))).isEmpty)
+    assert(t.version.contains(2L) && dirs == before)
+    assert(t.appendIfRows(Seq((4L, "d")).toDF("k", "v"), txn = Some(("s", 0L))).contains(3L))
+    // the fence now holds seq 0: a replay writes and commits nothing
+    assert(t.appendIfRows(Seq((4L, "d")).toDF("k", "v"), txn = Some(("s", 0L))).isEmpty)
+    assert(t.version.contains(3L) && dirs == before + 1)
+  }
+
   test("txn fence: replayed append is a no-op, fence state is queryable") {
     val t = new TxLogTable(spark, tmp())
     t.append(Seq((1L, "a")).toDF("k", "v"), txn = Some(("sink", 0L))) // v0
@@ -752,9 +775,6 @@ class TxLogTableSpec extends SparkSuite {
     t.append(Seq((3L, "c")).toDF("k", "v"), txn = Some(("other", 0L))) // v2
     assert(t.version.contains(2L))
     assert(t.txnHighWatermark("other").contains(0L) && t.txnHighWatermark("sink").contains(1L))
-    // each fenced commit is findable — the replay-recovery hook
-    assert(t.versionOfTxn("sink", 1L).contains(1L))
-    assert(t.versionOfTxn("sink", 9L).isEmpty)
     // un-fenced appends still work alongside
     t.append(Seq((4L, "d")).toDF("k", "v"))
     assert(t.read().count() == 4L)
