@@ -2,7 +2,7 @@
 """A/B a change against a parent revision with alternating benchmark pairs.
 
     python3 scripts/ab_pairs.py --parent REV --workload NAME [--pairs 10]
-                                [--seed 101] [--seconds S] [--parent-dir DIR]
+                                [--seed 101] [--parent-dir DIR]
 
 Run from the repository root. The change is the working tree as it stands;
 the parent is `git archive REV`, unpacked into a temporary directory (or
@@ -12,7 +12,9 @@ seed `--seed + i`, parent first on even i and change first on odd i, so
 neither side always runs on a warmer or cooler host.
 
 Each run is `python3 perfbench/run.py --workload NAME --seed N --seconds S
---trace 0` in that tree; this script only reads perfbench/ and its output.
+--trace 0` in that tree, with S the `run_seconds` BENCHMARK.json fixes, so
+both sides always run the benchmark's own length; this script only reads
+perfbench/ and its output.
 For every end-to-end metric BENCHMARK.json declares, it prints both
 medians, the parent's interquartile range and in how many pairs the change
 was better, then one JSON line with the same figures. A run that is not
@@ -71,14 +73,12 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=101, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--parent-dir", default=None,
                     help="where to unpack the parent; kept and reused across calls")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
 
     parent_dir = a.parent_dir or tempfile.mkdtemp(prefix="ab_parent_")

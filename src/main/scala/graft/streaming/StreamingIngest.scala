@@ -108,8 +108,10 @@ object StreamingIngest {
   /** Streaming ingest into an ACID point table: each micro-batch is ONE
     * Spark write and at most one [[graft.storage.TxLogTable]] commit. The
     * batch is sorted on (device_id, ts) within its input splits — one file
-    * per split, no shuffle — so each file's parquet row-group min/max
-    * still skip on a device probe. The append carries a batch-id
+    * per split, no shuffle. A live batch of a few hundred rows is one row
+    * group spanning every device in it, so a device probe skips nothing
+    * inside these files (compaction concatenates, it does not re-sort).
+    * The append carries a batch-id
     * transaction fence: a batch replayed after a crash is a no-op
     * (exactly-once table effect) and runs no write. Emptiness is decided
     * from the written files' footers ([[graft.storage.TxLogTable.appendIfRows]]),

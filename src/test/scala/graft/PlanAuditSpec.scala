@@ -379,8 +379,15 @@ class PlanAuditSpec extends SparkSuite {
       in.addData(("d2", 2L, 1.0), ("d1", 3L, 2.0), ("d3", 1L, 3.0), ("d1", 1L, 4.0))
       q.processAllAvailable()
     } finally q.stop()
-    Thread.sleep(1000) // the listener bus is asynchronous
+    // the listener bus is asynchronous but delivers in order: once a
+    // sentinel query run after the stream stopped is seen, every plan the
+    // sink ran has been delivered
+    spark.range(1).toDF("plan_sink_sentinel").collect()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def sentinelSeen = plans.toArray(Array.empty[SparkPlan]).exists(_.output.exists(_.name == "plan_sink_sentinel"))
+    while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
     spark.listenerManager.unregister(l)
+    assert(sentinelSeen, "listener delivered no plans within 30 s")
     assert(table.read().count() == 3L)
     object H extends AdaptiveSparkPlanHelper
     val writes = plans.toArray(Array.empty[SparkPlan]).toSeq

@@ -153,7 +153,14 @@ class ServiceMainSpec extends SparkSuite {
         data.processAllAvailable()
       }
       h.queries.foreach(_.processAllAvailable())
-      Thread.sleep(1000) // the listener bus is asynchronous
+      // the listener bus is asynchronous but delivers in order: once a
+      // sentinel job started after the queries drained is counted, every
+      // job they ran has been counted
+      spark.sparkContext.setJobGroup("svcjobs-sentinel", "listener drain")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.containsKey("svcjobs-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.containsKey("svcjobs-sentinel"), "listener delivered no job starts within 30 s")
       val dataBatches = data.recentProgress.count(_.numInputRows > 0)
       val perBatch = jobs.getOrDefault(data.runId.toString, 0).toDouble / dataBatches
       assert(dataBatches >= 2, s"expected several data micro-batches, got $dataBatches")
