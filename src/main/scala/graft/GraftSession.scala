@@ -21,6 +21,21 @@ import org.apache.spark.sql.SparkSession
   *     rejected by Spark's reader natively; as LONG we truncate to micros
   *     ourselves (see [[Tables.events]]), matching DuckDB's ns->us cast.
   *     Harmless for micros-unit columns.
+  *
+  * Two local-file defaults make commits on a `file:` path fork-free (see
+  * [[graft.storage.NioCheckpointFileManager]] and
+  * [[graft.storage.NioLocalFileSystem]]); without `libhadoop`, Hadoop's
+  * local filesystem forks a `chmod` or `readlink` process per file:
+  *   - `spark.sql.streaming.checkpointFileManagerClass`: streaming offset
+  *     and commit logs, file-sink metadata logs and state-store deltas
+  *     commit through `java.nio` (`Files.createLink` when the file must not
+  *     exist yet). A runtime SQL conf, so [[prepare]] sets it too.
+  *   - `spark.hadoop.fs.file.impl`: parquet part files, `_temporary` dirs
+  *     and `_SUCCESS` markers get their mode through `java.nio`. A Hadoop
+  *     conf read when the first `file:` filesystem is created, so only a
+  *     session built here carries it.
+  *
+  * Both leave every other scheme (HDFS, object stores) to Spark and Hadoop.
   */
 object GraftSession {
 
@@ -44,6 +59,10 @@ object GraftSession {
       // cluster. Not a result cache: computation still runs per query.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
+      .config(CheckpointManagerKey, classOf[graft.storage.NioCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.storage.NioLocalFileSystem].getName)
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Ensure an externally-created session (driver's Verify/Bench, tests) has
     * the configs the engine depends on. Safe to call repeatedly.
@@ -53,6 +72,7 @@ object GraftSession {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set(CheckpointManagerKey, classOf[graft.storage.NioCheckpointFileManager].getName)
     spark
   }
 }

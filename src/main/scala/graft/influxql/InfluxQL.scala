@@ -2206,16 +2206,18 @@ object InfluxQL {
     * synthesize below the max CLOSED bucket, where the watermark has
     * already discarded later-arriving points). Correct only while the CQ
     * is its target's sole writer, which is the CQ contract.
+    *
+    * `b` arrives materialized and non-empty: the merge sink checkpoints
+    * each micro-batch once and skips empty ones, so the fill reads it as
+    * often as it needs without re-running the stream's aggregation.
     */
-  private def densifyClosedBuckets(batch: DataFrame, table: graft.storage.TxLogTable,
+  private def densifyClosedBuckets(b: DataFrame, table: graft.storage.TxLogTable,
                                    step: Long, tags: Seq[String],
                                    fill: Fill): DataFrame = {
-    if (batch.isEmpty) return batch
     if (fill == FillLinear || fill == FillPrevious)
-      return densifyRewrite(batch, table, step, tags, fill)
+      return densifyRewrite(b, table, step, tags, fill)
     val keyCols = "time" +: tags
-    val aggCols0 = batch.columns.filterNot(keyCols.contains).toSeq
-    val b = batch.localCheckpoint()
+    val aggCols0 = b.columns.filterNot(keyCols.contains).toSeq
     // the batch planner applies fill(<value>) per CELL: a present bucket's
     // null aggregate (a 1-point stddev) takes the literal too, not just
     // gap buckets — emit the batch coalesced so CQ == batch bit-for-bit
@@ -2306,12 +2308,11 @@ object InfluxQL {
     * MaxFillBuckets/MaxFillRows-guarded and the one window shuffles on
     * the grouping tags.
     */
-  private def densifyRewrite(batch: DataFrame, table: graft.storage.TxLogTable,
+  private def densifyRewrite(b: DataFrame, table: graft.storage.TxLogTable,
                              step: Long, tags: Seq[String], fill: Fill): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyCols = "time" +: tags
-    val aggCols = batch.columns.filterNot(keyCols.contains).toSeq
-    val b = batch.localCheckpoint()
+    val aggCols = b.columns.filterNot(keyCols.contains).toSeq
     val cols = b.columns.toSeq
     val sc = fillScaffold(b, table, step, tags)
     val anyNull = aggCols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))

@@ -83,6 +83,14 @@ object StreamingIngest {
     * its history as metadata instead of rewriting the whole table every
     * micro-batch — without it, per-batch write cost grows with the
     * table's own history, O(n²) over the stream's life.
+    *
+    * Each micro-batch runs its plan ONCE: one `localCheckpoint` job
+    * materializes it (for a stateful query — a continuous query's
+    * watermarked aggregate — that is the one state-store commit) and counts
+    * its rows on the side through an [[org.apache.spark.sql.Observation]],
+    * so an empty batch (a watermark-only batch that closes no bucket) runs
+    * exactly that job. `perBatch` and the merge read the materialized rows,
+    * which are released once the merge commits.
     */
   def startMergeSink(updates: DataFrame, table: graft.storage.TxLogTable,
                      keys: Seq[String], orderCol: String, checkpoint: String,
@@ -93,15 +101,23 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // perBatch may enrich the upsert set against CURRENT table state
-        // (e.g. a continuous query's fill() densifying the gaps between
-        // newly closed buckets) — it must be deterministic given (batch,
-        // table) so an at-least-once replay still converges
-        val batch = perBatch(batch0)
-        if (!batch.isEmpty)
-          graft.storage.TxLogTable.retryOnConflict() {
-            table.merge(batch, keys, Some(orderCol), rangeCol); ()
+        val rows = new org.apache.spark.sql.Observation()
+        val batch = batch0.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+        try {
+          // perBatch may enrich the upsert set against CURRENT table state
+          // (e.g. a continuous query's fill() densifying the gaps between
+          // newly closed buckets) — it must be deterministic given (batch,
+          // table) so an at-least-once replay still converges
+          if (rows.get("n").asInstanceOf[Long] > 0) {
+            val upserts = perBatch(batch)
+            graft.storage.TxLogTable.retryOnConflict() {
+              table.merge(upserts, keys, Some(orderCol), rangeCol); ()
+            }
           }
+        } finally batch.queryExecution.logical.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+        }
+        ()
       }
       .start()
 

@@ -474,6 +474,55 @@ class StreamingSpec extends SparkSuite {
       s"literal must land in the present bucket's null stddev: $gotV")
   }
 
+  test("CQ fill: a micro-batch that closes no bucket runs its stateful plan once, as one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    implicit val sq = spark.sqlContext
+    val root = tmp("cq_jobs")
+    val in = MemoryStream[(String, String, Long, Double)]
+    val points = in.toDF().toDF("device", "transducer", "ts_us", "value")
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+    // Spark jobs by job group: a streaming query runs each micro-batch
+    // under its runId's group, so this attributes every job to the CQ
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Int, b: Int) => a + b))
+    }
+    spark.sparkContext.addSparkListener(l)
+    val q = graft.influxql.InfluxQL.startContinuousQuery(points,
+      """CREATE CONTINUOUS QUERY temp_j ON telemetry BEGIN
+        |SELECT mean(value) INTO temp_j FROM temp
+        |GROUP BY time(10m), device FILL(linear) END""".stripMargin,
+      root, checkpoint = tmp("cq_jobs_cp"), lateness = "1 minute",
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      // every point sits in the open 00:00 bucket: each micro-batch —
+      // the data batches and any watermark-only batch — closes nothing
+      Seq("00:01:00", "00:02:00", "00:03:00").zipWithIndex.foreach { case (t, i) =>
+        in.addData(("d1", "temp", us(s"2024-01-01 $t"), i.toDouble))
+        q.processAllAvailable()
+      }
+      spark.sparkContext.setJobGroup("cq-jobs-sentinel", "listener drain")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.containsKey("cq-jobs-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.containsKey("cq-jobs-sentinel"), "listener delivered no job starts within 30 s")
+      val batches = q.recentProgress.count(_.durationMs.containsKey("addBatch"))
+      assert(batches >= 3, s"expected a micro-batch per added point, got $batches")
+      // the one job is the batch's materialization (state-store commit
+      // included); its row count rides along, so no emptiness probe re-runs
+      // the aggregation and an empty batch reaches neither fill nor merge
+      assert(jobs.getOrDefault(q.runId.toString, 0) == batches,
+        s"${jobs.getOrDefault(q.runId.toString, 0)} jobs over $batches empty CQ micro-batches")
+      assert(new graft.storage.TxLogTable(spark, s"$root/telemetry/temp_j").version.isEmpty,
+        "a CQ micro-batch that closed no bucket committed")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
   test("CQ RESAMPLE: FOR widens the watermark; EVERY yields to an AvailableNow drain") {
     implicit val sq = spark.sqlContext
     val root = tmp("cq_rs")
