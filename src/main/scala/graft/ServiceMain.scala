@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ingest.Ingest
 import graft.storage.TxLogTable
 import graft.streaming._
 
@@ -17,21 +16,21 @@ import graft.streaming._
   *   2. MQTT connect + subscribe with auth/TLS from config; the connection
   *      manager re-subscribes on every reconnect (R1, influx_service.py:66-76)
   *   3. registry snapshot bootstrap over REST (`load_devices`, R12)
-  *   4. six streaming queries off the one MQTT log source:
+  *   4. three streaming queries off the one MQTT log source, in this
+  *      order in [[Handles.queries]]:
   *      - control: service events -> registry CDC MERGE (R11, REST-enriched)
-  *      - data: parse -> infer -> registry semi-join -> ACID append, one
-  *        write and one commit per micro-batch (R3-R9; exactly-once via
-  *        batch-id transaction fence)
-  *      - dead-letter: unroutable topics quarantined, replayable (R3)
+  *      - data plane: each micro-batch parsed and materialized once, then
+  *        (R3-R9, R14; [[graft.streaming.StreamingIngest.startDataPlane]])
+  *        the registered points' ACID append and the unroutable messages'
+  *        dead-letter append, both exactly-once via the batch-id
+  *        transaction fence; auto-create of unseen (device, transducer)
+  *        keys; and the fan-out of the points as line protocol to every
+  *        CREATE SUBSCRIPTION destination (InfluxDB's subscriber service)
   *      - status: windowed points-written/device counts published to the
   *        status topic (R10/R15, influx_service.py:310-322)
-  *      - auto-create: unseen (device, transducer) keys POSTed once (R14)
-  *      - subscriptions: registered points forwarded as line protocol to
-  *        every CREATE SUBSCRIPTION destination (InfluxDB's subscriber
-  *        service)
   *      plus one watermarked downsample stream per continuous query
   *      registered in [[graft.influxql.ContinuousQueries]] (InfluxDB's CQ
-  *      service runs registered CQs the same way)
+  *      service runs registered CQs the same way), last
   *   5. graceful shutdown on SIGTERM: stop queries, disconnect (R17)
   *
   * The points land in [[graft.influxql.InfluxCatalog]]'s layout
@@ -50,7 +49,11 @@ import graft.streaming._
   */
 object ServiceMain {
 
-  /** Everything the running service owns; [[stop]] tears it down in order. */
+  /** Everything the running service owns; [[stop]] tears it down in order.
+    * `queries` holds the control query, the data plane, the status query
+    * and then one query per continuous query; `perfbench` reads the data
+    * plane's progress at index 1, and ServiceMainSpec pins the layout.
+    */
   final case class Handles(spark: SparkSession,
                            manager: MqttConnectionManager,
                            queries: Seq[StreamingQuery],
@@ -343,43 +346,43 @@ object ServiceMain {
       }
       .start())
 
-    // data plane: parse + infer stream-side (map-only), registry semi-join
-    // per BATCH against the current dimension (a stream-static join would
-    // freeze the registry at stream start; the version-keyed cache runs no
-    // job while the registry is unchanged), fenced ACID append —
-    // exactly-once under replay
-    val parsed = Ingest.inferTypes(Ingest.parseTopic(
-      msgs.filter(Ingest.dataTopicFilter)))
-    def liveRegistry(b: DataFrame): DataFrame =
-      Ingest.registryFilter(b, RegistryMaintenance.activeDevices(spark, registryPath))
-    val dataQ = reg(StreamingIngest.startAppendSink(
-      parsed, pointsTable, appId = s"service-$serviceId",
-      checkpoint = cp("points"), trigger = trigger,
-      // ts_us alongside ts: the InfluxQL planner's time column, so the
-      // live service table answers dialect queries with no adapter
-      perBatch = b => Ingest.narrowPoints(liveRegistry(b))
-        .withColumn("ts_us", unix_micros(col("ts")))))
-
-    // dead-letter: everything that routes nowhere, kept replayable
-    val dlQ = reg(StreamingIngest.startDeadLetterSink(msgs, evTopic,
-      s"$dataDir/dead_letter", cp("dead_letter"), trigger))
+    // data plane: ONE query parses each micro-batch once and feeds the
+    // fenced points append, the fenced dead-letter append, auto-create and
+    // the subscription fan-out, in that order, all against one snapshot of
+    // the CURRENT registry (a stream-static join would freeze it at stream
+    // start; the version-keyed cache runs no job while it is unchanged).
+    // It keeps the `points` checkpoint and appId: a fresh checkpoint would
+    // restart batch ids at 0 and the txn fence would swallow new batches.
+    val dataQ = reg(StreamingIngest.startDataPlane(msgs, evTopic,
+      points = pointsTable,
+      deadLetters = new TxLogTable(spark, s"$dataDir/dead_letters"),
+      registered = () => RegistryMaintenance.activeIds(spark, registryPath),
+      appId = s"service-$serviceId", checkpoint = cp("points"), trigger = trigger,
+      // unseen (device, transducer) keys POST once (R14)
+      autoCreate = AutoCreate(spark, catalogPath, rest.map(_.createFn).getOrElse((_, _) => ())),
+      // registered subscriptions fan every ingested point out to their
+      // destinations as line protocol (InfluxDB's subscriber service);
+      // CREATE SUBSCRIPTION takes effect at the next batch. The numeric
+      // face of the narrow layout is what forwards (line protocol's value
+      // field); bool points ride as 1/0, string payloads stay local. An
+      // optional liveness bound caps the rows a slow subscriber can delay
+      // a batch by; the excess counts into Subscriptions.droppedRows
+      fanOut = b => graft.influxql.Subscriptions.fanOut(
+        b.select(col("device_id").as("device"), col("transducer"), col("ts_us"),
+          coalesce(col("num"), col("bool").cast("double")).as("value"))
+          .filter(col("value").isNotNull),
+        db, dataDir, maxRowsPerBatch = conf.get("subscription_batch_cap").map(_.toInt))))
 
     // status: the reference's 10-minute points-written/#devices payload
     // (PUBLISH_STATS_INTERVAL=600); the stateful status and CQ pipelines
     // key on the registry as of start — status is an operational gauge,
-    // not the gate the per-batch data join is
+    // not the gate the per-batch data plane is
     val statusPoints = StreamingIngest.pointsStream(msgs,
       RegistryMaintenance.activeDevices(spark, registryPath))
     val statusQ = reg(StatusPublisher.start(
       StreamingIngest.statusCounts(statusPoints,
         interval = conf.getOrElse("stats_interval", "10 minutes")),
       statusTopic(serviceId), publish, cp("status"), trigger))
-
-    // auto-create: unseen (device, transducer) keys POST once, idempotent;
-    // gated per batch on the live registry, like the data plane
-    val autoQ = reg(AutoCreate.start(Ingest.narrowPoints(parsed), catalogPath,
-      cp("autocreate"), rest.map(_.createFn).getOrElse((_, _) => ()), trigger,
-      perBatch = liveRegistry))
 
     // registered continuous queries start with the service (InfluxDB runs
     // its CQ service the same way): each downsamples the registry-filtered
@@ -388,26 +391,6 @@ object ServiceMain {
       statusPoints.withColumn("ts_us", unix_micros(col("ts"))),
       lateness = conf.getOrElse("cq_lateness", "1 minute"), trigger = trigger)
     cqQs.foreach { case (_, q) => started += q }
-
-    // registered subscriptions fan every ingested point out to their
-    // destinations as line protocol (InfluxDB's subscriber service); the
-    // subscription and device registries both re-read each batch, so
-    // CREATE SUBSCRIPTION and a device's register/delete take effect
-    // without a restart. Executor-side publishing rides the in-process
-    // bus — the same fabric the service's own MQTT loop consumes. The
-    // numeric face of the narrow layout is what forwards (line protocol's
-    // value field); bool points ride as 1/0, string payloads stay local.
-    val subQ = reg(graft.influxql.Subscriptions.start(
-      parsed.select(col("device_id"), col("device_id").as("device"), col("transducer"),
-        unix_micros(col("ts")).as("ts_us"),
-        coalesce(col("num"), col("bool").cast("double")).as("value"))
-        .filter(col("value").isNotNull),
-      db, dataDir, checkpoint = cp("subscriptions"), trigger = trigger,
-      perBatch = liveRegistry,
-      // optional liveness bound: a slow subscriber can then delay a batch
-      // by at most cap×publish-latency; the excess counts into
-      // Subscriptions.droppedRows instead of stalling ingest
-      maxRowsPerBatch = conf.get("subscription_batch_cap").map(_.toInt)))
 
     // maintenance: InfluxDB runs a retention service AND a compactor —
     // a daemon timer sweeps every database at check-interval (default
@@ -447,8 +430,7 @@ object ServiceMain {
       t
     }
 
-    Handles(spark, manager,
-      Seq(controlQ, dataQ, dlQ, statusQ, autoQ, subQ) ++ cqQs.map(_._2), http,
+    Handles(spark, manager, Seq(controlQ, dataQ, statusQ) ++ cqQs.map(_._2), http,
       Some(retentionThread), udp)
 
     } catch {

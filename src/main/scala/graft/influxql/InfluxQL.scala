@@ -2316,8 +2316,9 @@ object InfluxQL {
     val cols = b.columns.toSeq
     val sc = fillScaffold(b, table, step, tags)
     val anyNull = aggCols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
-    // linear's extra participants (empty frames for previous)
-    val (pendingAll, donorRows) = (fill, sc.carryT) match {
+    // linear's extra participants (empty frames for previous), and the
+    // donor spec's checkpoint, released with the carry
+    val (pendingAll, donorRows, donorCkpt) = (fill, sc.carryT) match {
       case (FillLinear, Some(t)) =>
         val pending = table.read().select(cols.map(col): _*)
           .where(col("time") < lit(t) && anyNull)
@@ -2359,8 +2360,8 @@ object InfluxQL {
             .join(broadcast(donorSpec), keyCols)
             .select(keyCols.map(col) ++ aggCols.zipWithIndex.map { case (c, i) =>
               when(col("__ci") === i, col(c)).as(c) }: _*)
-        (pending, donors)
-      case _ => (b.limit(0), b.limit(0))
+        (pending, donors, Some(donorSpec))
+      case _ => (b.limit(0), b.limit(0), None)
     }
     try {
       val gapNull = sc.gapKeys.select(keyCols.map(col) ++ aggCols.map(c =>
@@ -2422,7 +2423,10 @@ object InfluxQL {
         else col(srcCol) === 0 || col(srcCol) === 2 || (col(srcCol) === 3 && changed)
       filled.where(emit)
         .drop(srcCol +: aggCols.indices.map(wasCol): _*).localCheckpoint()
-    } finally { sc.carry.unpersist(); pendingAll.unpersist(); () }
+    } finally {
+      sc.carry.unpersist(); pendingAll.unpersist()
+      donorCkpt.foreach(graft.streaming.StreamingIngest.release)
+    }
   }
 
   /** mode() needs its own two-level aggregation (value frequencies, then an

@@ -2,7 +2,6 @@ package graft.influxql
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.storage.TxLogTable
 import InfluxQL.{tokenize, P, TStr}
@@ -24,12 +23,12 @@ import InfluxQL.{tokenize, P, TStr}
   * destination — pinned here as a deterministic content hash, the
   * reproducible face of InfluxDB's round-robin balancing).
   *
-  * The execution half ([[start]]) is a streaming fan-out: each micro-batch
-  * re-reads the registry (a new subscription takes effect without a
-  * restart, as in InfluxDB) and publishes every point as line protocol
-  * from the EXECUTORS — `foreachPartition` with a per-partition publisher,
-  * never a driver-side collect, so the fan-out scales with the write path
-  * it mirrors.
+  * The execution half ([[fanOut]]) is the data plane's last step: each
+  * micro-batch re-reads the registry (a new subscription takes effect
+  * without a restart, as in InfluxDB) and publishes every point as line
+  * protocol from the EXECUTORS — `foreachPartition` with a per-partition
+  * publisher, never a driver-side collect, so the fan-out scales with the
+  * write path it mirrors.
   */
 object Subscriptions {
 
@@ -176,11 +175,14 @@ object Subscriptions {
       _ => new java.util.concurrent.atomic.AtomicLong(0)).addAndGet(n)
   }
 
-  /** Start the write fan-out for `db`: every micro-batch of the narrow
-    * points stream re-reads the registry and publishes each point to its
-    * subscription destinations from the executors (per-partition publisher
-    * via `publishFactory`, serialized to the tasks — the in-process bus by
-    * default, a real MQTT/UDP client in a deployment).
+  /** The write fan-out for `db`, one data-plane micro-batch at a time
+    * ([[graft.streaming.StreamingIngest.startDataPlane]]): reads the
+    * registry (a new subscription takes effect at the next batch, as in
+    * InfluxDB) and publishes each of `points` — (device, transducer,
+    * ts_us, value) rows — to its subscription destinations from the
+    * executors (per-partition publisher via `publishFactory`, serialized to
+    * the tasks — the in-process bus by default, a real MQTT/UDP client in
+    * a deployment). A database with no subscription runs nothing.
     *
     * Delivery is AT-LEAST-ONCE: a replayed micro-batch (crash between
     * publish and checkpoint) re-publishes its points — the same contract
@@ -194,58 +196,41 @@ object Subscriptions {
     * each batch forwards at most that many rows (deterministic limit) and
     * counts the excess into [[droppedRows]] — InfluxDB's own
     * write-buffer-overflow drop, made explicit and observable.
-    *
-    * `perBatch` re-resolves batch-time state before the fan-out, e.g. the
-    * CURRENT device registry's semi-join (a device deleted after start
-    * stops forwarding at its next batch).
     */
-  def start(points: DataFrame, db: String, root: String,
-            publishFactory: () => (String, String) => Unit =
-              () => (dest, payload) => graft.streaming.MqttBus.publish(dest, payload),
-            checkpoint: String,
-            trigger: Trigger = Trigger.AvailableNow(),
-            perBatch: DataFrame => DataFrame = identity,
-            maxRowsPerBatch: Option[Int] = None): StreamingQuery = {
-    val spark = points.sparkSession
-    points.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // control-plane read: one row per subscription for this db
-        val subs = defs(spark, root).filter(col("db") === db)
-          .select("mode", "destinations").collect()
-          .map(r => (r.getString(0), r.getString(1).split(DestSep).toSeq))
-          .toSeq
-        if (subs.nonEmpty) {
-          val batch = perBatch(batch0)
-          val factory = publishFactory
-          val capped = maxRowsPerBatch match {
-            case Some(cap) =>
-              val n = batch.count()
-              if (n > cap) addDropped(root, db, n - cap)
-              // oldest-first with explicit tie-breaks: a bare limit would
-              // forward an ARBITRARY subset of the batch; ordering makes
-              // the kept slice stable and meaningful (the earliest points
-              // a late subscriber is most likely to still want)
-              batch.orderBy(col("ts_us"), col("device"), col("transducer"))
-                .limit(cap)
-            case None => batch
-          }
-          capped.select("transducer", "device", "ts_us", "value")
-            .foreachPartition { rows: Iterator[Row] =>
-              val publish = factory()
-              rows.foreach { r =>
-                val (m, d, ts, v) = (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))
-                val line = lineProtocol(m, d, ts, v)
-                subs.foreach { case (mode, dests) =>
-                  if (mode == "ALL") dests.foreach(publish(_, line))
-                  else publish(dests(anyIndex(m, d, ts, dests.size)), line)
-                }
-              }
-            }
-        }
+  def fanOut(points: DataFrame, db: String, root: String,
+             publishFactory: () => (String, String) => Unit =
+               () => (dest, payload) => graft.streaming.MqttBus.publish(dest, payload),
+             maxRowsPerBatch: Option[Int] = None): Unit = {
+    // control-plane read: one row per subscription for this db
+    val subs = defs(points.sparkSession, root).filter(col("db") === db)
+      .select("mode", "destinations").collect()
+      .map(r => (r.getString(0), r.getString(1).split(DestSep).toSeq))
+      .toSeq
+    if (subs.nonEmpty) {
+      val factory = publishFactory
+      val capped = maxRowsPerBatch match {
+        case Some(cap) =>
+          val n = points.count()
+          if (n > cap) addDropped(root, db, n - cap)
+          // oldest-first with explicit tie-breaks: a bare limit would
+          // forward an ARBITRARY subset of the batch; ordering makes the
+          // kept slice stable and meaningful (the earliest points a late
+          // subscriber is most likely to still want)
+          points.orderBy(col("ts_us"), col("device"), col("transducer")).limit(cap)
+        case None => points
       }
-      .trigger(trigger)
-      .start()
+      capped.select("transducer", "device", "ts_us", "value")
+        .foreachPartition { rows: Iterator[Row] =>
+          val publish = factory()
+          rows.foreach { r =>
+            val (m, d, ts, v) = (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))
+            val line = lineProtocol(m, d, ts, v)
+            subs.foreach { case (mode, dests) =>
+              if (mode == "ALL") dests.foreach(publish(_, line))
+              else publish(dests(anyIndex(m, d, ts, dests.size)), line)
+            }
+          }
+        }
+    }
   }
 }

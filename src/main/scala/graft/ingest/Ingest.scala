@@ -17,12 +17,14 @@ object Ingest {
   /** R4/R5 — topic parse + normalization (influx_service.py:130-139).
     * Topic format `openchirp/device/{DEVICE_ID}/{TRANSDUCER_NAME}`
     * (influx_service.py:129); transducer names are lower-cased
-    * (influx_service.py:139).
+    * (influx_service.py:139). A shorter topic of another shape parses to
+    * null ids instead of failing the batch: the data plane parses every
+    * message once and routes on [[dataTopicFilter]] afterwards.
     */
   def parseTopic(df: DataFrame): DataFrame = {
     val parts = split(col("topic"), "/")
-    df.withColumn("device_id", parts.getItem(2))
-      .withColumn("transducer", lower(parts.getItem(3)))
+    df.withColumn("device_id", get(parts, lit(2)))
+      .withColumn("transducer", lower(get(parts, lit(3))))
   }
 
   /** Predicate matching the reference's data-plane wildcard subscription

@@ -123,29 +123,6 @@ class TxLogTable(spark: SparkSession, path: String) {
     appendCommit(df.schema, txn)(Seq(writeDataDir(df)))._1.get
   }
 
-  /** [[append]] of a frame that may hold no rows (a micro-batch a filter
-    * may empty) without an `isEmpty`/`count` job re-executing its plan:
-    * the row count is read from the written files' parquet footers on the
-    * driver, and a zero-row write is deleted uncommitted. Returns the
-    * version this call committed; None when fenced or empty.
-    */
-  def appendIfRows(df: DataFrame, txn: Option[(String, Long)] = None): Option[Long] = {
-    refuseIfClustered()
-    val conf = spark.sessionState.newHadoopConf()
-    def rows(dir: Path): Long = listDir(dir).filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    val (v, dirs) = appendCommit(df.schema, txn) {
-      val d = writeDataDir(df)
-      if (rows(root.resolve(d)) > 0) Seq(d) else { deleteRecursively(root.resolve(d)); Nil }
-    }
-    if (dirs.isEmpty) None else v
-  }
-
   /** Compare-and-set append: commits `df` only as the version right after
     * `at` (None: the first commit) and says whether it did. A check-then-
     * append registry checks at version `at`, calls this, and re-checks on
@@ -199,8 +176,7 @@ class TxLogTable(spark: SparkSession, path: String) {
             s"$path schema ${c.simpleString}; rewrite via overwrite() to evolve")
     }
 
-  /** The commit half [[append]], [[appendIfRows]] and [[appendClustered]]
-    * share. Against the current base it checks the txn fence and the
+  /** The commit half [[append]] and [[appendClustered]] share. Against the current base it checks the txn fence and the
     * schema, runs `write` (the Spark write of the new data dirs) once, and
     * commits them (nothing when `write` returned none). Appended dirs are
     * valid on top of ANY base, so a lost commit race re-resolves only the

@@ -41,39 +41,44 @@ object RegistryMaintenance {
       .start()
 
   // version-keyed active-device cache (the ContinuousQueries.cqTargets
-  // pattern): the data query resolves the registry on EVERY micro-batch,
+  // pattern): the data plane resolves the registry on EVERY micro-batch,
   // and the registry only changes on a control event — so the active ids
-  // are collected once per registry commit into a driver-local frame,
-  // keyed on (path, version, incarnation) so a table dir recreated at the
-  // same path never serves a stale set. Steady state is one commit-log
-  // list + one stat + a map hit, never a Spark job. One entry per live
-  // registry path.
+  // are collected once per registry commit into a driver-side set, keyed
+  // on (path, version, incarnation) so a table dir recreated at the same
+  // path never serves a stale set. Steady state is one commit-log list +
+  // one stat + a map hit, never a Spark job. One entry per live registry
+  // path.
   private val activeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Option[String]), DataFrame)]()
+    String, ((Long, Option[String]), Set[String])]()
 
-  /** Currently-active devices, in the shape `Ingest.registryFilter` expects:
-    * a driver-local frame (a LocalRelation — broadcasting it scans
-    * nothing). Returns an empty registry before the first commit (nothing
-    * registered yet — every message dead-letters, matching the
-    * reference's behavior with an empty dict).
+  /** Currently-active device ids, as a driver-side set. Empty before the
+    * first commit (nothing registered yet — every message dead-letters,
+    * matching the reference's behavior with an empty dict).
     */
-  def activeDevices(spark: SparkSession, tablePath: String): DataFrame = {
+  def activeIds(spark: SparkSession, tablePath: String): Set[String] = {
     import spark.implicits._
     val t = new TxLogTable(spark, tablePath)
     t.version match {
-      case None => Seq.empty[String].toDF("device_id")
+      case None => Set.empty
       case Some(v) =>
         val key = java.nio.file.Paths.get(tablePath).toAbsolutePath.normalize.toString
         val stamp = (v, t.incarnation)
         val cached = activeCache.get(key)
-        if (cached != null && cached._1 == stamp && (cached._2.sparkSession eq spark)) cached._2
+        if (cached != null && cached._1 == stamp) cached._2
         else {
           val ids = t.readVersion(v).filter(col("active"))
-            .select(col("deviceId")).as[String].collect().toSeq
-          val frame = ids.toDF("device_id")
-          activeCache.put(key, (stamp, frame))
-          frame
+            .select(col("deviceId")).as[String].collect().toSet
+          activeCache.put(key, (stamp, ids))
+          ids
         }
     }
+  }
+
+  /** [[activeIds]] in the shape `Ingest.registryFilter` expects: a
+    * driver-local frame (a LocalRelation — broadcasting it scans nothing).
+    */
+  def activeDevices(spark: SparkSession, tablePath: String): DataFrame = {
+    import spark.implicits._
+    activeIds(spark, tablePath).toSeq.sorted.toDF("device_id")
   }
 }

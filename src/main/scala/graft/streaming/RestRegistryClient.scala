@@ -8,10 +8,11 @@ import java.time.Duration
   * device lookup (the reference's `get_device`, influx_service.py:276-307)
   * and transducer auto-create (the POST at influx_service.py:249-274).
   *
-  * Runs DRIVER-SIDE only: [[AutoCreate.start]] collects the bounded set of
-  * unseen keys per micro-batch and invokes the CreateFn there, so this
-  * client is never serialized to executors and holds its connection pool in
-  * one place — the same topology as the reference's single-process client.
+  * Runs DRIVER-SIDE only: the data plane's [[AutoCreate]] step finds the
+  * bounded set of unseen keys per micro-batch and invokes the CreateFn
+  * there, so this client is never serialized to executors and holds its
+  * connection pool in one place — the same topology as the reference's
+  * single-process client.
   *
   * Failure policy (the part the reference leaves to its bare except):
   *   - 5xx / IO errors: transient — retry with exponential backoff

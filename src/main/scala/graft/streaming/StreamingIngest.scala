@@ -1,21 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.Ingest
+import graft.storage.TxLogTable
 
 /** Structured-Streaming form of the reference's hot path (entry point A,
   * SURVEY.md §3.1): MQTT-shaped messages -> parse -> infer -> registry
-  * filter -> narrow points -> checkpointed parquet sink.
+  * filter -> narrow points -> fenced ACID append ([[startDataPlane]]).
   *
   * The transforms are the SAME `Ingest` column expressions as the batch
   * path — one definition, two execution modes — which is the point of
   * building on Spark instead of a bespoke stream processor.
   *
-  * Delivery semantics: checkpoint + file-sink commit log give exactly-once,
-  * a deliberate upgrade over the reference's at-most-once in-memory queue
-  * (influx_service.py:54, 210-212; SURVEY.md §7.3).
+  * Delivery semantics: checkpoint + the tables' batch-id fences give
+  * exactly-once table effects, a deliberate upgrade over the reference's
+  * at-most-once in-memory queue (influx_service.py:54, 210-212; SURVEY.md
+  * §7.3).
   */
 object StreamingIngest {
 
@@ -30,43 +33,73 @@ object StreamingIngest {
         Ingest.inferTypes(Ingest.parseTopic(messages.filter(Ingest.dataTopicFilter))),
         registry))
 
-  /** R9 as a streaming sink: append to parquet partitioned by UTC date —
-    * the SAME layout PointStore documents for the batch store. Partitioning
-    * by device_id would create one directory per device per micro-batch
-    * (10^6 devices -> small-files explosion); a date partition gives
-    * time-range pruning (the dominant query pattern) while device
-    * selectivity comes from row-group min/max within the partition.
+  /** The service's data plane: ONE streaming query over the raw message
+    * log feeds every stateless sink, the way the reference runs parse ->
+    * filter -> infer -> write -> auto-create in one consumer loop
+    * (influx_service.py:438). Each micro-batch is parsed once and
+    * materialized once ([[materialized]]: one `localCheckpoint` job, which
+    * also collects the batch's dead-letter count and its distinct
+    * data-plane (device_id, transducer) keys), then drives four steps in
+    * this fixed order:
+    *
+    *   1. the points append, under the `(appId, batchId)` transaction
+    *      fence (narrow layout plus `ts_us`, the InfluxQL planner's time
+    *      column; sorted on (device_id, ts) within its input splits, one
+    *      file per split, no shuffle);
+    *   2. the dead-letter append — unroutable messages with their reason,
+    *      kept replayable where the reference swallows them in a bare
+    *      except (influx_service.py:114-119) — under the same fence;
+    *   3. `autoCreate` of the batch's registered keys (R14);
+    *   4. `fanOut` of the registered points (subscriptions).
+    *
+    * All four read one snapshot of `registered`, the live device registry
+    * (R6). Membership is decided on the driver against the batch's own
+    * distinct keys, and the points read the materialized rows through an
+    * IN-list of the batch's registered devices: no registry broadcast, and
+    * a step with nothing to do (no registered point, no dead letter) runs
+    * no job.
+    *
+    * A micro-batch replayed after a crash commits nothing to either table
+    * (both fence on its batch id); the side effects re-run at least once:
+    * auto-create skips the keys its catalog already holds, the fan-out
+    * re-publishes. A failing side effect fails the batch only after the
+    * fenced commits before it.
     */
-  def startParquetSink(points: DataFrame, path: String, checkpoint: String,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    points
-      .withColumn("p_date", to_date(col("ts")))
-      .writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("p_date")
-      .trigger(trigger)
-      .start()
-
-  /** Dead-letter sink: unroutable messages (neither data-plane nor
-    * control-plane topic shape) quarantined to their own checkpointed
-    * parquet table with the reason attached — the reference swallows them
-    * in a bare except (influx_service.py:114-119), which at fleet scale
-    * means silent data loss with no way to replay after a routing fix.
-    * Same exactly-once guarantees as the main sink.
-    */
-  def startDeadLetterSink(messages: DataFrame, controlTopic: String,
-                          path: String, checkpoint: String,
-                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    messages
-      .filter(Ingest.isDeadLetter(controlTopic))
-      .withColumn("dl_reason", lit("unroutable_topic"))
-      .writeStream
-      .format("parquet")
-      .option("path", path)
+  def startDataPlane(messages: DataFrame, controlTopic: String,
+                     points: TxLogTable, deadLetters: TxLogTable,
+                     registered: () => Set[String], appId: String, checkpoint: String,
+                     trigger: Trigger = Trigger.AvailableNow(),
+                     autoCreate: Seq[(String, String)] => Unit = _ => (),
+                     fanOut: DataFrame => Unit = _ => ()): StreamingQuery =
+    messages.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
+      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+        val devices = registered()
+        val txn = Some((appId, batchId))
+        val parsed = Ingest.inferTypes(Ingest.parseTopic(batch0))
+          .withColumn("data", Ingest.dataTopicFilter)
+        materialized(parsed,
+          count_if(Ingest.isDeadLetter(controlTopic)).as("dead"),
+          collect_set(when(col("data"), struct(col("device_id"), col("transducer")))).as("keys")) {
+          (batch, m) =>
+            val keys = m("keys").asInstanceOf[Seq[Row]]
+              .map(r => (r.getString(0), r.getString(1))).filter(k => devices(k._1))
+            val live = Ingest.narrowPoints(batch.filter(col("data") &&
+                col("device_id").isin(keys.map(_._1).distinct: _*)))
+              .withColumn("ts_us", unix_micros(col("ts")))
+            if (keys.nonEmpty)
+              points.append(live.sortWithinPartitions("device_id", "ts"), txn)
+            if (m("dead").asInstanceOf[Long] > 0)
+              deadLetters.append(batch.filter(Ingest.isDeadLetter(controlTopic))
+                .select(col("topic"), col("payload"), col("ts"),
+                  lit("unroutable_topic").as("dl_reason")), txn)
+            if (keys.nonEmpty) {
+              autoCreate(keys)
+              fanOut(live)
+            }
+        }
+      }
       .start()
 
   /** Streaming MERGE sink: foreachBatch upsert into a [[graft.storage.TxLogTable]]
@@ -84,15 +117,14 @@ object StreamingIngest {
     * micro-batch — without it, per-batch write cost grows with the
     * table's own history, O(n²) over the stream's life.
     *
-    * Each micro-batch runs its plan ONCE: one `localCheckpoint` job
-    * materializes it (for a stateful query — a continuous query's
-    * watermarked aggregate — that is the one state-store commit) and counts
-    * its rows on the side through an [[org.apache.spark.sql.Observation]],
-    * so an empty batch (a watermark-only batch that closes no bucket) runs
-    * exactly that job. `perBatch` and the merge read the materialized rows,
-    * which are released once the merge commits.
+    * Each micro-batch runs its plan ONCE ([[materialized]]; for a stateful
+    * query — a continuous query's watermarked aggregate — that one job is
+    * the state-store commit), so an empty batch (a watermark-only batch
+    * that closes no bucket) runs exactly that job. `perBatch` and the merge
+    * read the materialized rows; they and any checkpoint in the frame
+    * `perBatch` returns are released once the merge commits.
     */
-  def startMergeSink(updates: DataFrame, table: graft.storage.TxLogTable,
+  def startMergeSink(updates: DataFrame, table: TxLogTable,
                      keys: Seq[String], orderCol: String, checkpoint: String,
                      trigger: Trigger = Trigger.AvailableNow(),
                      perBatch: DataFrame => DataFrame = identity,
@@ -101,56 +133,41 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, _: Long) =>
-        val rows = new org.apache.spark.sql.Observation()
-        val batch = batch0.observe(rows, count(lit(1)).as("n")).localCheckpoint()
-        try {
+        materialized(batch0, count(lit(1)).as("n")) { (batch, m) =>
           // perBatch may enrich the upsert set against CURRENT table state
           // (e.g. a continuous query's fill() densifying the gaps between
           // newly closed buckets) — it must be deterministic given (batch,
           // table) so an at-least-once replay still converges
-          if (rows.get("n").asInstanceOf[Long] > 0) {
+          if (m("n").asInstanceOf[Long] > 0) {
             val upserts = perBatch(batch)
-            graft.storage.TxLogTable.retryOnConflict() {
+            try TxLogTable.retryOnConflict() {
               table.merge(upserts, keys, Some(orderCol), rangeCol); ()
-            }
+            } finally release(upserts)
           }
-        } finally batch.queryExecution.logical.collectFirst {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
         }
-        ()
       }
       .start()
 
-  /** Streaming ingest into an ACID point table: each micro-batch is ONE
-    * Spark write and at most one [[graft.storage.TxLogTable]] commit. The
-    * batch is sorted on (device_id, ts) within its input splits — one file
-    * per split, no shuffle. A live batch of a few hundred rows is one row
-    * group spanning every device in it, so a device probe skips nothing
-    * inside these files (compaction concatenates, it does not re-sort).
-    * The append carries a batch-id
-    * transaction fence: a batch replayed after a crash is a no-op
-    * (exactly-once table effect) and runs no write. Emptiness is decided
-    * from the written files' footers ([[graft.storage.TxLogTable.appendIfRows]]),
-    * never by an `isEmpty` job that would re-execute the batch's plan: a
-    * batch whose rows `perBatch` drops entirely commits nothing.
+  /** Runs `body` on `batch` materialized once — one `localCheckpoint` job,
+    * which also computes `metric +: metrics` through an [[Observation]]
+    * (handed to `body` keyed by the metrics' names) — and releases the
+    * rows when `body` returns or throws.
     */
-  def startAppendSink(points: DataFrame, table: graft.storage.TxLogTable,
-                      appId: String, checkpoint: String,
-                      trigger: Trigger = Trigger.AvailableNow(),
-                      perBatch: DataFrame => DataFrame = identity): StreamingQuery =
-    points.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // perBatch re-resolves batch-time state (e.g. the CURRENT registry
-        // dimension for the semi-join — stream-static joins freeze the
-        // static side at stream definition, exactly what a live registry
-        // must not do)
-        table.appendIfRows(perBatch(batch).sortWithinPartitions("device_id", "ts"),
-          txn = Some((appId, batchId)))
-        ()
-      }
-      .start()
+  private def materialized(batch: DataFrame, metric: Column, metrics: Column*)(
+      body: (DataFrame, Map[String, Any]) => Unit): Unit = {
+    val observed = new Observation()
+    val rows = batch.observe(observed, metric, metrics: _*).localCheckpoint()
+    try body(rows, observed.get) finally release(rows)
+  }
+
+  /** Unpersists every checkpointed or cached RDD `df` reads directly (a
+    * `localCheckpoint`'s rows): a per-batch checkpoint otherwise stays
+    * cached until the driver happens to collect it.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
 
   /** R8 as a STREAMING view: the wide (device, ts) -> {transducer: num}
     * layout maintained incrementally — the reference double-writes this

@@ -6,29 +6,38 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.AutoCreate
+import graft.storage.TxLogTable
+import graft.streaming.{AutoCreate, StreamingIngest}
 
 class AutoCreateSpec extends SparkSuite {
   import spark.implicits._
 
   test("unseen keys: batch-local dedup + anti-join against catalog") {
-    val batch = Seq(("d1", "t1"), ("d1", "t1"), ("d1", "t2"), ("d2", "t1"))
-      .toDF("device_id", "transducer")
-    val catalog = Seq(("d1", "t1")).toDF("device_id", "transducer")
-    val unseen = AutoCreate.unseenKeys(batch, catalog)
-      .as[(String, String)].collect().toSet
-    assert(unseen == Set(("d1", "t2"), ("d2", "t1")))
+    val catalogPath = Files.createTempDirectory("autocreate_keys").toString + "/catalog"
+    Seq(("d1", "t1")).toDF("device_id", "transducer").write.parquet(catalogPath)
+    val created = Seq.newBuilder[(String, String)]
+    val autoCreate = AutoCreate(spark, catalogPath, create = (d, t) => created += ((d, t)))
+    autoCreate(Seq(("d1", "t1"), ("d1", "t1"), ("d1", "t2"), ("d2", "t1")))
+    val unseen = created.result()
+    assert(unseen.toSet == Set(("d1", "t2"), ("d2", "t1")) && unseen.size == 2, s"got $unseen")
   }
 
   test("streaming auto-create fires once per new key across micro-batches") {
     implicit val sq = spark.sqlContext
     val created = new ConcurrentLinkedQueue[(String, String)]()
-    val catalogPath = Files.createTempDirectory("autocreate_cat").toString + "/catalog"
+    val root = Files.createTempDirectory("autocreate_cat").toString
+    val catalogPath = root + "/catalog"
     val cp = Files.createTempDirectory("autocreate_cp").toString
     val in = MemoryStream[(String, String)]
-    val points = in.toDF().toDF("device_id", "transducer")
-    val q = AutoCreate.start(points, catalogPath, cp,
-      create = (d, t) => created.add((d, t)), trigger = Trigger.ProcessingTime(0))
+    val msgs = in.toDF().toDF("device_id", "transducer")
+      .select(concat_ws("/", lit("openchirp/device"), col("device_id"), col("transducer")).as("topic"),
+        lit("1.0").as("payload"), current_timestamp().as("ts"))
+    val q = StreamingIngest.startDataPlane(msgs, "openchirp/service/s/thing/events",
+      points = new TxLogTable(spark, s"$root/points"),
+      deadLetters = new TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => Set("d1", "d2"), appId = "autocreate-test", checkpoint = cp,
+      trigger = Trigger.ProcessingTime(0),
+      autoCreate = AutoCreate(spark, catalogPath, create = (d, t) => created.add((d, t))))
     try {
       in.addData(("d1", "temp"), ("d1", "temp"), ("d1", "hum"))
       q.processAllAvailable()

@@ -51,6 +51,18 @@ class InfluxHttpSpec extends SparkSuite {
     assert(r.headers().firstValue("X-Influxdb-Version").isPresent)
   }
 
+  test("/query on a database with no committed points answers 200 with no series") {
+    assert(post("/query", s"q=${enc("CREATE DATABASE fresh")}",
+      "application/x-www-form-urlencoded").statusCode() == 200)
+    val r = get(s"/query?db=fresh&q=${enc("SELECT count(num) FROM temp")}")
+    assert(r.statusCode() == 200, r.body())
+    assert(r.body() == """{"results": [{"statement_id": 0, "series": []}]}""", r.body())
+    // a database with points still names the typo
+    val typo = get(s"/query?db=tele&q=${enc("SELECT count(num) FROM temp")}")
+    assert(typo.statusCode() == 200 && typo.body().contains("unknown field or tag 'num'"),
+      typo.body())
+  }
+
   test("/query returns the 1.x results envelope; epoch renders time units") {
     val r = get(s"/query?db=tele&epoch=u&q=${enc("SELECT mean(value) FROM temp")}")
     assert(r.statusCode() == 200, r.body())

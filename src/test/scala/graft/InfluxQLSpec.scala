@@ -1657,9 +1657,24 @@ class InfluxQLSpec extends SparkSuite {
     assert(cat.run("SELECT count(value) FROM temp").collect().isEmpty)
   }
 
+  test("SELECT on a database with no committed points returns no series; a typo once it has points fails") {
+    val root = java.nio.file.Files.createTempDirectory("empty_db").toString
+    val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "mq")
+    cat.run("CREATE DATABASE mq")
+    // the state of an MQTT database before the data plane's first commit
+    assert(cat.run("SELECT count(num) FROM temp").collect().isEmpty)
+    assert(cat.run("SELECT mean(num) FROM temp WHERE device_id = 'd1' GROUP BY time(1m), device_id")
+      .collect().isEmpty)
+    // an unknown database still fails
+    assert(intercept[IllegalArgumentException](cat.run("SELECT count(num) FROM nodb..temp"))
+      .getMessage.contains("database not found"))
+    cat.writePoints("mq", Seq(("a", "temp", 1L, 1.0)).toDF("device", "transducer", "ts_us", "value"))
+    assert(cat.run("SELECT count(value) FROM temp").as[Long].collect().toSeq == Seq(1L))
+    assert(intercept[IllegalArgumentException](cat.run("SELECT count(num) FROM temp"))
+      .getMessage.contains("unknown field or tag 'num'"))
+  }
+
   test("subscriptions: streaming fan-out publishes line protocol per mode") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.influxql.Subscriptions
     val root = java.nio.file.Files.createTempDirectory("subs_stream").toString
     val tag = java.util.UUID.randomUUID().toString.take(8)
@@ -1667,15 +1682,11 @@ class InfluxQLSpec extends SparkSuite {
     cat.run("CREATE DATABASE tele")
     cat.run(s"CREATE SUBSCRIPTION fanAll ON tele.autogen DESTINATIONS ALL 'sub$tag/a', 'sub$tag/b'")
     cat.run(s"CREATE SUBSCRIPTION fanAny ON tele.autogen DESTINATIONS ANY 'sub$tag/c', 'sub$tag/d'")
-    val in = MemoryStream[(String, String, Long, Double)]
     val p1 = ("a", "temp", 5L, 1.5)
     val p2 = ("b", "temp", 6L, 2.5)
-    in.addData(p1, p2)
     val before = graft.streaming.MqttBus.size
-    val q = Subscriptions.start(
-      in.toDF.toDF("device", "transducer", "ts_us", "value"), "tele", root,
-      checkpoint = s"$root/_ck_subs")
-    q.awaitTermination()
+    Subscriptions.fanOut(
+      Seq(p1, p2).toDF("device", "transducer", "ts_us", "value"), "tele", root)
     val got = graft.streaming.MqttBus.slice(before, graft.streaming.MqttBus.size)
       .filter(_._1.startsWith(s"sub$tag/"))
       .map(m => (m._1, new String(m._2, "UTF-8")))
@@ -1695,15 +1706,13 @@ class InfluxQLSpec extends SparkSuite {
   }
 
   test("subscriptions: maxRowsPerBatch bounds a slow destination's stall; drops are counted") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.influxql.Subscriptions
     val root = java.nio.file.Files.createTempDirectory("subs_cap").toString
     val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
     cat.run("CREATE DATABASE tele")
     cat.run("CREATE SUBSCRIPTION slow ON tele.autogen DESTINATIONS ALL 'slow/x'")
-    val in = MemoryStream[(String, String, Long, Double)]
-    in.addData((0 until 50).map(i => ("d", "m", i.toLong, i.toDouble)): _*)
+    val batch = (0 until 50).map(i => ("d", "m", i.toLong, i.toDouble))
+      .toDF("device", "transducer", "ts_us", "value")
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val before = graft.streaming.MqttBus.size
     val dropsBefore = Subscriptions.droppedRows.get()
@@ -1711,14 +1720,12 @@ class InfluxQLSpec extends SparkSuite {
     // would hold its task 5 s; the cap bounds it to 3 publishes (count
     // through the bus — executor-side counters don't survive closure
     // serialization, the bus is the JVM-global witness)
-    val q = Subscriptions.start(
-      in.toDF.toDF("device", "transducer", "ts_us", "value"), "tele", root,
+    Subscriptions.fanOut(batch, "tele", root,
       publishFactory = () => (dest, payload) => {
         Thread.sleep(100)
         graft.streaming.MqttBus.publish(s"$tag/$dest", payload)
       },
-      checkpoint = s"$root/_ck", maxRowsPerBatch = Some(3))
-    q.awaitTermination()
+      maxRowsPerBatch = Some(3))
     val published = graft.streaming.MqttBus
       .slice(before, graft.streaming.MqttBus.size)
       .count(_._1.startsWith(s"$tag/"))

@@ -141,12 +141,16 @@ class LocalFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = tmp("lf_restart")
     val table = new graft.storage.TxLogTable(spark, s"$root/points")
     val in = MemoryStream[(String, Long, Double)]
-    val points = in.toDF().toDF("device_id", "ts_us", "num")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
+    val msgs = in.toDF().toDF("device_id", "ts_us", "num")
+      .select(concat(lit("openchirp/device/"), col("device_id"), lit("/temp")).as("topic"),
+        col("num").cast("string").as("payload"), timestamp_micros(col("ts_us")).as("ts"))
     val cp = tmp("lf_restart_cp")
     val key = "spark.sql.streaming.checkpointFileManagerClass"
-    def start() = graft.streaming.StreamingIngest.startAppendSink(points, table,
-      appId = "lf-restart", checkpoint = cp, trigger = Trigger.ProcessingTime(0))
+    def start() = graft.streaming.StreamingIngest.startDataPlane(msgs,
+      "openchirp/service/s/thing/events", points = table,
+      deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => Set("d1", "d2", "d3"), appId = "lf-restart", checkpoint = cp,
+      trigger = Trigger.ProcessingTime(0))
     val commits = new java.io.File(s"$cp/commits")
     def run(body: org.apache.spark.sql.streaming.StreamingQuery => Unit): Unit = {
       val q = start()

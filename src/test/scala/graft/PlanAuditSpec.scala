@@ -355,7 +355,7 @@ class PlanAuditSpec extends SparkSuite {
     import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -363,7 +363,6 @@ class PlanAuditSpec extends SparkSuite {
     implicit val sq = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("plan_sink").toString
     val table = new graft.storage.TxLogTable(spark, s"$root/points")
-    val registry = Seq("d1", "d2").toDF("device_id")
     val in = MemoryStream[(String, Long, Double)](2)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val l = new QueryExecutionListener {
@@ -371,10 +370,14 @@ class PlanAuditSpec extends SparkSuite {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    val q = graft.streaming.StreamingIngest.startAppendSink(
-      in.toDF().toDF("device_id", "ts_us", "num").withColumn("ts", timestamp_micros(col("ts_us"))),
-      table, appId = "plan-sink", checkpoint = s"$root/cp", trigger = Trigger.ProcessingTime(0),
-      perBatch = b => graft.ingest.Ingest.registryFilter(b, registry))
+    val q = graft.streaming.StreamingIngest.startDataPlane(
+      in.toDF().toDF("device_id", "ts_us", "num")
+        .select(concat(lit("openchirp/device/"), col("device_id"), lit("/temp")).as("topic"),
+          col("num").cast("string").as("payload"), timestamp_micros(col("ts_us")).as("ts")),
+      "openchirp/service/s/thing/events", points = table,
+      deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => Set("d1", "d2"), appId = "plan-sink", checkpoint = s"$root/cp",
+      trigger = Trigger.ProcessingTime(0))
     try {
       in.addData(("d2", 2L, 1.0), ("d1", 3L, 2.0), ("d3", 1L, 3.0), ("d1", 1L, 4.0))
       q.processAllAvailable()
@@ -395,9 +398,9 @@ class PlanAuditSpec extends SparkSuite {
     assert(writes.size == 1, s"expected the batch's one write, got ${writes.size}")
     val w = writes.head
     val exchanges = H.collect(w.child) { case e: Exchange => e }
-    // the registry broadcast is the only exchange: no range shuffle
-    assert(exchanges.forall(_.isInstanceOf[BroadcastExchangeExec]),
-      s"the sink's write shuffles:\n$w")
+    // no range shuffle, and the registry gate is an IN-list of the
+    // batch's registered devices: not even a broadcast
+    assert(exchanges.isEmpty, s"the sink's write exchanges:\n$w")
     assert(H.collect(w.child) { case s: SortExec if !s.global => s }.size == 1,
       s"the sink's write is not sorted within partitions:\n$w")
   }

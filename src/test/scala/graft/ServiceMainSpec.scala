@@ -14,7 +14,9 @@ import graft.streaming.{InProcessTransport, MqttBus}
 class ServiceMainSpec extends SparkSuite {
   import spark.implicits._
 
-  /** Spark jobs one data-only micro-batch of the points query may run. */
+  /** Spark jobs one data-only micro-batch of the data plane may run, all
+    * four of its sinks together.
+    */
   val DataJobsPerBatch = 3.0
 
   test("composed service: CDC registers, data ingests ACID + queryable, junk dead-letters, restart resumes") {
@@ -74,7 +76,7 @@ class ServiceMainSpec extends SparkSuite {
     assert(cat.run("SELECT count(num) FROM temp").as[Long].collect().toSeq == Seq(1L))
     assert(cat.run("SHOW MEASUREMENTS").as[String].collect().toSeq == Seq("mode", "temp"))
     // junk is quarantined, not swallowed
-    val dl = spark.read.parquet(s"$dir/dead_letter").select("topic")
+    val dl = new graft.storage.TxLogTable(spark, s"$dir/dead_letters").read().select("topic")
       .as[String].collect().toSeq
     assert(dl == Seq("not/a/real/route/x"), s"got $dl")
     // auto-create cataloged the unseen keys once
@@ -164,13 +166,14 @@ class ServiceMainSpec extends SparkSuite {
       val dataBatches = data.recentProgress.count(_.numInputRows > 0)
       val perBatch = jobs.getOrDefault(data.runId.toString, 0).toDouble / dataBatches
       assert(dataBatches >= 2, s"expected several data micro-batches, got $dataBatches")
-      info(f"points query: $perBatch%.2f jobs per micro-batch over $dataBatches batches")
-      // the points query's own work is the one write of the append (its
-      // emptiness is read off the written footers on the driver) — no
-      // emptiness probe, no range shuffle, no stats index, no footer
-      // inference, no registry scan
+      info(f"data plane: $perBatch%.2f jobs per micro-batch over $dataBatches batches")
+      // the data plane's work is one materializing job and the one write
+      // of the points append, plus the catalog append on the batch that
+      // first sees a key; no dead letter and no subscription arrive here,
+      // so their steps run nothing — no emptiness probe, no range
+      // shuffle, no registry broadcast, no catalog read or anti-join
       assert(perBatch <= DataJobsPerBatch,
-        f"points query ran $perBatch%.1f jobs per micro-batch (budget $DataJobsPerBatch)")
+        f"the data plane ran $perBatch%.1f jobs per micro-batch (budget $DataJobsPerBatch)")
       assert(control.recentProgress.forall(p => !p.durationMs.containsKey("addBatch")),
         "the control query ran a micro-batch with no control event published")
       assert(!jobs.containsKey(control.runId.toString), "the control query ran a Spark job")
@@ -215,6 +218,138 @@ class ServiceMainSpec extends SparkSuite {
       assert(!forwarded.exists(_.contains("value=13.5")),
         s"a device deleted after start is still forwarded: $forwarded")
       assert(cat.points("oc").select("num").as[Double].collect().toSeq == Seq(12.5))
+    } finally ServiceMain.stop(h)
+  }
+
+  test("composed service: a data-plane batch replayed after a crash adds no point, dead letter or catalog row") {
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_crash").toString
+    val conf = Map("service_id" -> "svccrash", "data_dir" -> dir, "influx_database" -> "oc")
+    def runOnce(): Unit = {
+      val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+        publish = (_, _) => (), trigger = Trigger.AvailableNow())
+      try h.queries.foreach(q => assert(q.awaitTermination(120000)))
+      finally ServiceMain.stop(h)
+    }
+    MqttBus.publish(ServiceMain.eventsTopic("svccrash"),
+      """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
+    runOnce()
+    MqttBus.publish("openchirp/device/d1/temp", "21.5")
+    MqttBus.publish("openchirp/device/d1/hum", "40")
+    MqttBus.publish("openchirp/device/d9/temp", "1.0") // unregistered
+    MqttBus.publish("not/a/real/route/x", "junk")      // dead letter
+    runOnce()
+    val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
+    val deadLetters = new graft.storage.TxLogTable(spark, s"$dir/dead_letters")
+    def catalogRows = spark.read.parquet(s"$dir/transducer_catalog").count()
+    val (version, nPoints, nDead, nKeys) =
+      (cat.pointsTable("oc").version, cat.points("oc").count(), deadLetters.read().count(), catalogRows)
+    assert(version.contains(0L) && nPoints == 2L && nDead == 1L && nKeys == 2L,
+      s"version $version, $nPoints points, $nDead dead letters, $nKeys catalog rows")
+
+    // crash after the batch's effects but before its commit marker: the
+    // restart re-runs the batch from its offset log
+    val commits = new java.io.File(s"$dir/_checkpoints/points/commits")
+    val last = commits.listFiles.map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    runOnce()
+    assert(new java.io.File(commits, last.toString).exists(), "the restart did not re-run the batch")
+    assert(cat.pointsTable("oc").version == version, "the replayed batch committed points again")
+    assert(cat.points("oc").count() == nPoints)
+    assert(deadLetters.read().count() == nDead, "the replayed batch dead-lettered again")
+    assert(catalogRows == nKeys, "the replayed batch cataloged its keys again")
+  }
+
+  test("composed service: Handles.queries keeps the layout perfbench reads") {
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_layout").toString
+    val conf = Map("service_id" -> "svclayout", "data_dir" -> dir,
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+    val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
+    cat.run("CREATE DATABASE oc")
+    cat.run("CREATE CONTINUOUS QUERY down ON oc BEGIN " +
+      "SELECT count(num) AS c INTO cnt FROM temp GROUP BY time(1s) END")
+    val registry = new graft.storage.TxLogTable(spark, s"$dir/registry")
+    val cnt = new graft.storage.TxLogTable(spark, s"$dir/oc/cnt")
+    // each phase keeps ONE index of a fresh service alive, so only the
+    // query at that index can have made the effect the phase checks
+    def only(idx: Seq[Int])(body: Seq[org.apache.spark.sql.streaming.StreamingQuery] => Unit): Unit = {
+      val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+        publish = (_, _) => (), trigger = Trigger.ProcessingTime(0))
+      try {
+        assert(h.queries.size == 4, "control, data plane, status and one query per CQ")
+        h.queries.indices.filterNot(idx.contains).foreach(i => h.queries(i).stop())
+        body(idx.map(h.queries))
+      } finally ServiceMain.stop(h)
+    }
+    // index 0 is the control query: an event lands in the registry
+    only(Seq(0)) { qs =>
+      MqttBus.publish(ServiceMain.eventsTopic("svclayout"),
+        """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
+      qs.head.processAllAvailable()
+      assert(registry.version.nonEmpty, "index 0 did not apply the control event")
+    }
+    // index 1 is the data plane: a point advances the points table version
+    val t0 = (System.currentTimeMillis() / 1000L + 3600L) * 1000000L
+    only(Seq(1)) { qs =>
+      MqttBus.publish("openchirp/device/d1/temp", "1.5".getBytes("UTF-8"), t0)
+      qs.head.processAllAvailable()
+      assert(cat.pointsTable("oc").version.contains(0L), "index 1 did not append the point")
+    }
+    // the CQ queries come last: a closed bucket lands in the CQ target
+    only(Seq(3)) { qs =>
+      MqttBus.publish("openchirp/device/d1/temp", "2.5".getBytes("UTF-8"), t0 + 2000000L)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (cnt.version.isEmpty && System.nanoTime() < deadline) {
+        qs.head.processAllAvailable(); Thread.sleep(100)
+      }
+      assert(cnt.version.nonEmpty, "the last index did not run the continuous query")
+    }
+    assert(cat.pointsTable("oc").version.contains(0L), "only index 1 appends points")
+  }
+
+  test("composed service: a FILL(linear) CQ leaves no cached RDD behind its micro-batches") {
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_rdds").toString
+    val conf = Map("service_id" -> "svcrdd", "data_dir" -> dir,
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+    val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
+    cat.run("CREATE DATABASE oc")
+    cat.run("CREATE CONTINUOUS QUERY down ON oc BEGIN SELECT mean(num) AS m " +
+      "INTO cnt FROM temp GROUP BY time(1s), device_id FILL(linear) END")
+    MqttBus.publish(ServiceMain.eventsTopic("svcrdd"),
+      """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
+    MqttBus.publish(ServiceMain.eventsTopic("svcrdd"),
+      """{"action":"new","thing":{"id":"d2","transducers":[{"name":"temp"}]}}""")
+    val boot = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      publish = (_, _) => (), trigger = Trigger.AvailableNow())
+    try boot.queries.foreach(q => assert(q.awaitTermination(120000)))
+    finally ServiceMain.stop(boot)
+
+    val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      publish = (_, _) => (), trigger = Trigger.ProcessingTime(0))
+    // each micro-batch closes the previous one's buckets; d2 reports every
+    // other second, so its gaps interpolate retroactively (the donor path)
+    val t0 = (System.currentTimeMillis() / 1000L + 3600L) * 1000000L
+    def batches(from: Int, until: Int): Unit = (from until until).foreach { i =>
+      val ts = t0 + i * 2000000L
+      MqttBus.publish("openchirp/device/d1/temp", s"$i.5".getBytes("UTF-8"), ts)
+      if (i % 2 == 0) MqttBus.publish("openchirp/device/d2/temp", s"$i.0".getBytes("UTF-8"), ts)
+      h.queries.foreach(_.processAllAvailable())
+    }
+    try {
+      val n = 4
+      batches(0, n)
+      val afterN = spark.sparkContext.getPersistentRDDs.keySet
+      batches(n, 2 * n)
+      val after2N = spark.sparkContext.getPersistentRDDs.keySet
+      val cnt = new graft.storage.TxLogTable(spark, s"$dir/oc/cnt")
+      assert(cnt.version.nonEmpty && cnt.read().count() > 2L * n,
+        "the CQ must have closed and filled buckets")
+      assert((after2N -- afterN).isEmpty,
+        s"cached RDDs grew from ${afterN.size} after $n micro-batches to ${after2N.size} " +
+          s"after ${2 * n}: ${(after2N -- afterN).toSeq.sorted.map(spark.sparkContext.getPersistentRDDs)}")
     } finally ServiceMain.stop(h)
   }
 

@@ -734,50 +734,17 @@ class StreamingSpec extends SparkSuite {
     } finally q2.stop()
   }
 
-  test("end-to-end: MQTT source -> ingest pipeline -> checkpointed parquet sink") {
-    MqttBus.clear()
-    MqttBus.publish("openchirp/device/d1/Temp", "21.5")
-    MqttBus.publish("openchirp/device/d1/Mode", "auto")
-    MqttBus.publish("openchirp/device/d9/temp", "1.0")              // unregistered device
-    MqttBus.publish("openchirp/service/s1/thing/events", "{}")      // control plane
-    val registry = Seq("d1").toDF("device_id")
-    val msgs = spark.readStream
-      .format("graft.streaming.MqttLikeSource")
-      .option("topics", "#")
-      .load()
-      .withColumn("payload", col("payload").cast("string"))
-    val out = tmp("e2e_out"); val cp = tmp("e2e_cp")
-    val q = StreamingIngest.startParquetSink(
-      StreamingIngest.pointsStream(msgs, registry), out, cp,
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      q.processAllAvailable()
-      MqttBus.publish("openchirp/device/d1/ok", "true") // second micro-batch
-      q.processAllAvailable()
-      val rows = spark.read.parquet(out)
-        .select("device_id", "transducer", "num", "bool", "str").collect()
-        .map(r => (r.getString(0), r.getString(1), Option(r.get(2)), Option(r.get(3)), Option(r.get(4))))
-        .toSet
-      assert(rows == Set(
-        ("d1", "temp", Some(21.5), None, None),
-        ("d1", "mode", None, None, Some("auto")),
-        ("d1", "ok", None, Some(true), None)))
-      // layout: date-partitioned (PointStore's documented layout), never
-      // per-device directories (small-files explosion at 10^6 devices)
-      val partDirs = new java.io.File(out).listFiles
-        .filter(f => f.isDirectory && !f.getName.startsWith("_")).map(_.getName)
-      assert(partDirs.nonEmpty && partDirs.forall(_.startsWith("p_date=")))
-    } finally q.stop()
-  }
-
   test("dead-letter sink: unroutable messages quarantined with reason, none swallowed") {
     implicit val sq = spark.sqlContext
-    val out = tmp("dl_out"); val cp = tmp("dl_cp")
+    val root = tmp("dl_out")
+    val deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters")
     val in = MemoryStream[(String, String, Long)]
     val msgs = in.toDF().toDF("topic", "payload", "ts_us")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = StreamingIngest.startDeadLetterSink(msgs,
-      "openchirp/service/svc1/thing/events", out, cp, Trigger.ProcessingTime(0))
+    val q = StreamingIngest.startDataPlane(msgs, "openchirp/service/svc1/thing/events",
+      points = new graft.storage.TxLogTable(spark, s"$root/points"), deadLetters = deadLetters,
+      registered = () => Set("dev1"), appId = "dl-test", checkpoint = tmp("dl_cp"),
+      trigger = Trigger.ProcessingTime(0))
     try {
       in.addData(
         ("openchirp/device/dev1/temp", "21.5", us("2024-01-01 00:00:01")),   // data-plane
@@ -785,7 +752,7 @@ class StreamingSpec extends SparkSuite {
         ("noise/garbage", "x", us("2024-01-01 00:00:03")),                   // dead letter
         ("openchirp/device/too/many/segments", "y", us("2024-01-01 00:00:04"))) // dead letter
       q.processAllAvailable()
-      val dl = spark.read.parquet(out).select("topic", "dl_reason")
+      val dl = deadLetters.read().select("topic", "dl_reason")
         .as[(String, String)].collect().toSet
       assert(dl == Set(("noise/garbage", "unroutable_topic"),
         ("openchirp/device/too/many/segments", "unroutable_topic")))
@@ -822,15 +789,16 @@ class StreamingSpec extends SparkSuite {
     implicit val sq = spark.sqlContext
     val root = tmp("append_sink")
     val table = new graft.storage.TxLogTable(spark, s"$root/points")
-    val registry = Seq("dev01", "dev02", "dev03").toDF("device_id")
     // two input splits per batch: the sink writes one file per split
     val in = MemoryStream[(String, Long, Double)](2)
-    val points = in.toDF().toDF("device_id", "ts_us", "num")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
+    val msgs = in.toDF().toDF("device_id", "ts_us", "num")
+      .select(concat(lit("openchirp/device/"), col("device_id"), lit("/temp")).as("topic"),
+        col("num").cast("string").as("payload"), timestamp_micros(col("ts_us")).as("ts"))
     val cp = tmp("append_sink_cp")
-    def start() = StreamingIngest.startAppendSink(points, table,
-      appId = "append-sink-test", checkpoint = cp, trigger = Trigger.ProcessingTime(0),
-      perBatch = b => graft.ingest.Ingest.registryFilter(b, registry))
+    def start() = StreamingIngest.startDataPlane(msgs, "openchirp/service/s/thing/events",
+      points = table, deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => Set("dev01", "dev02", "dev03"), appId = "append-sink-test",
+      checkpoint = cp, trigger = Trigger.ProcessingTime(0))
     def dataDirs = new java.io.File(s"$root/points").listFiles.count(_.getName.startsWith("d-"))
     val q = start()
     try {
@@ -841,8 +809,8 @@ class StreamingSpec extends SparkSuite {
         ("dev01", us("2024-01-01 00:00:00"), 6.0), ("dev02", us("2024-01-01 00:00:02"), 7.0))
       q.processAllAvailable()
       assert(table.version.contains(0L) && dataDirs == 1)
-      // every row of this batch is unregistered: the write is discarded,
-      // the version stays, and no new dir is left behind
+      // every row of this batch is unregistered: nothing is written, the
+      // version stays, and no new dir is left behind
       in.addData(("ghost", us("2024-01-02 00:00:01"), 1.0), ("ghost2", us("2024-01-02 00:00:02"), 2.0))
       q.processAllAvailable()
       assert(table.version.contains(0L), s"an all-unregistered batch committed: ${table.version}")
@@ -1063,24 +1031,6 @@ class StreamingSpec extends SparkSuite {
       val closed = spark.table("sess_out").select("n").as[Long].collect().sorted
       assert(closed.contains(2L)) // the two-event session closed with n=2
     } finally q.stop()
-  }
-
-  test("exactly-once file sink: restart from checkpoint does not duplicate") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[(String, String, Long)]
-    val msgs = in.toDF().toDF("topic", "payload", "ts_us")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val registry = Seq("d1").toDF("device_id")
-    val out = tmp("sink_out"); val cp = tmp("sink_cp")
-    val points = StreamingIngest.pointsStream(msgs, registry)
-    val q1 = StreamingIngest.startParquetSink(points, out, cp, Trigger.ProcessingTime(0))
-    in.addData(("openchirp/device/d1/t", "1.0", us("2024-01-01 00:00:01")))
-    q1.processAllAvailable(); q1.stop()
-    val q2 = StreamingIngest.startParquetSink(points, out, cp, Trigger.ProcessingTime(0))
-    in.addData(("openchirp/device/d1/t", "2.0", us("2024-01-01 00:00:02")))
-    q2.processAllAvailable(); q2.stop()
-    val vals = spark.read.parquet(out).select("num").as[Double].collect().sorted
-    assert(vals.toSeq == Seq(1.0, 2.0))
   }
 
   test("streaming image dedup-at-ingest: each batch probes, then folds into the persisted index") {

@@ -739,27 +739,22 @@ class TxLogTableSpec extends SparkSuite {
     assert(onDisk == n + 1, s"$onDisk data dirs on disk for ${n + 1} appends")
   }
 
-  test("appendIfAt commits only on the version it read; appendIfRows drops empties") {
+  test("appendIfAt commits only on the version it read; a refused CAS leaves no dir") {
     val p = tmp()
     val t = new TxLogTable(spark, p)
+    def dirs = new java.io.File(p).listFiles.count(_.getName.startsWith("d-"))
     assert(t.appendIfAt(Seq((1L, "a")).toDF("k", "v"), None)) // v0
     assert(!t.appendIfAt(Seq((2L, "b")).toDF("k", "v"), None), "a stale first-commit CAS landed")
     val at = t.version
     // a fence-less commit (a DROP's delete) moves the version: a CAS
     // derived from the old version must not land on top of it
     t.delete(col("k") === 1L) // v1
+    val before = dirs
     assert(!t.appendIfAt(Seq((2L, "b")).toDF("k", "v"), at))
+    assert(dirs == before, "a refused CAS left its data dir behind")
     assert(t.appendIfAt(Seq((3L, "c")).toDF("k", "v"), t.version)) // v2
     assert(t.version.contains(2L) && t.read().as[(Long, String)].collect().toSeq == Seq((3L, "c")))
-    def dirs = new java.io.File(p).listFiles.count(_.getName.startsWith("d-"))
-    val before = dirs
-    // the refused CASes left no data dir behind; neither does an empty write
-    assert(t.appendIfRows(Seq.empty[(Long, String)].toDF("k", "v"), txn = Some(("s", 0L))).isEmpty)
-    assert(t.version.contains(2L) && dirs == before)
-    assert(t.appendIfRows(Seq((4L, "d")).toDF("k", "v"), txn = Some(("s", 0L))).contains(3L))
-    // the fence now holds seq 0: a replay writes and commits nothing
-    assert(t.appendIfRows(Seq((4L, "d")).toDF("k", "v"), txn = Some(("s", 0L))).isEmpty)
-    assert(t.version.contains(3L) && dirs == before + 1)
+    assert(dirs == before + 1)
   }
 
   test("txn fence: replayed append is a no-op, fence state is queryable") {
