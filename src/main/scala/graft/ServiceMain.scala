@@ -30,7 +30,17 @@ import graft.streaming._
   *        status topic (R10/R15, influx_service.py:310-322)
   *      plus one watermarked downsample stream per continuous query
   *      registered in [[graft.influxql.ContinuousQueries]] (InfluxDB's CQ
-  *      service runs registered CQs the same way), last
+  *      service runs registered CQs the same way), last.
+  *
+  *      Cadence: control and the data plane run on the service trigger
+  *      (`ProcessingTime(0)` live: a micro-batch as soon as data is there).
+  *      The derived queries run at their own time grain: status once per
+  *      `stats_interval` (the reference's publish timer), each CQ once per
+  *      GROUP BY time() interval or RESAMPLE EVERY (InfluxDB's CQ
+  *      schedule). The price is one more tick of lag: a window or bucket
+  *      closes at the watermark one tick sets and is written at the next,
+  *      so it is emitted at most two of its intervals (plus lateness)
+  *      after it ends.
   *   5. graceful shutdown on SIGTERM: stop queries, disconnect (R17)
   *
   * The points land in [[graft.influxql.InfluxCatalog]]'s layout
@@ -53,6 +63,9 @@ object ServiceMain {
     * `queries` holds the control query, the data plane, the status query
     * and then one query per continuous query; `perfbench` reads the data
     * plane's progress at index 1, and ServiceMainSpec pins the layout.
+    * Live, the first two run on the service trigger, status once per
+    * `stats_interval` and each CQ once per its GROUP BY interval (step 4),
+    * so `processAllAvailable()` on a derived query can wait out its tick.
     */
   final case class Handles(spark: SparkSession,
                            manager: MqttConnectionManager,
@@ -376,13 +389,16 @@ object ServiceMain {
     // status: the reference's 10-minute points-written/#devices payload
     // (PUBLISH_STATS_INTERVAL=600); the stateful status and CQ pipelines
     // key on the registry as of start — status is an operational gauge,
-    // not the gate the per-batch data plane is
+    // not the gate the per-batch data plane is. It ticks once per stats
+    // interval, the reference's timer period: on the service trigger it
+    // would run a micro-batch for every MQTT arrival.
+    val statsInterval = conf.getOrElse("stats_interval", "10 minutes")
     val statusPoints = StreamingIngest.pointsStream(msgs,
       RegistryMaintenance.activeDevices(spark, registryPath))
     val statusQ = reg(StatusPublisher.start(
-      StreamingIngest.statusCounts(statusPoints,
-        interval = conf.getOrElse("stats_interval", "10 minutes")),
-      statusTopic(serviceId), publish, cp("status"), trigger))
+      StreamingIngest.statusCounts(statusPoints, interval = statsInterval),
+      statusTopic(serviceId), publish, cp("status"),
+      if (trigger == Trigger.AvailableNow()) trigger else Trigger.ProcessingTime(statsInterval)))
 
     // registered continuous queries start with the service (InfluxDB runs
     // its CQ service the same way): each downsamples the registry-filtered

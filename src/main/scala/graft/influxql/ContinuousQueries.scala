@@ -46,10 +46,16 @@ object ContinuousQueries {
     * every write that consults the target set.
     */
   private[influxql] def targetOf(ddl: String): Option[String] =
+    selectOf(ddl).flatMap(_.into.filter(_ != ":MEASUREMENT"))
+
+  /** The inner SELECT of one registered CQ definition, or None if its
+    * stored DDL text does not parse.
+    */
+  private def selectOf(ddl: String): Option[InfluxQL.Query] =
     try {
       val p = new P(tokenize(ddl))
       while (!p.done && !p.kw("BEGIN")) p.next()
-      if (p.done) None else InfluxQL.parseQuery(p).into.filter(_ != ":MEASUREMENT")
+      if (p.done) None else Some(InfluxQL.parseQuery(p))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Cheap no-CQs fast path: a pure commit-log file probe, no Spark job —
@@ -188,6 +194,14 @@ object ContinuousQueries {
     * (checkpoint per CQ under `<root>/_checkpoints/cq_<db>_<name>`, so a
     * restart resumes each stream exactly-once). Returns (name, query)
     * handles; callers own stopping them.
+    *
+    * `trigger` = AvailableNow drains each CQ's backlog and stops (the
+    * `--once` maintenance run). Any other trigger starts the CQs live on
+    * InfluxDB 1.x's CQ schedule: each runs once per GROUP BY time()
+    * interval, or once per RESAMPLE EVERY where it says so. A bucket is
+    * written at the first tick after the watermark that closes it was
+    * set, so it lands at most two intervals (plus lateness) after it
+    * closes.
     */
   def startAll(spark: SparkSession, root: String, db: String,
                streamPoints: DataFrame, lateness: String = "1 minute",
@@ -197,9 +211,14 @@ object ContinuousQueries {
       .select("name", "query").as[(String, String)].collect().toSeq
       .sortBy(_._1)
       .map { case (name, ddl) =>
+        // RESAMPLE EVERY replaces this schedule inside startContinuousQuery
+        val schedule =
+          if (trigger == Trigger.AvailableNow()) trigger
+          else selectOf(ddl).flatMap(_.groupTimeUs)
+            .fold(trigger)(us => Trigger.ProcessingTime(math.max(1L, us / 1000L)))
         name -> InfluxQL.startContinuousQuery(streamPoints, ddl, root,
           checkpoint = s"$root/_checkpoints/cq_${db}_$name",
-          lateness = lateness, trigger = trigger)
+          lateness = lateness, trigger = schedule)
       }
   }
 }

@@ -36,7 +36,10 @@ object AutoCreate {
       val unseen = keys.distinct.filterNot(known)
       if (unseen.nonEmpty) {
         unseen.foreach(create.tupled)
-        unseen.toDF("device_id", "transducer").write.mode("append").parquet(catalogPath)
+        // one task, one part file: a local Seq would otherwise be split
+        // into up to defaultParallelism tasks and files per append
+        unseen.toDF("device_id", "transducer").coalesce(1)
+          .write.mode("append").parquet(catalogPath)
         known ++= unseen
       }
     }

@@ -22,6 +22,18 @@ class AutoCreateSpec extends SparkSuite {
     assert(unseen.toSet == Set(("d1", "t2"), ("d2", "t1")) && unseen.size == 2, s"got $unseen")
   }
 
+  test("an append of many unseen keys writes one part file") {
+    val catalogPath = Files.createTempDirectory("autocreate_files").toString + "/catalog"
+    def partFiles = Option(new java.io.File(catalogPath).listFiles).toSeq.flatten
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    val autoCreate = AutoCreate(spark, catalogPath)
+    autoCreate((1 to 6).map(i => (s"d$i", "temp")))
+    assert(partFiles == 1, s"the first append wrote $partFiles part files")
+    autoCreate((1 to 6).map(i => (s"d$i", "hum")))
+    assert(partFiles == 2, s"the second append added ${partFiles - 1} part files")
+    assert(spark.read.parquet(catalogPath).count() == 12L)
+  }
+
   test("streaming auto-create fires once per new key across micro-batches") {
     implicit val sq = spark.sqlContext
     val created = new ConcurrentLinkedQueue[(String, String)]()

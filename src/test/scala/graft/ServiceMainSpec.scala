@@ -126,7 +126,9 @@ class ServiceMainSpec extends SparkSuite {
     MqttBus.clear()
     val dir = Files.createTempDirectory("svc_jobs").toString
     val conf = Map("service_id" -> "svcjobs", "data_dir" -> dir,
-      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds",
+      // status ticks once per stats_interval; the drains below wait for it
+      "stats_interval" -> "1 second")
     // registry bootstrap: one drained run over a control event
     MqttBus.publish(ServiceMain.eventsTopic("svcjobs"),
       """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
@@ -184,11 +186,49 @@ class ServiceMainSpec extends SparkSuite {
     }
   }
 
+  test("composed service: the derived queries tick at their own grain, not per arrival") {
+    MqttBus.clear()
+    val dir = Files.createTempDirectory("svc_cadence").toString
+    val conf = Map("service_id" -> "svccad", "data_dir" -> dir,
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds",
+      "stats_interval" -> "1 minute")
+    val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
+    cat.run("CREATE DATABASE oc")
+    cat.run("CREATE CONTINUOUS QUERY down ON oc BEGIN " +
+      "SELECT count(num) AS c INTO cnt FROM temp GROUP BY time(2s) END")
+    MqttBus.publish(ServiceMain.eventsTopic("svccad"),
+      """{"action":"new","thing":{"id":"d1","transducers":[{"name":"temp"}]}}""")
+    val boot = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      publish = (_, _) => (), trigger = Trigger.AvailableNow())
+    try boot.queries.foreach(q => assert(q.awaitTermination(120000)))
+    finally ServiceMain.stop(boot)
+
+    val t0 = System.nanoTime()
+    val h = ServiceMain.start(spark, conf, new InProcessTransport, rest = None,
+      publish = (_, _) => (), trigger = Trigger.ProcessingTime(0))
+    try (1 to 60).foreach { i =>
+      MqttBus.publish("openchirp/device/d1/temp", s"$i.5")
+      Thread.sleep(100)
+    } finally ServiceMain.stop(h)
+    val elapsedS = (System.nanoTime() - t0) / 1e9
+    // an executed micro-batch is a progress event with an addBatch phase;
+    // an idle trigger reports none
+    def batches(i: Int) = h.queries(i).recentProgress.count(_.durationMs.containsKey("addBatch"))
+    val (data, status, cq) = (batches(1), batches(2), batches(3))
+    info(f"$elapsedS%.1f s: data plane $data, status $status, CQ $cq micro-batches")
+    assert(data >= 3, s"the data plane ran only $data micro-batches")
+    val cqBound = math.ceil(elapsedS / 2.0).toInt + 1
+    assert(cq <= cqBound, s"the time(2s) CQ ran $cq micro-batches in $elapsedS s (bound $cqBound)")
+    assert(status <= 2, s"status ran $status micro-batches in $elapsedS s on a 1 minute interval")
+  }
+
   test("composed service: subscriptions and auto-create follow the live registry") {
     MqttBus.clear()
     val dir = Files.createTempDirectory("svc_live_reg").toString
     val conf = Map("service_id" -> "svclive", "data_dir" -> dir,
-      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds",
+      // status ticks once per stats_interval; the drains below wait for it
+      "stats_interval" -> "1 second")
     val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
     cat.run("CREATE DATABASE oc")
     cat.run("CREATE SUBSCRIPTION fwd ON oc.autogen DESTINATIONS ALL 'livesub/dest'")
@@ -313,7 +353,9 @@ class ServiceMainSpec extends SparkSuite {
     MqttBus.clear()
     val dir = Files.createTempDirectory("svc_rdds").toString
     val conf = Map("service_id" -> "svcrdd", "data_dir" -> dir,
-      "influx_database" -> "oc", "cq_lateness" -> "0 seconds")
+      "influx_database" -> "oc", "cq_lateness" -> "0 seconds",
+      // status ticks once per stats_interval; the drains below wait for it
+      "stats_interval" -> "1 second")
     val cat = new graft.influxql.InfluxCatalog(spark, dir, "oc")
     cat.run("CREATE DATABASE oc")
     cat.run("CREATE CONTINUOUS QUERY down ON oc BEGIN SELECT mean(num) AS m " +
