@@ -19,13 +19,16 @@ import graft.streaming._
   *   4. three streaming queries off the one MQTT log source, in this
   *      order in [[Handles.queries]]:
   *      - control: service events -> registry CDC MERGE (R11, REST-enriched)
-  *      - data plane: each micro-batch parsed and materialized once, then
-  *        (R3-R9, R14; [[graft.streaming.StreamingIngest.startDataPlane]])
-  *        the registered points' ACID append and the unroutable messages'
-  *        dead-letter append, both exactly-once via the batch-id
+  *      - data plane: one Spark job per micro-batch parses it, routes it
+  *        and writes its files (R3-R9, R14;
+  *        [[graft.streaming.StreamingIngest.startDataPlane]]); then the
+  *        registered points' ACID append and the unroutable messages'
+  *        dead-letter append commit, both exactly-once via the batch-id
   *        transaction fence; auto-create of unseen (device, transducer)
-  *        keys; and the fan-out of the points as line protocol to every
-  *        CREATE SUBSCRIPTION destination (InfluxDB's subscriber service)
+  *        keys writes its catalog file on the driver; and the points fan
+  *        out as line protocol to every CREATE SUBSCRIPTION destination
+  *        (InfluxDB's subscriber service) — with no subscription, that
+  *        step reads a driver-side snapshot and runs nothing
   *      - status: windowed points-written/device counts published to the
   *        status topic (R10/R15, influx_service.py:310-322)
   *      plus one watermarked downsample stream per continuous query
@@ -359,7 +362,7 @@ object ServiceMain {
       }
       .start())
 
-    // data plane: ONE query parses each micro-batch once and feeds the
+    // data plane: ONE query runs one job per micro-batch and feeds the
     // fenced points append, the fenced dead-letter append, auto-create and
     // the subscription fan-out, in that order, all against one snapshot of
     // the CURRENT registry (a stream-static join would freeze it at stream
@@ -380,6 +383,7 @@ object ServiceMain {
       // field); bool points ride as 1/0, string payloads stay local. An
       // optional liveness bound caps the rows a slow subscriber can delay
       // a batch by; the excess counts into Subscriptions.droppedRows
+      // (by name: with no subscription neither frame is ever built)
       fanOut = b => graft.influxql.Subscriptions.fanOut(
         b.select(col("device_id").as("device"), col("transducer"), col("ts_us"),
           coalesce(col("num"), col("bool").cast("double")).as("value"))

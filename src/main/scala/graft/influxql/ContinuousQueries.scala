@@ -65,50 +65,26 @@ object ContinuousQueries {
   def anyDefined(spark: SparkSession, root: String): Boolean =
     table(spark, root).version.isDefined
 
-  // version-keyed target cache: the write faces consult cqTargets on EVERY
-  // append (including every UDP flush), and the registry only changes on
-  // CREATE/DROP — so the parsed target set is cached per (root, db) keyed
-  // on the registry table's commit version PLUS its log incarnation (the
-  // earliest commit file's inode): a registry dir removed and recreated at
-  // the same path restarts version numbering, and a bare version match
-  // would then serve a stale target set past the sole-writer refusal.
-  // Steady state pays one commit-log list + one stat + a map lookup, never
-  // a Spark collect — even on a deployment whose LAST CQ was dropped (the
-  // registry table stays committed forever, so anyDefined alone cannot
-  // restore the free path). Invalidation is automatic: CREATE/DROP commit
-  // a new version and the cached key mismatches. Bounded: one entry per
-  // live (root, db) pair, pinned control-plane small.
-  private val targetCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), ((Long, Option[String]), Set[String])]()
-
   /** The registered CQ target measurements of `db` — the tables the
     * sole-writer contract reserves for their CQs. The fill frontier's
     * dense-grid invariant (every (series, bucket) cell of the committed
     * range present — what seeds LOCF carries and linear's donor runs)
     * only holds while the CQ is its target's sole content writer, so the
     * write faces consult this set and REFUSE external appends into it.
-    * Control-plane sized: one bounded registry read on a version change,
-    * a commit-log file probe + map hit otherwise.
+    * The write faces ask on EVERY append (every UDP flush included) and
+    * the registry only changes on CREATE/DROP, so the targets of every db
+    * are parsed once per registry commit ([[TxLogTable.snapshot]]): steady
+    * state is a commit-log file probe + map hit, never a Spark collect —
+    * even on a deployment whose LAST CQ was dropped (the registry table
+    * stays committed forever, so [[anyDefined]] alone cannot restore the
+    * free path).
     */
-  def cqTargets(spark: SparkSession, root: String, db: String): Set[String] = {
-    val t = table(spark, root)
-    t.version match {
-      case None => Set.empty
-      case Some(v) =>
-        val key =
-          (java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString, db)
-        val stamp = (v, t.incarnation)
-        val cached = targetCache.get(key)
-        if (cached != null && cached._1 == stamp) cached._2
-        else {
-          import spark.implicits._
-          val targets = t.read().filter(col("db") === db)
-            .select("query").as[String].collect().flatMap(targetOf).toSet
-          targetCache.put(key, (stamp, targets))
-          targets
-        }
-    }
-  }
+  def cqTargets(spark: SparkSession, root: String, db: String): Set[String] =
+    table(spark, root).snapshot("cqTargets")(
+      _.select("db", "query").collect().toSeq
+        .groupMap(_.getString(0))(r => targetOf(r.getString(1)))
+        .map { case (d, ts) => d -> ts.flatten.toSet })
+      .flatMap(_.get(db)).getOrElse(Set.empty)
 
   /** Parse + execute one CQ management statement; every form returns the
     * refreshed SHOW CONTINUOUS QUERIES surface.

@@ -940,16 +940,18 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
 
   /** Plan a SELECT against the db its FROM qualifier routes to. A db with
     * no committed points has no field or tag to check names against, so
-    * its SELECT returns no series, as InfluxDB's does (every MQTT db is in
-    * that state until the data plane's first commit).
+    * its SELECT returns the statement's columns with no rows — no series,
+    * as InfluxDB's does (every MQTT db is in that state until the data
+    * plane's first commit).
     */
   private def select(text: String): DataFrame = {
     val q = InfluxQL.parse(text)
     val db = q.fromDb.getOrElse(defaultDb)
     requireDb(db)
     q.fromRp.foreach(requireRp(db, _))
-    if (pointsTable(db).version.isEmpty) spark.emptyDataFrame
-    else InfluxQL.planResolved(points(db), q.copy(fromDb = None, fromRp = None))
+    val local = q.copy(fromDb = None, fromRp = None)
+    if (pointsTable(db).version.isEmpty) InfluxQL.planEmpty(spark, local)
+    else InfluxQL.planResolved(points(db), local)
   }
 
   /** Public validation seam for the HTTP /write `rp` parameter: a named

@@ -1392,18 +1392,8 @@ object InfluxQL {
     // unknown names fail HERE with the schema in hand, not as Spark
     // analysis errors naming internal columns deep in the plan
     val known = points.columns.toSet
-    def condNames(c: Cond): Seq[String] = c match {
-      case TagCond(t, _, _) => Seq(t)
-      case TagRegexCond(t, _, _) => Seq(t)
-      case FieldCond(f, _, _) => Seq(f)
-      case OrCond(bs) => bs.flatten.flatMap(condNames)
-      case _ => Nil
-    }
-    val referenced =
-      qs.fields.flatMap(it => it.refs ++ it.calls.map(_.arg) ++
-        it.calls.flatMap(_.tagKeys)) ++
-        qs.conds.flatMap(condNames) ++ qs.groupTags
-    referenced.distinct.filterNot(known.contains) match {
+    val (tags, fields) = referenced(qs)
+    (tags ++ fields).distinct.filterNot(known.contains) match {
       case Nil => ()
       case bad => throw new IllegalArgumentException(
         s"InfluxQL: unknown field or tag ${bad.mkString("'", "', '", "'")} " +
@@ -1413,6 +1403,41 @@ object InfluxQL {
     if (q1.fromRegex && q1.fields.exists(_.isAgg))
       q1.copy(groupTags = "transducer" +: q1.groupTags)
     else q1
+  }
+
+  /** The tag and the field names `q` references (a name may be in both). */
+  private def referenced(q: Query): (Seq[String], Seq[String]) = {
+    def condNames(c: Cond): Seq[(String, Boolean)] = c match {
+      case TagCond(t, _, _) => Seq((t, true))
+      case TagRegexCond(t, _, _) => Seq((t, true))
+      case FieldCond(f, _, _) => Seq((f, false))
+      case OrCond(bs) => bs.flatten.flatMap(condNames)
+      case _ => Nil
+    }
+    val names =
+      q.fields.flatMap(it => (it.refs ++ it.calls.map(_.arg)).map((_, false)) ++
+        it.calls.flatMap(_.tagKeys).map((_, true))) ++
+        q.conds.flatMap(condNames) ++ q.groupTags.map((_, true))
+    val (tags, fields) = names.partition(_._2)
+    (tags.map(_._1), fields.map(_._1))
+  }
+
+  /** `q` planned over a zero-row points frame that holds every name `q`
+    * (or a subquery it reads) references — tags as strings, fields as
+    * doubles: a database with no committed points has no field or tag to
+    * check names against, so it answers the statement's output columns
+    * with no rows, as InfluxDB answers no series.
+    */
+  private[influxql] def planEmpty(spark: org.apache.spark.sql.SparkSession, q: Query): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    val (tags, fields) = Iterator.iterate(Option(q))(_.flatMap(_.fromSub))
+      .takeWhile(_.isDefined).flatten.map(referenced)
+      .foldLeft((Seq.empty[String], Seq.empty[String])) { case ((t, f), (t2, f2)) => (t ++ t2, f ++ f2) }
+    val cols = (Seq("transducer" -> StringType, "ts_us" -> LongType) ++
+      tags.map(_ -> StringType) ++ fields.map(_ -> DoubleType))
+      .distinctBy(_._1).filter { case (n, t) => t != DoubleType || !tags.contains(n) }
+    planResolved(spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      StructType(cols.map { case (n, t) => StructField(n, t) })), q)
   }
 
   /** The reserved (non-tag, non-field) columns of the points layout. */

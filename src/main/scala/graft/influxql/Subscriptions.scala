@@ -177,12 +177,14 @@ object Subscriptions {
 
   /** The write fan-out for `db`, one data-plane micro-batch at a time
     * ([[graft.streaming.StreamingIngest.startDataPlane]]): reads the
-    * registry (a new subscription takes effect at the next batch, as in
-    * InfluxDB) and publishes each of `points` — (device, transducer,
-    * ts_us, value) rows — to its subscription destinations from the
+    * registry's driver-side snapshot (a new subscription takes effect at
+    * the next batch, as in InfluxDB) and publishes each of `points` —
+    * (device, transducer, ts_us, value) rows — to its subscription
+    * destinations from the
     * executors (per-partition publisher via `publishFactory`, serialized to
     * the tasks — the in-process bus by default, a real MQTT/UDP client in
-    * a deployment). A database with no subscription runs nothing.
+    * a deployment). A database with no subscription runs nothing and
+    * never builds `points` (passed by name).
     *
     * Delivery is AT-LEAST-ONCE: a replayed micro-batch (crash between
     * publish and checkpoint) re-publishes its points — the same contract
@@ -197,27 +199,29 @@ object Subscriptions {
     * counts the excess into [[droppedRows]] — InfluxDB's own
     * write-buffer-overflow drop, made explicit and observable.
     */
-  def fanOut(points: DataFrame, db: String, root: String,
+  def fanOut(points: => DataFrame, db: String, root: String,
              publishFactory: () => (String, String) => Unit =
                () => (dest, payload) => graft.streaming.MqttBus.publish(dest, payload),
              maxRowsPerBatch: Option[Int] = None): Unit = {
-    // control-plane read: one row per subscription for this db
-    val subs = defs(points.sparkSession, root).filter(col("db") === db)
-      .select("mode", "destinations").collect()
-      .map(r => (r.getString(0), r.getString(1).split(DestSep).toSeq))
-      .toSeq
+    // control-plane read from the driver-side snapshot: one Spark read per
+    // registry commit, none at all while no subscription was ever created
+    val subs = table(SparkSession.active, root).snapshot("fanOut")(
+        _.select("db", "mode", "destinations").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getString(2).split(DestSep).toSeq)).toSeq)
+      .getOrElse(Nil).collect { case (`db`, mode, dests) => (mode, dests) }
     if (subs.nonEmpty) {
       val factory = publishFactory
+      val pts = points
       val capped = maxRowsPerBatch match {
         case Some(cap) =>
-          val n = points.count()
+          val n = pts.count()
           if (n > cap) addDropped(root, db, n - cap)
           // oldest-first with explicit tie-breaks: a bare limit would
           // forward an ARBITRARY subset of the batch; ordering makes the
           // kept slice stable and meaningful (the earliest points a late
           // subscriber is most likely to still want)
-          points.orderBy(col("ts_us"), col("device"), col("transducer")).limit(cap)
-        case None => points
+          pts.orderBy(col("ts_us"), col("device"), col("transducer")).limit(cap)
+        case None => pts
       }
       capped.select("transducer", "device", "ts_us", "value")
         .foreachPartition { rows: Iterator[Row] =>

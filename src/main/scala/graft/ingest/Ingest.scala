@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -23,8 +25,8 @@ object Ingest {
     */
   def parseTopic(df: DataFrame): DataFrame = {
     val parts = split(col("topic"), "/")
-    df.withColumn("device_id", get(parts, lit(2)))
-      .withColumn("transducer", lower(get(parts, lit(3))))
+    df.withColumns(ListMap("device_id" -> get(parts, lit(2)),
+      "transducer" -> lower(get(parts, lit(3)))))
   }
 
   /** Predicate matching the reference's data-plane wildcard subscription
@@ -61,13 +63,14 @@ object Ingest {
     */
   def inferTypes(df: DataFrame, payload: Column = col("payload")): DataFrame = {
     val num = payload.try_cast("double")
-    df.withColumn("num", num)
-      .withColumn("bool",
-        when(num.isNotNull, lit(null).cast("boolean"))
-          .when(payload.isin("true", "True"), lit(true))
-          .when(payload.isin("false", "False"), lit(false)))
-      .withColumn("str",
-        when(num.isNull && !payload.isin("true", "True", "false", "False"), payload))
+    // one projection: each added column is its own expression over the
+    // payload, so none reads another and one analysis covers all three
+    df.withColumns(ListMap(
+      "num" -> num,
+      "bool" -> when(num.isNotNull, lit(null).cast("boolean"))
+        .when(payload.isin("true", "True"), lit(true))
+        .when(payload.isin("false", "False"), lit(false)),
+      "str" -> when(num.isNull && !payload.isin("true", "True", "false", "False"), payload)))
   }
 
   /** R6 — registry membership filter (influx_service.py:134-137): drop

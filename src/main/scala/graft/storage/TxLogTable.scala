@@ -69,16 +69,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     * (commit files are hard-link-created, never rewritten in place). Same
     * cost class as [[version]]: one directory list + one stat, no Spark job.
     */
-  def incarnation: Option[String] = {
-    if (!Files.isDirectory(logDir)) return None
-    val vs = listLog(logDir)
-    if (vs.isEmpty) None
-    else
-      try Some(String.valueOf(Files.readAttributes(
-        logDir.resolve(s"${vs.min}.json"),
-        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey))
-      catch { case _: java.io.IOException => None }
-  }
+  def incarnation: Option[String] = stamp.flatMap(_._2)
 
   def read(): DataFrame =
     readVersion(version.getOrElse(throw new IllegalStateException(s"no committed version at $path")))
@@ -191,8 +182,7 @@ class TxLogTable(spark: SparkSession, path: String) {
     var written: Option[Seq[String]] = None
     while (true) {
       val base = version
-      val fenced = txn.exists { case (appId, seq) => txnHighWatermark(appId).exists(_ >= seq) }
-      if (fenced)
+      if (txn.exists(fenced))
         return (Some(base.getOrElse(throw new IllegalStateException(
           s"txn fence ${txn.get} exists but $path has no version"))), Nil)
       val cur = base.map(schemaOf)
@@ -204,6 +194,77 @@ class TxLogTable(spark: SparkSession, path: String) {
       catch { case _: CommitConflict => () } // another writer won: rebase
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Whether a commit already carries `txn`'s fence: an append under it
+    * would be skipped. A writer that checks this BEFORE it writes its files
+    * can skip writing them too.
+    */
+  def fenced(txn: (String, Long)): Boolean =
+    txnHighWatermark(txn._1).exists(_ >= txn._2)
+
+  /** A fresh data directory (an absolute path) for files written outside
+    * this class ([[DataFileWriter]]). Nothing is created: the directory
+    * appears with its first file, so a job that writes none leaves none.
+    */
+  def newDataDir(): String = root.resolve(s"d-${UUID.randomUUID()}").toAbsolutePath.toString
+
+  /** [[append]] of the files a job wrote: `files` are the hidden names
+    * ([[DataFileWriter]]) of the successful task attempts' files in `dir`
+    * (from [[newDataDir]]), with rows of `schema`. Under the same fence,
+    * schema and rebase rules as [[append]], it renames each file to its
+    * visible name through the Hadoop `FileSystem` (which moves the `.crc`
+    * sidecar too), deletes the hidden files failed attempts left in `dir`,
+    * and commits `dir`. Nothing commits when `files` is empty. Returns the
+    * table's version after the call, if it has one.
+    */
+  def appendWritten(dir: String, files: Seq[String], schema: StructType,
+                    txn: Option[(String, Long)] = None): Option[Long] = {
+    refuseIfClustered()
+    val d = Paths.get(dir)
+    require(d.getParent == root.toAbsolutePath, s"$dir is not a data directory of $path")
+    appendCommit(schema, txn) {
+      if (files.isEmpty) Nil
+      else {
+        val conf = spark.sparkContext.hadoopConfiguration
+        files.foreach(DataFileWriter.publish(conf, dir, _))
+        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+        listDir(d).map(_.getFileName.toString).filter(DataFileWriter.isHidden)
+          .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
+        Seq(d.getFileName.toString)
+      }
+    }._1
+  }
+
+  /** `decode` of the current snapshot, kept on the driver: decoded once per
+    * commit and then served from a JVM-wide cache entry per (table path,
+    * `tag`), stamped with the commit version PLUS the log incarnation, so a
+    * table dir removed and recreated at the same path (version numbering
+    * restarts) never serves a stale value. Steady state is one commit-log
+    * list + one stat + a map hit, never a Spark job. None before the first
+    * commit. For control-plane tables whose decoded value is small.
+    */
+  def snapshot[T](tag: String)(decode: DataFrame => T): Option[T] =
+    stamp.map { case st @ (v, _) =>
+      val key = (root.toAbsolutePath.normalize.toString, tag)
+      SnapshotCache.get(key) match {
+        case (`st`, value) => value.asInstanceOf[T]
+        case _ =>
+          val value = decode(readVersion(v))
+          SnapshotCache.put(key, (st, value))
+          value
+      }
+    }
+
+  /** (latest version, [[incarnation]]) from one commit-log listing. */
+  private def stamp: Option[(Long, Option[String])] = {
+    if (!Files.isDirectory(logDir)) return None
+    val vs = listLog(logDir)
+    if (vs.isEmpty) None
+    else Some((vs.max,
+      try Some(String.valueOf(Files.readAttributes(logDir.resolve(s"${vs.min}.json"),
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey))
+      catch { case _: java.io.IOException => None }))
   }
 
   /** [[append]], materialized as MANY range-clustered data directories in
@@ -921,6 +982,10 @@ object TxLogTable {
   val TxnCheckpointInterval: Long = 10L
 
   final class CommitConflict(msg: String) extends RuntimeException(msg)
+
+  /** [[TxLogTable.snapshot]]'s entries: (path, tag) -> (stamp, value). */
+  private val SnapshotCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), ((Long, Option[String]), Any)]()
 
   /** Cached per-directory column statistics (see [[TxLogTable.dirColStats]]).
     * `min`/`max` are over the non-null values (None when the dir is empty

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.storage.DataFileWriter
 
 /** R14 — auto-create of unseen transducers (influx_service.py:215-274): when
   * a message arrives for a (device, transducer) the catalog doesn't know,
@@ -14,6 +18,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * ([[StreamingIngest.startDataPlane]]), so the guard is a driver-side set
   * of the catalog's keys: loaded once when the data plane starts, grown
   * after each catalog append — no per-batch catalog read or anti-join job.
+  * The append itself is one small parquet file written on the driver: no
+  * Spark job either.
   * It is bounded like the registry's device ids
   * ([[RegistryMaintenance.activeIds]]).
   */
@@ -32,14 +38,19 @@ object AutoCreate {
     import spark.implicits._
     val known = scala.collection.mutable.Set.from(
       existingCatalog(spark, catalogPath).as[(String, String)].collect())
+    val writer = new DataFileWriter(spark, CatalogSchema)
+    val dir = java.nio.file.Paths.get(catalogPath).toAbsolutePath.toString
     keys => {
       val unseen = keys.distinct.filterNot(known)
       if (unseen.nonEmpty) {
         unseen.foreach(create.tupled)
-        // one task, one part file: a local Seq would otherwise be split
-        // into up to defaultParallelism tasks and files per append
-        unseen.toDF("device_id", "transducer").coalesce(1)
-          .write.mode("append").parquet(catalogPath)
+        // one small file, written on the driver (no Spark job) under a
+        // hidden name and then renamed: a reader never sees it half-written
+        val f = writer.open(dir)
+        try unseen.foreach { case (d, t) =>
+          f.write(InternalRow(UTF8String.fromString(d), UTF8String.fromString(t)))
+        } finally f.close()
+        DataFileWriter.publish(spark.sparkContext.hadoopConfiguration, dir, f.hidden)
         known ++= unseen
       }
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.storage.TxLogTable
@@ -40,39 +40,18 @@ object RegistryMaintenance {
       .trigger(trigger)
       .start()
 
-  // version-keyed active-device cache (the ContinuousQueries.cqTargets
-  // pattern): the data plane resolves the registry on EVERY micro-batch,
-  // and the registry only changes on a control event — so the active ids
-  // are collected once per registry commit into a driver-side set, keyed
-  // on (path, version, incarnation) so a table dir recreated at the same
-  // path never serves a stale set. Steady state is one commit-log list +
-  // one stat + a map hit, never a Spark job. One entry per live registry
-  // path.
-  private val activeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Option[String]), Set[String])]()
-
-  /** Currently-active device ids, as a driver-side set. Empty before the
-    * first commit (nothing registered yet — every message dead-letters,
-    * matching the reference's behavior with an empty dict).
+  /** Currently-active device ids, as a driver-side set: the data plane
+    * resolves the registry on EVERY micro-batch, and the registry only
+    * changes on a control event, so the ids are collected once per
+    * registry commit ([[TxLogTable.snapshot]]) and served from the driver
+    * otherwise. Empty before the first commit (nothing registered yet —
+    * every message dead-letters, matching the reference's behavior with an
+    * empty dict).
     */
-  def activeIds(spark: SparkSession, tablePath: String): Set[String] = {
-    import spark.implicits._
-    val t = new TxLogTable(spark, tablePath)
-    t.version match {
-      case None => Set.empty
-      case Some(v) =>
-        val key = java.nio.file.Paths.get(tablePath).toAbsolutePath.normalize.toString
-        val stamp = (v, t.incarnation)
-        val cached = activeCache.get(key)
-        if (cached != null && cached._1 == stamp) cached._2
-        else {
-          val ids = t.readVersion(v).filter(col("active"))
-            .select(col("deviceId")).as[String].collect().toSet
-          activeCache.put(key, (stamp, ids))
-          ids
-        }
-    }
-  }
+  def activeIds(spark: SparkSession, tablePath: String): Set[String] =
+    new TxLogTable(spark, tablePath).snapshot("activeIds")(
+      _.filter(col("active")).select(col("deviceId")).as(Encoders.STRING).collect().toSet)
+      .getOrElse(Set.empty)
 
   /** [[activeIds]] in the shape `Ingest.registryFilter` expects: a
     * driver-local frame (a LocalRelation — broadcasting it scans nothing).

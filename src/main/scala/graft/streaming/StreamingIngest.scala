@@ -1,11 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.ingest.Ingest
-import graft.storage.TxLogTable
+import graft.storage.{DataFileWriter, TxLogTable}
 
 /** Structured-Streaming form of the reference's hot path (entry point A,
   * SURVEY.md §3.1): MQTT-shaped messages -> parse -> infer -> registry
@@ -36,71 +39,147 @@ object StreamingIngest {
   /** The service's data plane: ONE streaming query over the raw message
     * log feeds every stateless sink, the way the reference runs parse ->
     * filter -> infer -> write -> auto-create in one consumer loop
-    * (influx_service.py:438). Each micro-batch is parsed once and
-    * materialized once ([[materialized]]: one `localCheckpoint` job, which
-    * also collects the batch's dead-letter count and its distinct
-    * data-plane (device_id, transducer) keys), then drives four steps in
-    * this fixed order:
+    * (influx_service.py:438). Each micro-batch runs ONE Spark job, the
+    * kernel: a projection of the batch through the `Ingest` column
+    * expressions (topic parse, type inference, the data and dead-letter
+    * flags, `ts_us`), sorted on (device_id, ts) within its input splits
+    * (no shuffle), whose tasks each
     *
-    *   1. the points append, under the `(appId, batchId)` transaction
-    *      fence (narrow layout plus `ts_us`, the InfluxQL planner's time
-    *      column; sorted on (device_id, ts) within its input splits, one
-    *      file per split, no shuffle);
-    *   2. the dead-letter append — unroutable messages with their reason,
-    *      kept replayable where the reference swallows them in a bare
-    *      except (influx_service.py:114-119) — under the same fence;
+    *   - keep the registered data rows, gated on the driver's snapshot of
+    *     `registered`, the live device registry (R6), and write them as one
+    *     parquet file (narrow layout plus `ts_us`, the InfluxQL planner's
+    *     time column), sorted on (device_id, ts);
+    *   - write the unroutable messages, with their reason, as one file of
+    *     dead letters — kept replayable where the reference swallows them
+    *     in a bare except (influx_service.py:114-119);
+    *   - return those files and the distinct (device_id, transducer) keys
+    *     of their registered points.
+    *
+    * Files are written with Spark's own parquet writer, hidden until the
+    * driver commits them ([[graft.storage.TxLogTable.appendWritten]]), so
+    * only the successful task attempts' files become visible. After the
+    * job, on the driver, in this fixed order:
+    *
+    *   1. the points append and 2. the dead-letter append, each under the
+    *      `(appId, batchId)` transaction fence;
     *   3. `autoCreate` of the batch's registered keys (R14);
-    *   4. `fanOut` of the registered points (subscriptions).
+    *   4. `fanOut` of the registered points (subscriptions). Its frame is
+    *      passed by name: a fan-out with no subscription builds nothing.
     *
-    * All four read one snapshot of `registered`, the live device registry
-    * (R6). Membership is decided on the driver against the batch's own
-    * distinct keys, and the points read the materialized rows through an
-    * IN-list of the batch's registered devices: no registry broadcast, and
-    * a step with nothing to do (no registered point, no dead letter) runs
-    * no job.
+    * Steps 3 and 4 run only for a batch with a registered point, and run
+    * no Spark job unless a subscription forwards points. A batch with no
+    * registered point (or no dead letter) writes no file and creates no
+    * directory in that table.
     *
-    * A micro-batch replayed after a crash commits nothing to either table
-    * (both fence on its batch id); the side effects re-run at least once:
-    * auto-create skips the keys its catalog already holds, the fan-out
-    * re-publishes. A failing side effect fails the batch only after the
-    * fenced commits before it.
+    * A micro-batch replayed after a crash commits nothing to either table:
+    * each fence is checked BEFORE the kernel runs, and a fenced table's
+    * files are not even written. The side effects re-run at least once (the
+    * kernel still returns the batch's keys): auto-create skips the keys
+    * its catalog already holds, the fan-out re-publishes. A failing side
+    * effect fails the batch only after the fenced commits before it.
     */
   def startDataPlane(messages: DataFrame, controlTopic: String,
                      points: TxLogTable, deadLetters: TxLogTable,
                      registered: () => Set[String], appId: String, checkpoint: String,
                      trigger: Trigger = Trigger.AvailableNow(),
                      autoCreate: Seq[(String, String)] => Unit = _ => (),
-                     fanOut: DataFrame => Unit = _ => ()): StreamingQuery =
+                     fanOut: (=> DataFrame) => Unit = _ => ()): StreamingQuery = {
+    // the two writers, built at the query's first batch from its schema
+    var writers: Option[(StructType, DataFileWriter, DataFileWriter)] = None
     messages.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val devices = registered()
-        val txn = Some((appId, batchId))
-        val parsed = Ingest.inferTypes(Ingest.parseTopic(batch0))
-          .withColumn("data", Ingest.dataTopicFilter)
-        materialized(parsed,
-          count_if(Ingest.isDeadLetter(controlTopic)).as("dead"),
-          collect_set(when(col("data"), struct(col("device_id"), col("transducer")))).as("keys")) {
-          (batch, m) =>
-            val keys = m("keys").asInstanceOf[Seq[Row]]
-              .map(r => (r.getString(0), r.getString(1))).filter(k => devices(k._1))
-            val live = Ingest.narrowPoints(batch.filter(col("data") &&
-                col("device_id").isin(keys.map(_._1).distinct: _*)))
-              .withColumn("ts_us", unix_micros(col("ts")))
-            if (keys.nonEmpty)
-              points.append(live.sortWithinPartitions("device_id", "ts"), txn)
-            if (m("dead").asInstanceOf[Long] > 0)
-              deadLetters.append(batch.filter(Ingest.isDeadLetter(controlTopic))
-                .select(col("topic"), col("payload"), col("ts"),
-                  lit("unroutable_topic").as("dl_reason")), txn)
-            if (keys.nonEmpty) {
-              autoCreate(keys)
-              fanOut(live)
-            }
+        val txn = (appId, batchId)
+        val rows = Ingest.inferTypes(Ingest.parseTopic(batch0))
+          .select(kernelColumns(controlTopic): _*)
+          .sortWithinPartitions("device_id", "ts")
+        val (pw, dw) = writers.collect { case (s, p, d) if s == rows.schema => (p, d) }
+          .getOrElse {
+            def writer(ordinals: Seq[Int]) = new DataFileWriter(rows.sparkSession,
+              StructType(ordinals.map(rows.schema.fields)))
+            val w = (writer(PointCols), writer(DeadCols))
+            writers = Some((rows.schema, w._1, w._2))
+            w
+          }
+        val pointsDir = Option.unless(points.fenced(txn))(points.newDataDir())
+        val deadDir = Option.unless(deadLetters.fenced(txn))(deadLetters.newDataDir())
+        val task = kernel(devices, pointsDir.map((pw, _)), deadDir.map((dw, _)))
+        val out = SQLExecution.withNewExecutionId(rows.queryExecution, Some("data plane")) {
+          rows.sparkSession.sparkContext.runJob(rows.queryExecution.toRdd, task)
+        }
+        pointsDir.foreach(d => points.appendWritten(d, out.flatMap(_.points), pw.schema, Some(txn)))
+        deadDir.foreach(d => deadLetters.appendWritten(d, out.flatMap(_.dead), dw.schema, Some(txn)))
+        val keys = out.flatMap(_.keys).distinct.toSeq
+        if (keys.nonEmpty) {
+          autoCreate(keys)
+          fanOut(rows.filter(col("data") && col("device_id").isin(keys.map(_._1).distinct: _*))
+            .select(PointCols.map(i => col(rows.columns(i))): _*))
         }
       }
       .start()
+  }
+
+  /** The kernel's columns over the parsed and inferred batch: the narrow
+    * points layout plus `ts_us` first ([[PointCols]]), then the dead
+    * letter's own columns ([[DeadCols]] picks them with `ts`), then the
+    * two routing flags.
+    */
+  private def kernelColumns(controlTopic: String): Seq[Column] = Seq(
+    col("device_id"), col("transducer"), col("ts"), col("num"), col("bool"), col("str"),
+    unix_micros(col("ts")).as("ts_us"),
+    col("topic"), col("payload"), lit("unroutable_topic").as("dl_reason"),
+    Ingest.dataTopicFilter.as("data"), Ingest.isDeadLetter(controlTopic).as("dead"))
+  private val PointCols = 0 to 6
+  private val DeadCols = Seq(7, 8, 2, 9)
+  private val DataFlag = 10
+  private val DeadFlag = 11
+
+  /** One kernel task's output: the hidden names of the files it wrote and
+    * its registered points' distinct keys.
+    */
+  private[streaming] final case class KernelTask(points: Option[String], dead: Option[String],
+                                                 keys: Array[(String, String)])
+
+  /** The kernel's per-partition function over the sorted kernel rows:
+    * routes each row and writes the files a defined output asks for (a
+    * fenced table's is None).
+    */
+  private def kernel(devices: Set[String], pointsOut: Option[(DataFileWriter, String)],
+                     deadOut: Option[(DataFileWriter, String)]): (TaskContext, Iterator[InternalRow]) => KernelTask =
+    (_, rows) => {
+      def flag(r: InternalRow, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
+      var pf: DataFileWriter.Open = null
+      var df: DataFileWriter.Open = null
+      val point = pointsOut.map { case (w, _) => ProjectingInternalRow(w.schema, PointCols) }
+      val dead = deadOut.map { case (w, _) => ProjectingInternalRow(w.schema, DeadCols) }
+      val keys = scala.collection.mutable.HashSet.empty[(String, String)]
+      try {
+        rows.foreach { r =>
+          if (flag(r, DeadFlag)) {
+            deadOut.foreach { case (w, dir) =>
+              if (df == null) df = w.open(dir)
+              dead.get.project(r)
+              df.write(dead.get)
+            }
+          } else if (flag(r, DataFlag) && devices.contains(r.getString(0))) {
+            keys += ((r.getString(0), r.getString(1)))
+            pointsOut.foreach { case (w, dir) =>
+              if (pf == null) pf = w.open(dir)
+              point.get.project(r)
+              pf.write(point.get)
+            }
+          }
+        }
+      } catch {
+        case e: Throwable =>
+          // the hidden files stay behind for the commit to delete
+          Seq(pf, df).filter(_ != null).foreach(w => try w.close() catch { case _: Exception => () })
+          throw e
+      }
+      KernelTask(Option(pf).map(_.close()), Option(df).map(_.close()), keys.toArray)
+    }
 
   /** Streaming MERGE sink: foreachBatch upsert into a [[graft.storage.TxLogTable]]
     * — the streaming -> ACID-table bridge (continuous dimension maintenance,

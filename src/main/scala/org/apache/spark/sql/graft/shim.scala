@@ -24,6 +24,12 @@ object shim {
   def toExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** The session's Hadoop configuration with its SQL conf applied — what a
+    * DataFrameWriter job starts from (SessionState is private[sql]).
+    */
+  def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
   /** Wrap a (resolved) logical plan as a DataFrame (Dataset.ofRows is
     * private[sql]).
     */

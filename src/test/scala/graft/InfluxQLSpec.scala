@@ -1674,6 +1674,18 @@ class InfluxQLSpec extends SparkSuite {
       .getMessage.contains("unknown field or tag 'num'"))
   }
 
+  test("SELECT on a database with no committed points answers its own columns with no rows") {
+    val root = java.nio.file.Files.createTempDirectory("empty_db_cols").toString
+    val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "mq")
+    cat.run("CREATE DATABASE mq")
+    // a typed read decodes the empty answer by its expected columns
+    assert(cat.run("SELECT count(value) FROM mq..m").as[Long].collect().isEmpty)
+    val grouped = cat.run("SELECT mean(num) FROM temp GROUP BY time(1m), device_id")
+    assert(grouped.collect().isEmpty)
+    assert(grouped.columns.toSeq.contains("mean") && grouped.columns.toSeq.contains("device_id"),
+      grouped.columns.mkString(", "))
+  }
+
   test("subscriptions: streaming fan-out publishes line protocol per mode") {
     import graft.influxql.Subscriptions
     val root = java.nio.file.Files.createTempDirectory("subs_stream").toString

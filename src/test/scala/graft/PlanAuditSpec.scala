@@ -351,10 +351,10 @@ class PlanAuditSpec extends SparkSuite {
       s"an exchange or aggregate runs under the registry broadcast:\n${bx.head}")
   }
 
-  test("append sink: the points write plans no shuffle, only a within-split sort") {
+  test("data plane: one kernel job per batch, no shuffle or broadcast, every file sorted") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
@@ -364,12 +364,19 @@ class PlanAuditSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("plan_sink").toString
     val table = new graft.storage.TxLogTable(spark, s"$root/points")
     val in = MemoryStream[(String, Long, Double)](2)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
     val l = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add((f, qe.executedPlan))
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val jl = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Int, b: Int) => a + b))
+    }
     spark.listenerManager.register(l)
+    spark.sparkContext.addSparkListener(jl)
     val q = graft.streaming.StreamingIngest.startDataPlane(
       in.toDF().toDF("device_id", "ts_us", "num")
         .select(concat(lit("openchirp/device/"), col("device_id"), lit("/temp")).as("topic"),
@@ -381,28 +388,46 @@ class PlanAuditSpec extends SparkSuite {
     try {
       in.addData(("d2", 2L, 1.0), ("d1", 3L, 2.0), ("d3", 1L, 3.0), ("d1", 1L, 4.0))
       q.processAllAvailable()
+      in.addData(("d1", 9L, 5.0), ("d2", 7L, 6.0), ("d1", 8L, 7.0))
+      q.processAllAvailable()
     } finally q.stop()
-    // the listener bus is asynchronous but delivers in order: once a
-    // sentinel query run after the stream stopped is seen, every plan the
-    // sink ran has been delivered
-    spark.range(1).toDF("plan_sink_sentinel").collect()
+    // the listener buses are asynchronous but deliver in order: once a
+    // sentinel query run after the stream stopped is seen, every plan and
+    // job the sink ran has been delivered
+    spark.sparkContext.setJobGroup("plan-sink-sentinel", "listener drain")
+    try spark.range(1).toDF("plan_sink_sentinel").collect()
+    finally spark.sparkContext.clearJobGroup()
     val deadline = System.nanoTime() + 30L * 1000000000L
-    def sentinelSeen = plans.toArray(Array.empty[SparkPlan]).exists(_.output.exists(_.name == "plan_sink_sentinel"))
+    def sentinelSeen = plans.toArray(Array.empty[(String, SparkPlan)])
+      .exists(_._2.output.exists(_.name == "plan_sink_sentinel")) && jobs.containsKey("plan-sink-sentinel")
     while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
     spark.listenerManager.unregister(l)
-    assert(sentinelSeen, "listener delivered no plans within 30 s")
-    assert(table.read().count() == 3L)
+    spark.sparkContext.removeSparkListener(jl)
+    assert(sentinelSeen, "listeners delivered nothing within 30 s")
+    assert(table.read().count() == 6L)
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches == 2, s"expected two data batches, got $batches")
+    assert(jobs.getOrDefault(q.runId.toString, 0) == batches,
+      s"the data plane ran ${jobs.getOrDefault(q.runId.toString, 0)} jobs over $batches batches")
     object H extends AdaptiveSparkPlanHelper
-    val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
-      .flatMap(p => H.collect(p) { case w: DataWritingCommandExec => w })
-    assert(writes.size == 1, s"expected the batch's one write, got ${writes.size}")
-    val w = writes.head
-    val exchanges = H.collect(w.child) { case e: Exchange => e }
-    // no range shuffle, and the registry gate is an IN-list of the
-    // batch's registered devices: not even a broadcast
-    assert(exchanges.isEmpty, s"the sink's write exchanges:\n$w")
-    assert(H.collect(w.child) { case s: SortExec if !s.global => s }.size == 1,
-      s"the sink's write is not sorted within partitions:\n$w")
+    val kernels = plans.toArray(Array.empty[(String, SparkPlan)]).toSeq.collect { case ("data plane", p) => p }
+    assert(kernels.size == batches, s"expected one kernel plan per batch, got ${kernels.size}")
+    kernels.foreach { k =>
+      // no range shuffle, and the registry gate runs inside the task
+      // against the driver's snapshot: not even a broadcast
+      assert(H.collect(k) { case e: Exchange => e }.isEmpty, s"the kernel exchanges:\n$k")
+      assert(H.collect(k) { case s: SortExec if !s.global => s }.size == 1,
+        s"the kernel is not sorted within partitions:\n$k")
+    }
+    // every committed file is sorted on (device_id, ts)
+    val files = (0L to table.version.get).flatMap(table.dirPaths).distinct
+      .flatMap(d => new java.io.File(d).listFiles.toSeq)
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(files.size >= 2, s"expected one file per input split with points, got $files")
+    files.foreach { f =>
+      val rows = spark.read.parquet(f.getPath).select("device_id", "ts_us").as[(String, Long)].collect().toSeq
+      assert(rows == rows.sorted, s"$f is not sorted on (device_id, ts): $rows")
+    }
   }
 
   test("q_influxql_kama: recursion scan joins back without a cartesian") {

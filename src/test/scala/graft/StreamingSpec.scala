@@ -847,6 +847,53 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  test("data plane kernel: committed points and dead letters equal the batch pipeline, bit for bit") {
+    implicit val sq = spark.sqlContext
+    import graft.ingest.Ingest
+    val events = "openchirp/service/s/thing/events"
+    val rnd = new scala.util.Random(20261020L)
+    // every payload kind: float, integer, boolean spellings, plain and
+    // empty strings, and the IEEE corner cases
+    val payloads = Seq("21.5", "-0.0", "42", "1e3", "NaN", "-Infinity", " 7 ",
+      "true", "True", "false", "False", "TRUE", "open", "")
+    val topics = Seq("openchirp/device/dev1/Temp", "openchirp/device/dev2/hum",
+      "openchirp/device/dev3/x", "openchirp/device/ghost/temp", "noise/garbage",
+      "openchirp/device/too/many/segments", "openchirp/device//temp", events)
+    val msgs = (0 until 400).map(_ => (topics(rnd.nextInt(topics.size)),
+      payloads(rnd.nextInt(payloads.size)), 1704067200000000L + rnd.nextInt(60) * 1000L))
+    val registered = Set("dev1", "dev2", "dev3")
+    val root = tmp("kernel_diff")
+    val points = new graft.storage.TxLogTable(spark, s"$root/points")
+    val deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters")
+    val in = MemoryStream[(String, String, Long)](3)
+    def asMessages(df: org.apache.spark.sql.DataFrame) = df.toDF("topic", "payload", "ts_us")
+      .select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts"))
+    val q = StreamingIngest.startDataPlane(asMessages(in.toDF()), events,
+      points = points, deadLetters = deadLetters, registered = () => registered,
+      appId = "kernel-diff", checkpoint = tmp("kernel_diff_cp"), trigger = Trigger.ProcessingTime(0))
+    try {
+      msgs.grouped(200).foreach { b => in.addData(b); q.processAllAvailable() }
+    } finally q.stop()
+    val batch = asMessages(msgs.toDF())
+    val wantPoints = Ingest.narrowPoints(Ingest.registryFilter(
+        Ingest.inferTypes(Ingest.parseTopic(batch.filter(Ingest.dataTopicFilter))),
+        registered.toSeq.toDF("device_id")))
+      .withColumn("ts_us", unix_micros(col("ts")))
+    val wantDead = batch.filter(Ingest.isDeadLetter(events))
+      .select(col("topic"), col("payload"), col("ts"), lit("unroutable_topic").as("dl_reason"))
+    // doubles compare by their bits: -0.0 and NaN must survive as written
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().toSeq
+      .map(_.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x }
+        .mkString("|")).sorted
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(shape(points.read()) == shape(wantPoints))
+    assert(shape(deadLetters.read()) == shape(wantDead))
+    val got = bits(points.read())
+    assert(got.size > 50 && got == bits(wantPoints))
+    val dead = bits(deadLetters.read())
+    assert(dead.nonEmpty && dead == bits(wantDead))
+  }
+
   test("streaming wide view: dedup + map build close after watermark, duplicates collapse") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(String, String, Long, Double)]

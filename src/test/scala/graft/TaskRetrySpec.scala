@@ -105,6 +105,44 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(retried == clean)
   }
 
+  test("data plane: a kernel task that dies after writing its file commits identical points") {
+    implicit val sq = spark.sqlContext
+    implicit val enc: org.apache.spark.sql.Encoder[(String, String, Long)] =
+      Encoders.product[(String, String, Long)]
+    val msgs = (0 until 60).map { i =>
+      val dev = Seq("dev1", "dev2", "ghost", DyingRegistry.Last)(i % 4)
+      (s"openchirp/device/$dev/temp", s"$i.5", 1704067200000000L + (59 - i) * 1000L)
+    } :+ (("noise/garbage", "x", 1704067200000000L))
+    def run(registry: String => Set[String]): (Seq[String], Seq[String], Int) = {
+      val root = tmp("retry_dp")
+      val points = new graft.storage.TxLogTable(spark, s"$root/points")
+      val in = MemoryStream[(String, String, Long)](1)
+      val q = graft.streaming.StreamingIngest.startDataPlane(
+        in.toDF().toDF("topic", "payload", "ts_us")
+          .select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts")),
+        "openchirp/service/s/thing/events", points = points,
+        deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+        registered = () => registry(s"$root/points"), appId = "retry-dp",
+        checkpoint = s"$root/cp", trigger = Trigger.ProcessingTime(0))
+      try { in.addData(msgs); q.processAllAvailable() } finally q.stop()
+      val files = points.dirPaths(points.version.get)
+        .flatMap(d => new java.io.File(d).listFiles.toSeq)
+      val parquet = files.filter(_.getName.endsWith(".parquet")).map(_.getPath)
+      // bit-identical: every committed row in file order, doubles as bits
+      val rows = parquet.sorted.flatMap(f => spark.read.parquet(f).collect().toSeq
+        .map(_.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x }
+          .mkString("|")))
+      (rows, files.map(_.getName).filter(_.startsWith(".part-")).filterNot(_.endsWith(".crc")), parquet.size)
+    }
+    val registered = Set("dev1", "dev2", DyingRegistry.Last)
+    val (clean, _, _) = run(_ => registered)
+    DyingRegistry.sawOpenFile.set(false)
+    val (retried, leftovers, nFiles) = run(dir => new DyingRegistry(registered, dir))
+    assert(DyingRegistry.sawOpenFile.get(), "attempt 0 died before its file existed")
+    assert(clean.size == 45 && retried == clean)
+    assert(nFiles == 1 && leftovers.isEmpty, s"failed attempts left $leftovers")
+  }
+
   test("streaming CQ MERGE sink commits an identical table under task retries") {
     implicit val sq = spark.sqlContext
     def us(s: String): Long = java.sql.Timestamp.valueOf(s).getTime * 1000L
@@ -159,4 +197,32 @@ class TaskRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val retried = run(faulty)
     assert(clean.nonEmpty && retried == clean)
   }
+}
+
+/** A registry snapshot whose lookup of [[DyingRegistry.Last]] (the device
+  * the kernel reaches last in its (device_id, ts) order) kills attempt 0 of
+  * the task — by then that attempt has its hidden points file open and
+  * rows written to it, which [[DyingRegistry.sawOpenFile]] records.
+  */
+final class DyingRegistry(ids: Set[String], pointsDir: String)
+    extends scala.collection.immutable.AbstractSet[String] with Serializable {
+  def contains(d: String): Boolean = {
+    val tc = TaskContext.get()
+    if (tc != null && tc.attemptNumber() == 0 && d == DyingRegistry.Last) {
+      val hidden = Files.walk(java.nio.file.Paths.get(pointsDir)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .exists(n => n.startsWith(".part-") && !n.endsWith(".crc"))
+      DyingRegistry.sawOpenFile.compareAndSet(false, hidden)
+      throw new RuntimeException("injected task failure: attempt 0 dies after writing its file")
+    }
+    ids(d)
+  }
+  def incl(d: String): DyingRegistry = new DyingRegistry(ids + d, pointsDir)
+  def excl(d: String): DyingRegistry = new DyingRegistry(ids - d, pointsDir)
+  def iterator: Iterator[String] = ids.iterator
+}
+
+object DyingRegistry {
+  val Last = "zz"
+  val sawOpenFile = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
