@@ -180,10 +180,9 @@ object Subscriptions {
     * registry's driver-side snapshot (a new subscription takes effect at
     * the next batch, as in InfluxDB) and publishes each of `points` —
     * (device, transducer, ts_us, value) rows — to its subscription
-    * destinations from the
-    * executors (per-partition publisher via `publishFactory`, serialized to
-    * the tasks — the in-process bus by default, a real MQTT/UDP client in
-    * a deployment). A database with no subscription runs nothing and
+    * destinations from the executors (per-partition publisher via
+    * `publishFactory`, serialized to the tasks — the in-process bus by
+    * default, a real MQTT/UDP client in a deployment). A database with no subscription runs nothing and
     * never builds `points` (passed by name).
     *
     * Delivery is AT-LEAST-ONCE: a replayed micro-batch (crash between

@@ -223,16 +223,14 @@ class TxLogTable(spark: SparkSession, path: String) {
     refuseIfClustered()
     val d = Paths.get(dir)
     require(d.getParent == root.toAbsolutePath, s"$dir is not a data directory of $path")
+    if (files.isEmpty) return version
     appendCommit(schema, txn) {
-      if (files.isEmpty) Nil
-      else {
-        val conf = spark.sparkContext.hadoopConfiguration
-        files.foreach(DataFileWriter.publish(conf, dir, _))
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        listDir(d).map(_.getFileName.toString).filter(DataFileWriter.isHidden)
-          .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
-        Seq(d.getFileName.toString)
-      }
+      val conf = spark.sparkContext.hadoopConfiguration
+      files.foreach(DataFileWriter.publish(conf, dir, _))
+      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+      listDir(d).map(_.getFileName.toString).filter(DataFileWriter.isHidden)
+        .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
+      Seq(d.getFileName.toString)
     }._1
   }
 
