@@ -351,7 +351,10 @@ class PlanAuditSpec extends SparkSuite {
       s"an exchange or aggregate runs under the registry broadcast:\n${bx.head}")
   }
 
-  test("data plane: one kernel job per batch, no shuffle or broadcast, every file sorted") {
+  test("append sink: the points write plans no shuffle, only a within-split sort") {
+    // the points write is the data plane's kernel: one job per batch, no
+    // exchange or broadcast in its plan, one within-partition sort, every
+    // committed file sorted
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
