@@ -3,6 +3,7 @@
 
     python3 scripts/ab_pairs.py --parent REV --workload NAME [--pairs 10]
                                 [--seed 101] [--parent-dir DIR]
+                                [--layers m1,m2,...]
 
 Run from the repository root. The change is the working tree as it stands;
 the parent is `git archive REV`, unpacked into a temporary directory (or
@@ -19,6 +20,12 @@ For every end-to-end metric BENCHMARK.json declares, it prints both
 medians, the parent's interquartile range and in how many pairs the change
 was better, then one JSON line with the same figures. A run that is not
 correct, or reports failed operations, is listed and makes the exit code 1.
+
+--layers names per-layer metrics (e.g. streaming.points.add_batch_ms,
+layer.streaming.self_s). A traced run reports no end-to-end latency, so
+every run is then followed by a `--trace 1` run of the same seed in the
+same tree, which gives those metrics; each one's median on both sides is
+printed under the end-to-end table and kept in the JSON line's "layers".
 """
 import argparse
 import json
@@ -50,10 +57,11 @@ def unpack(rev, dest):
     return sha
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace=False):
     """One benchmark run in `tree`; returns its result object."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds),
+                        "--trace", "1" if trace else "0"],
                        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     result = json.loads(lines[-1]) if lines else {}
@@ -75,7 +83,10 @@ def main():
     ap.add_argument("--seed", type=int, default=101, help="seed of the first pair")
     ap.add_argument("--parent-dir", default=None,
                     help="where to unpack the parent; kept and reused across calls")
+    ap.add_argument("--layers", default="",
+                    help="comma-separated per-layer metrics to report (adds a traced run per run)")
     a = ap.parse_args()
+    layers = [m for m in a.layers.split(",") if m]
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = bench["run_seconds"]
@@ -86,15 +97,22 @@ def main():
         sha = unpack(a.parent, parent_dir)
         print(f"parent {sha[:12]} in {parent_dir}; change = working tree {ROOT}", flush=True)
         runs = {"parent": [], "change": []}
+        traced = {"parent": [], "change": []}
         bad = []
         for i in range(a.pairs):
             seed = a.seed + i
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for side in order:
-                r = run(parent_dir if side == "parent" else ROOT, a.workload, seed, seconds)
+                tree = parent_dir if side == "parent" else ROOT
+                r = run(tree, a.workload, seed, seconds)
                 runs[side].append(r)
                 if not r["correct"] or r.get("failed", 0) != 0:
                     bad.append((side, seed, r.get("failed")))
+                if layers:
+                    t = run(tree, a.workload, seed, seconds, trace=True)
+                    traced[side].append(t)
+                    if not t["correct"] or t.get("failed", 0) != 0:
+                        bad.append((side + " traced", seed, t.get("failed")))
             got = {s: {m: runs[s][-1]["metrics"].get(m, {}).get("value") for m, _ in metrics}
                    for s in runs}
             print(f"pair {i + 1}/{a.pairs} seed {seed} ({order[0]} first): "
@@ -121,6 +139,18 @@ def main():
         summary["metrics"][m] = row
         print(f"{m:<18}{row['parent_median']:>12.1f}{row['change_median']:>12.1f}"
               f"{row['parent_iqr']:>12.1f}{wins:>8}/{len(pairs)}")
+    if layers:
+        summary["layers"] = {}
+        print(f"\n{'per-layer metric':<34}{'parent med':>12}{'change med':>12}")
+    for m in layers:
+        meds = {}
+        for side in traced:
+            xs = [t["metrics"][m]["value"] for t in traced[side] if m in t["metrics"]]
+            meds[side] = statistics.median(xs) if xs else None
+        summary["layers"][m] = {"parent_median": meds["parent"], "change_median": meds["change"]}
+        cells = "".join(f"{v:>12.2f}" if v is not None else f"{'-':>12}"
+                        for v in (meds["parent"], meds["change"]))
+        print(f"{m:<34}{cells}")
     for side, seed, failed in bad:
         print(f"NOT CORRECT: {side} seed {seed} (failed {failed})")
     summary["incorrect_runs"] = [{"side": s, "seed": n} for s, n, _ in bad]

@@ -71,11 +71,15 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
   def pointsTable(db: String): TxLogTable =
     new TxLogTable(spark, s"$rootDir/${checkName(db)}/points")
 
-  def databaseNames(): Seq[String] = {
-    val t = dbTable
-    if (t.version.isEmpty) Seq.empty
-    else t.read().select("name").collect().map(_.getString(0)).toSeq.sorted
-  }
+  /** The databases, sorted: a driver-side snapshot of `_databases`
+    * ([[graft.storage.TxLogTable.snapshot]]), decoded once per commit, so
+    * the check every SELECT and `/write` makes runs no Spark job, and a
+    * CREATE or DROP DATABASE through any catalog on this root shows at
+    * the next statement.
+    */
+  def databaseNames(): Seq[String] =
+    dbTable.snapshot("names")(_.select("name").collect().map(_.getString(0)).toSeq.sorted)
+      .getOrElse(Seq.empty)
 
   def databaseExists(db: String): Boolean = databaseNames().contains(db)
 

@@ -643,16 +643,30 @@ class TxLogTable(spark: SparkSession, path: String) {
     * Directories above the threshold are carried over untouched, so the
     * rewrite cost is proportional to the accumulated small-file debt, not
     * the table size.
+    *
+    * Commits that land while the fold is written rebase it, as [[append]]
+    * rebases: the fold stays valid while every folded directory is still
+    * live and the schema is unchanged (the commits between only added
+    * directories), so a steady stream of appends cannot starve compaction.
+    * Anything else is a [[TxLogTable.CommitConflict]], and the fold is deleted.
     */
   def compact(maxBytes: Long = Long.MaxValue): Long = {
-    val base = Some(version.getOrElse(
-      throw new IllegalStateException(s"no committed version at $path")))
-    val dirs = base.map(readEntry(_).dirs).getOrElse(Nil)
-    val (small, big) = dirs.partition(d => dirSize(root.resolve(d)) <= maxBytes)
-    if (small.size < 2) return base.get // nothing to fold
-    val schema = schemaOf(base.get)
+    val base = version.getOrElse(throw new IllegalStateException(s"no committed version at $path"))
+    val small = readEntry(base).dirs.filter(d => dirSize(root.resolve(d)) <= maxBytes)
+    if (small.size < 2) return base // nothing to fold
+    val schema = schemaOf(base)
     val dir = writeDataDir(readDirs(small, Some(schema)))
-    commit("compact", big :+ dir, base, schema)
+    var at = base
+    while (true) {
+      val live = readEntry(at).dirs
+      if (at != base && (!small.forall(live.contains) || schemaOf(at) != schema)) {
+        deleteRecursively(root.resolve(dir))
+        throw new CommitConflict(s"$path changed under a compaction at version $at")
+      }
+      try return commit("compact", live.filterNot(small.contains) :+ dir, Some(at), schema)
+      catch { case _: CommitConflict => at = version.get }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Change feed between two committed versions: row-level diff of the two

@@ -1,10 +1,15 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
+import org.apache.spark.sql.execution.{InputAdapter, LocalTableScanExec, LogicalRDD, ProjectExec,
+  RDDScanExec, SQLExecution, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.ingest.Ingest
@@ -55,6 +60,14 @@ object StreamingIngest {
     *   - return those files and the distinct (device_id, transducer) keys
     *     of their registered points.
     *
+    * The kernel is planned once per query ([[Kernel]]): its projection
+    * and sort are analyzed, optimized and bound to `messages.schema` when
+    * the query starts, together with the two file writers, so a steady
+    * micro-batch runs no Catalyst analysis or planning. It is compiled
+    * under the session conf as it was at that moment, as the rest of a
+    * streaming query is; a later conf change takes effect at the next
+    * start. A batch whose schema differs from the compiled one fails.
+    *
     * Files are written with Spark's own parquet writer, hidden until the
     * driver commits them ([[graft.storage.TxLogTable.appendWritten]]), so
     * only the successful task attempts' files become visible. After the
@@ -64,7 +77,9 @@ object StreamingIngest {
     *      `(appId, batchId)` transaction fence;
     *   3. `autoCreate` of the batch's registered keys (R14);
     *   4. `fanOut` of the registered points (subscriptions). Its frame is
-    *      passed by name: a fan-out with no subscription builds nothing.
+    *      passed by name and built from the batch through the same
+    *      `Ingest` expressions: a fan-out with no subscription builds
+    *      nothing.
     *
     * Steps 3 and 4 run only for a batch with a registered point, and run
     * no Spark job unless a subscription forwards points. A batch with no
@@ -84,42 +99,37 @@ object StreamingIngest {
                      trigger: Trigger = Trigger.AvailableNow(),
                      autoCreate: Seq[(String, String)] => Unit = _ => (),
                      fanOut: (=> DataFrame) => Unit = _ => ()): StreamingQuery = {
-    // the two writers, built at the query's first batch from its schema
-    var writers: Option[(StructType, DataFileWriter, DataFileWriter)] = None
+    val k = new Kernel(messages.sparkSession, messages.schema, controlTopic)
     messages.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val devices = registered()
         val txn = (appId, batchId)
-        val rows = Ingest.inferTypes(Ingest.parseTopic(batch0))
-          .select(kernelColumns(controlTopic): _*)
-          .sortWithinPartitions("device_id", "ts")
-        val (pw, dw) = writers.collect { case (s, p, d) if s == rows.schema => (p, d) }
-          .getOrElse {
-            def writer(ordinals: Seq[Int]) = new DataFileWriter(rows.sparkSession,
-              StructType(ordinals.map(rows.schema.fields)))
-            val w = (writer(PointCols), writer(DeadCols))
-            writers = Some((rows.schema, w._1, w._2))
-            w
-          }
         val pointsDir = Option.unless(points.fenced(txn))(points.newDataDir())
         val deadDir = Option.unless(deadLetters.fenced(txn))(deadLetters.newDataDir())
-        val task = kernel(devices, pointsDir.map((pw, _)), deadDir.map((dw, _)))
-        val out = SQLExecution.withNewExecutionId(rows.queryExecution, Some("data plane")) {
-          rows.sparkSession.sparkContext.runJob(rows.queryExecution.toRdd, task)
-        }
-        pointsDir.foreach(d => points.appendWritten(d, out.flatMap(_.points), pw.schema, Some(txn)))
-        deadDir.foreach(d => deadLetters.appendWritten(d, out.flatMap(_.dead), dw.schema, Some(txn)))
+        val out = k.run(batch0, devices, pointsDir, deadDir)
+        pointsDir.foreach(d => points.appendWritten(d, out.flatMap(_.points), k.points.schema, Some(txn)))
+        deadDir.foreach(d => deadLetters.appendWritten(d, out.flatMap(_.dead), k.dead.schema, Some(txn)))
         val keys = out.flatMap(_.keys).distinct.toSeq
         if (keys.nonEmpty) {
           autoCreate(keys)
-          fanOut(rows.filter(col("data") && col("device_id").isin(keys.map(_._1).distinct: _*))
-            .select(PointCols.map(i => col(rows.columns(i))): _*))
+          fanOut(kernelFrame(batch0, controlTopic)
+            .filter(col("data") && col("device_id").isin(keys.map(_._1).distinct: _*))
+            .select(k.points.schema.fieldNames.toSeq.map(col): _*))
         }
       }
       .start()
   }
+
+  /** The kernel's rows over a batch of messages: the parsed and inferred
+    * batch in the kernel's columns ([[kernelColumns]]), sorted on
+    * (device_id, ts) within its input splits.
+    */
+  private def kernelFrame(batch: DataFrame, controlTopic: String): DataFrame =
+    Ingest.inferTypes(Ingest.parseTopic(batch))
+      .select(kernelColumns(controlTopic): _*)
+      .sortWithinPartitions("device_id", "ts")
 
   /** The kernel's columns over the parsed and inferred batch: the narrow
     * points layout plus `ts_us` first ([[PointCols]]), then the dead
@@ -136,19 +146,100 @@ object StreamingIngest {
   private val DataFlag = 10
   private val DeadFlag = 11
 
+  /** How many [[Kernel]]s were prepared in this JVM: one per data-plane
+    * query start, never one per batch.
+    */
+  private[graft] val kernelsPrepared = new AtomicInteger()
+
+  /** The data-plane kernel, prepared ONCE per query from the source
+    * schema `source`: [[kernelFrame]] over an empty relation of that
+    * schema is analyzed, optimized and planned here, and must plan to one
+    * within-partition sort over one projection of the scan. The
+    * projection, bound by ordinal to `source`, and the sort order are what
+    * every batch's tasks run; the two file writers are built here too.
+    *
+    * Each [[run]] is one job straight over the batch's input rows (the RDD
+    * the streaming engine already planned for `foreachBatch`); its tasks
+    * project the rows with the compiled `UnsafeProjection`, sort them with
+    * Spark's own within-partition sorter (`SortExec.createSorter`, so it
+    * spills and orders ties as a planned `SortExec` does) and route and
+    * write them ([[kernel]]). The job runs as one `"data plane"` SQL
+    * execution whose plan is the prepared plan with its scan rebound to the
+    * batch's rows, so listeners and the SQL UI still see the kernel.
+    */
+  private[graft] final class Kernel(spark: SparkSession, source: StructType,
+                                   controlTopic: String) {
+    kernelsPrepared.incrementAndGet()
+
+    private val frame = kernelFrame(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], source), controlTopic)
+    // the prepared physical plan, over an empty scan of `source`
+    private val plan: SparkPlan = frame.queryExecution.executedPlan
+
+    private val (sort, project, scan) =
+      plan.collect { case n if !n.isInstanceOf[WholeStageCodegenExec] && !n.isInstanceOf[InputAdapter] => n } match {
+        case Seq(s: SortExec, p: ProjectExec, r: RDDScanExec) if !s.global => (s, p, r)
+        case _ => throw new IllegalStateException(
+          s"the data-plane kernel did not plan to a sort over a projection of its input:\n$plan")
+      }
+    // the sorter's plan: the prepared sort over a leaf of the projection's
+    // output, so a task ships no RDD
+    private val sorter = sort.withNewChildren(Seq(LocalTableScanExec(project.output, Nil, None)))
+      .asInstanceOf[SortExec]
+
+    /** The writers of the points and the dead-letter files. */
+    val points = new DataFileWriter(spark, StructType(PointCols.map(frame.schema.fields)))
+    val dead = new DataFileWriter(spark, StructType(DeadCols.map(frame.schema.fields)))
+
+    /** Whether `batch` is a batch of `source`: the same column names and
+      * types, no column nullable where `source`'s is not (the compiled
+      * projection skips null checks there).
+      */
+    private def fits(batch: StructType): Boolean =
+      batch.length == source.length && batch.fields.zip(source.fields).forall { case (b, s) =>
+        b.name == s.name && b.dataType == s.dataType && (s.nullable || !b.nullable)
+      }
+
+    /** Runs the kernel's one job over `batch`'s rows and returns each
+      * task's output. A batch that does not fit the compiled schema fails
+      * before any work.
+      */
+    def run(batch: DataFrame, devices: Set[String], pointsDir: Option[String],
+            deadDir: Option[String]): Array[KernelTask] = {
+      if (!fits(batch.schema)) throw new IllegalArgumentException(
+        s"data plane: the batch's schema ${batch.schema.simpleString} is not the one its " +
+          s"kernel was compiled for (${source.simpleString})")
+      val (relation, rows) = batch.queryExecution.logical match {
+        case r: LogicalRDD => (r, r.rdd)
+        case other => (other, batch.queryExecution.toRdd)
+      }
+      val shown = plan.transformUp { case s: RDDScanExec => s.copy(rdd = rows) }
+      val task = kernel(project.projectList, scan.output, sorter, devices,
+        pointsDir.map((points, _)), deadDir.map((dead, _)))
+      SQLExecution.withNewExecutionId(shim.preparedExecution(spark, relation, shown), Some("data plane")) {
+        spark.sparkContext.runJob(rows, task)
+      }
+    }
+  }
+
   /** One kernel task's output: the hidden names of the files it wrote and
     * its registered points' distinct keys.
     */
-  private[streaming] final case class KernelTask(points: Option[String], dead: Option[String],
-                                                 keys: Array[(String, String)])
+  private[graft] final case class KernelTask(points: Option[String], dead: Option[String],
+                                             keys: Array[(String, String)])
 
-  /** The kernel's per-partition function over the sorted kernel rows:
-    * routes each row and writes the files a defined output asks for (a
-    * fenced table's is None).
+  /** The kernel's per-partition function over a split of input rows:
+    * projects them through `projection` (bound to `input`), sorts them
+    * with `sort`'s sorter, routes each row and writes the files a defined
+    * output asks for (a fenced table's is None).
     */
-  private def kernel(devices: Set[String], pointsOut: Option[(DataFileWriter, String)],
+  private def kernel(projection: Seq[Expression], input: Seq[Attribute], sort: SortExec,
+                     devices: Set[String], pointsOut: Option[(DataFileWriter, String)],
                      deadOut: Option[(DataFileWriter, String)]): (TaskContext, Iterator[InternalRow]) => KernelTask =
-    (_, rows) => {
+    (ctx, in) => {
+      val project = UnsafeProjection.create(projection, input)
+      project.initialize(ctx.partitionId)
+      val rows = sort.createSorter().sort(in.map(project(_)))
       def flag(r: InternalRow, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
       var pf: DataFileWriter.Open = null
       var df: DataFileWriter.Open = null

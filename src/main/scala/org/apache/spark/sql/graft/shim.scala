@@ -37,4 +37,18 @@ object shim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A QueryExecution over a physical plan prepared elsewhere: its
+    * `executedPlan` is `plan` as given, so running a job under it
+    * (`SQLExecution.withNewExecutionId`) shows listeners and the SQL UI
+    * that plan with no analysis, optimization or planning. `logical` is
+    * the relation the plan reads.
+    */
+  def preparedExecution(spark: org.apache.spark.sql.SparkSession,
+                        logical: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+                        plan: org.apache.spark.sql.execution.SparkPlan): org.apache.spark.sql.execution.QueryExecution =
+    new org.apache.spark.sql.execution.QueryExecution(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], logical) {
+      override def executedPlan: org.apache.spark.sql.execution.SparkPlan = plan
+    }
 }

@@ -1386,6 +1386,57 @@ class InfluxQLSpec extends SparkSuite {
     cat.run("DROP DATABASE ghost")
   }
 
+  test("database checks read the _databases snapshot: a warm SELECT reads no _databases file") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = java.nio.file.Files.createTempDirectory("catalog_dbnames").toString
+    val a = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    val b = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the plans of everything `body` ran, once the listener bus delivered
+    // them (a sentinel query run after it marks the end)
+    var n = 0
+    def executed(body: => Unit): Seq[String] = {
+      plans.clear()
+      body
+      n += 1
+      spark.range(1).toDF(s"dbnames_sentinel_$n").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def all = plans.toArray(Array.empty[SparkPlan]).toSeq.map(_.toString)
+      while (!all.exists(_.contains(s"dbnames_sentinel_$n")) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(all.exists(_.contains(s"dbnames_sentinel_$n")), "listeners delivered nothing within 30 s")
+      all
+    }
+    def reads(plans: Seq[String]) = plans.count(_.contains("_databases"))
+    spark.listenerManager.register(l)
+    try {
+      // the first check after a commit decodes the snapshot (CREATE lists
+      // the databases it leaves) ...
+      assert(reads(executed(a.run("CREATE DATABASE tele").collect())) >= 1)
+      // ... then a /write and a SELECT, through either catalog on the
+      // root, read none
+      val warm = executed {
+        a.writePoints("tele", pts(("d", "temp", 1L, 1.0), ("d", "temp", 2L, 3.0)))
+        assert(a.run("SELECT mean(value) FROM temp").as[Double].collect().toSeq == Seq(2.0))
+        assert(b.run("SELECT mean(value) FROM temp").as[Double].collect().toSeq == Seq(2.0))
+      }
+      assert(warm.nonEmpty && reads(warm) == 0, s"a warm SELECT read _databases:\n${warm.mkString("\n")}")
+      // CREATE and DROP through one catalog show at the other's next statement
+      b.run("CREATE DATABASE other")
+      assert(a.run("SHOW DATABASES").as[String].collect().toSeq == Seq("other", "tele"))
+      a.run("DROP DATABASE tele")
+      assert(intercept[IllegalArgumentException](b.run("SELECT mean(value) FROM temp"))
+        .getMessage.contains("database not found"))
+      b.run("CREATE DATABASE tele")
+      assert(a.run("SELECT mean(value) FROM temp").collect().isEmpty)
+      assert(b.run("SHOW DATABASES").as[String].collect().toSeq == Seq("other", "tele"))
+    } finally spark.listenerManager.unregister(l)
+  }
+
   test("database routing: qualified FROM forms, ON <db> SHOW, rp validation") {
     val root = java.nio.file.Files.createTempDirectory("catalog_route").toString
     val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "main")

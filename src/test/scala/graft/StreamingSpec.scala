@@ -894,6 +894,143 @@ class StreamingSpec extends SparkSuite {
     assert(dead.nonEmpty && dead == bits(wantDead))
   }
 
+  test("data plane kernel: each file's row order equals sortWithinPartitions of its input split") {
+    implicit val sq = spark.sqlContext
+    import graft.ingest.Ingest
+    val events = "openchirp/service/s/thing/events"
+    val registered = Set("dev1", "dev2")
+    val t0 = 1704067200000000L
+    // ties on (device_id, ts) with different transducers, in an arrival
+    // order that is not transducer-sorted, spread over three input splits
+    val batches = Seq(
+      (0 until 90).map { i =>
+        val td = Seq("x", "Temp", "hum")((i / 3 + i) % 3)
+        (s"openchirp/device/dev${1 + i / 3 % 2}/$td", s"${i % 7}.25", t0 + (i / 6) % 4 * 1000L)
+      },
+      (0 until 60).map { i =>
+        val dev = Seq("dev2", "dev1", "ghost")(i % 3)
+        (s"openchirp/device/$dev/t${(60 - i) % 5}", if (i % 4 == 0) "-0.0" else s"$i", t0 + (i % 3) * 1000L)
+      })
+    def asMessages(df: org.apache.spark.sql.DataFrame) = df.toDF("topic", "payload", "ts_us")
+      .select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts"))
+    def bits(r: org.apache.spark.sql.Row): String =
+      r.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x }.mkString("|")
+    // the reference: the batch pipeline's registered points, sorted
+    // within each input split of the same micro-batch
+    val want = new java.util.concurrent.ConcurrentHashMap[Long, Map[Int, Seq[String]]]()
+    val refIn = MemoryStream[(String, String, Long)](3)
+    val ref = asMessages(refIn.toDF()).writeStream
+      .option("checkpointLocation", tmp("kernel_order_ref_cp"))
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        val sorted = Ingest.inferTypes(Ingest.parseTopic(b))
+          .withColumn("ts_us", unix_micros(col("ts")))
+          .sortWithinPartitions("device_id", "ts")
+          .filter(Ingest.dataTopicFilter && col("device_id").isin(registered.toSeq: _*))
+          .select("device_id", "transducer", "ts", "num", "bool", "str", "ts_us")
+        val parts = sorted.rdd.mapPartitionsWithIndex((p, rows) => Iterator((p, rows.map(bits).toList)))
+          .collect().filter(_._2.nonEmpty).toMap
+        want.put(id, parts); ()
+      }
+      .start()
+    val root = tmp("kernel_order")
+    val points = new graft.storage.TxLogTable(spark, s"$root/points")
+    val in = MemoryStream[(String, String, Long)](3)
+    val q = StreamingIngest.startDataPlane(asMessages(in.toDF()), events,
+      points = points, deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => registered, appId = "kernel-order", checkpoint = tmp("kernel_order_cp"),
+      trigger = Trigger.ProcessingTime(0))
+    val PartFile = "part-(\\d+)-.*\\.parquet".r
+    val got = try {
+      batches.map { b =>
+        in.addData(b); refIn.addData(b)
+        q.processAllAvailable(); ref.processAllAvailable()
+        val dirs = points.dirPaths(points.version.get).toSet --
+          points.version.filter(_ > 0).map(v => points.dirPaths(v - 1)).getOrElse(Nil)
+        dirs.toSeq.flatMap(d => new java.io.File(d).listFiles.toSeq).flatMap { f =>
+          f.getName match {
+            case PartFile(p) => Some(p.toInt -> spark.read.parquet(f.getPath).collect().toSeq.map(bits))
+            case _ => None
+          }
+        }.toMap
+      }
+    } finally { q.stop(); ref.stop() }
+    assert(got.size == 2 && got.forall(_.size >= 2), s"expected several splits per batch: ${got.map(_.keySet)}")
+    assert(got.flatMap(_.values).exists { rows =>
+        val keys = rows.map(_.split('|')).map(f => (f(0), f(2)))
+        keys.distinct.size < keys.size
+      },
+      "no file holds a (device_id, ts) tie")
+    got.zipWithIndex.foreach { case (files, i) =>
+      assert(files == want.get(i.toLong), s"batch $i: file order differs from sortWithinPartitions")
+    }
+  }
+
+  test("data plane kernel: planned once per query; a batch of another schema is refused") {
+    implicit val sq = spark.sqlContext
+    import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val events = "openchirp/service/s/thing/events"
+    val root = tmp("kernel_once")
+    val in = MemoryStream[(String, String, Long)](2)
+    val msgs = in.toDF().toDF("topic", "payload", "ts_us")
+      .select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add((f, qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val prepared = StreamingIngest.kernelsPrepared.get
+    val q = StreamingIngest.startDataPlane(msgs, events,
+      points = new graft.storage.TxLogTable(spark, s"$root/points"),
+      deadLetters = new graft.storage.TxLogTable(spark, s"$root/dead_letters"),
+      registered = () => Set("d1"), appId = "kernel-once", checkpoint = s"$root/cp",
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      (1 to 4).foreach { i =>
+        in.addData((s"openchirp/device/d1/t$i", s"$i.5", i * 1000L), ("noise", "x", i * 1000L))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(StreamingIngest.kernelsPrepared.get - prepared == 1,
+      s"the kernel was prepared ${StreamingIngest.kernelsPrepared.get - prepared} times for one query")
+    // drain the asynchronous listener bus with a sentinel query
+    spark.range(1).toDF("kernel_once_sentinel").collect()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def seen = plans.toArray(Array.empty[(String, SparkPlan)]).exists(_._2.output.exists(_.name == "kernel_once_sentinel"))
+    while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+    spark.listenerManager.unregister(l)
+    assert(seen, "listeners delivered nothing within 30 s")
+    val kernels = plans.toArray(Array.empty[(String, SparkPlan)]).toSeq.collect { case ("data plane", p) => p }
+    assert(kernels.size == 4, s"expected one kernel execution per batch, got ${kernels.size}")
+    // every batch shows the one prepared projection and sort, its scan
+    // rebound to that batch's own rows
+    val sorts = kernels.map(_.collectFirst { case s: SortExec => s.sortOrder }.get)
+    val projections = kernels.map(_.collectFirst { case p: ProjectExec => p.projectList }.get)
+    assert(sorts.forall(_ eq sorts.head) && projections.forall(_ eq projections.head),
+      "a batch planned its own kernel")
+    assert(kernels.map(_.collectFirst { case r: RDDScanExec => r.rdd.id }.get).distinct.size == 4)
+
+    // a batch the kernel was not compiled for fails before any work: another
+    // type, another name, or a column nullable where the source's is not
+    val k = new StreamingIngest.Kernel(spark, msgs.schema, events)
+    def refused(batch: org.apache.spark.sql.DataFrame) =
+      intercept[IllegalArgumentException](k.run(batch, Set("d1"), None, None)).getMessage
+    val good = Seq(("openchirp/device/d1/t", "1.5", 1000L)).toDF("topic", "payload", "ts_us")
+    assert(refused(good.select(col("topic"), col("payload"), col("ts_us").as("ts")))
+      .contains("not the one its kernel was compiled for"))
+    assert(refused(good.select(col("topic"), col("payload").as("value"), timestamp_micros(col("ts_us")).as("ts")))
+      .contains("not the one its kernel was compiled for"))
+    assert(!msgs.schema("ts").nullable)
+    assert(refused(Seq(("openchirp/device/d1/t", "1.5", Option(1000L))).toDF("topic", "payload", "ts_us")
+      .select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts")))
+      .contains("not the one its kernel was compiled for"))
+    val out = k.run(good.select(col("topic"), col("payload"), timestamp_micros(col("ts_us")).as("ts")),
+      Set("d1"), None, None)
+    assert(out.flatMap(_.keys).toSeq == Seq(("d1", "t")))
+  }
+
   test("streaming wide view: dedup + map build close after watermark, duplicates collapse") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(String, String, Long, Double)]
