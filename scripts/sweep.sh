@@ -8,7 +8,8 @@
 # Runs, in order: sbt test → Verify + check.py at sf0.01 AND sf0.1 →
 # the seeded differential nets at GRAFT_DIFF_SCALE=3 and 5 → the full
 # Bench (writes BENCH_LOCAL.json) — then appends one
-# {"event":"<round-label>", ...} line to PROGRESS.jsonl and stages
+# {"event":"<round-label>", ...} line (gate results plus the src/main and
+# src/test line counts) to PROGRESS.jsonl and stages
 # BENCH_LOCAL.json + PROGRESS.jsonl for the closing commit.
 #
 # Every stage's full log lands under /tmp/sweep_<label>/; a failed stage
@@ -97,16 +98,22 @@ else
   BENCH_TOTAL=null
 fi
 
-# 5. record + stage
+# 5. source size: net src/main lines is the number every change reports
+lines() { find "src/$1" -name '*.scala' | xargs cat | wc -l; }
+MAIN_LINES=$(lines main)
+TEST_LINES=$(lines test)
+
+# 6. record + stage
 python3 - "$LABEL" "$NOTE" "$TESTS" "$SUITES" "$ORACLE001" "$ORACLE01" \
-    "$DIFF3" "$DIFF5" "$BENCH_TOTAL" <<'PY'
+    "$DIFF3" "$DIFF5" "$BENCH_TOTAL" "$MAIN_LINES" "$TEST_LINES" <<'PY'
 import json, sys, time
-label, note, tests, suites, o001, o01, d3, d5, bench = sys.argv[1:10]
+label, note, tests, suites, o001, o01, d3, d5, bench, main_l, test_l = sys.argv[1:12]
 line = {"event": label, "ts": time.time(), "note": note,
         "tests_pass": f"{tests} ({suites} suites)",
         "oracle_sf0_01": o001.strip(), "oracle_sf0_1": o01.strip(),
         "diff_scale3": d3.strip(), "diff_scale5": d5.strip(),
-        "bench_total_s": float(bench) if bench not in ("null", "") else None}
+        "bench_total_s": float(bench) if bench not in ("null", "") else None,
+        "src_main_lines": int(main_l), "src_test_lines": int(test_l)}
 with open("PROGRESS.jsonl", "a") as f:
     f.write(json.dumps(line) + "\n")
 print("[sweep] recorded:", json.dumps(line)[:300])

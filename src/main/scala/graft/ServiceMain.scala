@@ -144,7 +144,7 @@ object ServiceMain {
       // to expire — and must not abort the sweep for the databases after it
       if (table.version.isEmpty) None
       else TxLogTable.retryOnConflict() {
-        graft.influxql.InfluxQL.enforceRetention(
+        graft.influxql.RetentionPolicies.enforce(
           spark, table, "ts_us", dataDir, db, nowUs)
       }.map(db -> _)
     }

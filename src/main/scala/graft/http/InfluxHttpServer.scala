@@ -230,7 +230,8 @@ final class InfluxHttpServer(catalog: InfluxCatalog,
 
   // ---------- /query ----------
 
-  import InfluxHttpServer.{AuthFailed, ClientGone, Denied}
+  import InfluxHttpServer.ClientGone
+  import InfluxAuth.{AuthenticationFailed, NotAuthorized}
 
   private def handleQuery(ex: HttpExchange): Unit = {
     // InfluxDB 405s anything but GET/POST on /query — a PUT/DELETE/PATCH
@@ -294,12 +295,7 @@ final class InfluxHttpServer(catalog: InfluxCatalog,
         stmts.foreach { s =>
           try cat.authorize(u, pw, s)
           catch {
-            case e: IllegalArgumentException
-                if msgOf(e).contains("authentication failed") =>
-              throw AuthFailed(msgOf(e))
-            case e: IllegalArgumentException
-                if msgOf(e).contains("not authorized") =>
-              throw Denied(msgOf(e))
+            case e @ (_: AuthenticationFailed | _: NotAuthorized) => throw e
             case _: Exception => () // unrunnable statement: no side effects
           }
         }
@@ -327,8 +323,8 @@ final class InfluxHttpServer(catalog: InfluxCatalog,
         respondJson(ex, 200, if (pretty) InfluxHttpServer.prettyJson(body) else body)
       }
     } catch {
-      case AuthFailed(m) => err(ex, 401, m)
-      case Denied(m) => err(ex, 403, s"error authorizing query: $m")
+      case e: AuthenticationFailed => err(ex, 401, msgOf(e))
+      case e: NotAuthorized => err(ex, 403, s"error authorizing query: ${msgOf(e)}")
     }
   }
 
@@ -827,12 +823,6 @@ object InfluxHttpServer {
       qs.map(q => q -> snap(math.min(n - 1, (q * n).toInt)) / 1e9)
     }
   }
-
-  /** 401/403 carriers — auth outcomes abort the whole request, unlike
-    * per-statement plan errors.
-    */
-  private final case class AuthFailed(msg: String) extends RuntimeException(msg)
-  private final case class Denied(msg: String) extends RuntimeException(msg)
 
   /** Marks an IOException thrown by the RESPONSE write (dead client) as
     * distinct from an engine-side IOException inside a statement — the

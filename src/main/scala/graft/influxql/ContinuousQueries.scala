@@ -29,23 +29,31 @@ object ContinuousQueries {
   private def table(spark: SparkSession, root: String) =
     new TxLogTable(spark, s"$root/_continuous_queries")
 
-  private def defs(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val t = table(spark, root)
-    if (t.version.isEmpty) Seq.empty[(String, String, String)].toDF("db", "name", "query")
-    else t.read()
-  }
+  /** One registered CQ: its stored DDL text and, parsed once per registry
+    * commit, its INTO target.
+    */
+  private final case class Def(db: String, name: String, query: String,
+                               target: Option[String])
+
+  /** The registry, (db, name)-ordered, as a driver-side snapshot. */
+  private def defs(spark: SparkSession, root: String): TxLogTable.Snapshot[Seq[Def]] =
+    table(spark, root).snapshot("defs")(_.map { r =>
+      val q = r.getAs[String]("query")
+      Def(r.getAs[String]("db"), r.getAs[String]("name"), q, targetOf(q))
+    }.sortBy(d => (d.db, d.name)))
 
   /** SHOW shape: (db, name, query) ordered by (db, name). */
-  def show(spark: SparkSession, root: String): DataFrame =
-    defs(spark, root).select("db", "name", "query").orderBy("db", "name")
+  def show(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    defs(spark, root).value.map(d => (d.db, d.name, d.query)).toDF("db", "name", "query")
+  }
 
   /** INTO target of one registered CQ definition (its stored DDL text).
     * Registered defs always parse (CREATE validated them), but a row
     * hand-edited into the registry degrades to None rather than wedging
     * every write that consults the target set.
     */
-  private[influxql] def targetOf(ddl: String): Option[String] =
+  private def targetOf(ddl: String): Option[String] =
     selectOf(ddl).flatMap(_.into.filter(_ != ":MEASUREMENT"))
 
   /** The inner SELECT of one registered CQ definition, or None if its
@@ -58,33 +66,18 @@ object ContinuousQueries {
       if (p.done) None else Some(InfluxQL.parseQuery(p))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Cheap no-CQs fast path: a pure commit-log file probe, no Spark job —
-    * what keeps the write faces' per-request sole-writer consult free on
-    * deployments that registered no continuous queries at all.
-    */
-  def anyDefined(spark: SparkSession, root: String): Boolean =
-    table(spark, root).version.isDefined
-
   /** The registered CQ target measurements of `db` — the tables the
     * sole-writer contract reserves for their CQs. The fill frontier's
     * dense-grid invariant (every (series, bucket) cell of the committed
     * range present — what seeds LOCF carries and linear's donor runs)
     * only holds while the CQ is its target's sole content writer, so the
     * write faces consult this set and REFUSE external appends into it.
-    * The write faces ask on EVERY append (every UDP flush included) and
-    * the registry only changes on CREATE/DROP, so the targets of every db
-    * are parsed once per registry commit ([[TxLogTable.snapshot]]): steady
-    * state is a commit-log file probe + map hit, never a Spark collect —
-    * even on a deployment whose LAST CQ was dropped (the registry table
-    * stays committed forever, so [[anyDefined]] alone cannot restore the
-    * free path).
+    * The write faces ask on EVERY append (every UDP flush included), so
+    * the set is a lookup on the registry's driver-side snapshot, whose
+    * targets were parsed once per registry commit.
     */
   def cqTargets(spark: SparkSession, root: String, db: String): Set[String] =
-    table(spark, root).snapshot("cqTargets")(
-      _.select("db", "query").collect().toSeq
-        .groupMap(_.getString(0))(r => targetOf(r.getString(1)))
-        .map { case (d, ts) => d -> ts.flatten.toSet })
-      .flatMap(_.get(db)).getOrElse(Set.empty)
+    defs(spark, root).value.filter(_.db == db).flatMap(_.target).toSet
 
   /** Parse + execute one CQ management statement; every form returns the
     * refreshed SHOW CONTINUOUS QUERIES surface.
@@ -106,11 +99,11 @@ object ContinuousQueries {
     p.expectKw("ON")
     val db = p.ident()
     if (requireDb != null) requireDb(db)
-    def exists: Boolean = defs(spark, root)
-      .filter(col("db") === db && col("name") === name).limit(1).count() > 0
+    def exists(s: TxLogTable.Snapshot[Seq[Def]]): Boolean =
+      s.value.exists(d => d.db == db && d.name == name)
     if (!create) {
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      if (!exists) throw new IllegalArgumentException(
+      if (!exists(defs(spark, root))) throw new IllegalArgumentException(
         s"InfluxQL: continuous query not found: $name on $db")
       table(spark, root).delete(col("db") === db && col("name") === name)
       return show(spark, root)
@@ -145,7 +138,8 @@ object ContinuousQueries {
     // of concurrent CREATEs of one name or target exactly one lands
     table(spark, root).appendChecked(
         Seq((db, name, text.trim)).toDF("db", "name", "query")) {
-      if (exists) throw new IllegalArgumentException(
+      val s = defs(spark, root)
+      if (exists(s)) throw new IllegalArgumentException(
         s"InfluxQL: continuous query already exists: $name on $db")
       // sole-writer contract, enforced at DDL time (a CQ that could never
       // hold its fill invariant must fail at CREATE): the raw points table
@@ -158,10 +152,11 @@ object ContinuousQueries {
       if (target == "points")
         p.fail("a continuous query cannot target the raw 'points' measurement" +
           " — the write faces own it and would break the CQ's fill invariant")
-      if (cqTargets(spark, root, db).contains(target))
+      if (s.value.exists(d => d.db == db && d.target.contains(target)))
         throw new IllegalArgumentException(
           s"InfluxQL: continuous query target $target on $db already belongs " +
             "to another continuous query (CQ targets have exactly one writer)")
+      s.version
     }
     show(spark, root)
   }
@@ -182,11 +177,8 @@ object ContinuousQueries {
   def startAll(spark: SparkSession, root: String, db: String,
                streamPoints: DataFrame, lateness: String = "1 minute",
                trigger: Trigger = Trigger.AvailableNow()): Seq[(String, StreamingQuery)] = {
-    import spark.implicits._
-    defs(spark, root).filter(col("db") === db)
-      .select("name", "query").as[(String, String)].collect().toSeq
-      .sortBy(_._1)
-      .map { case (name, ddl) =>
+    defs(spark, root).value.filter(_.db == db)
+      .map { case Def(_, name, ddl, _) =>
         // RESAMPLE EVERY replaces this schedule inside startContinuousQuery
         val schedule =
           if (trigger == Trigger.AvailableNow()) trigger

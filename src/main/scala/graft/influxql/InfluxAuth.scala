@@ -25,7 +25,9 @@ import InfluxQL.{tokenize, P, TStr}
   * State lives in two control-plane [[TxLogTable]]s under the catalog root
   * (`_users`: user, pw_hash, is_admin; `_grants`: user, db, privilege) —
   * the same ACID history as every other piece of catalog metadata, rows
-  * bounded by the number of users × databases.
+  * bounded by the number of users × databases. Both are read as
+  * driver-side snapshots ([[TxLogTable.snapshot]]), so authenticating and
+  * authorizing a request are map lookups, never a Spark job.
   *
   * Semantics follow InfluxDB 1.x's meta store:
   *   - CREATE USER fails on an existing user; DROP USER / SET PASSWORD /
@@ -43,6 +45,12 @@ import InfluxQL.{tokenize, P, TStr}
   */
 object InfluxAuth {
 
+  /** The credentials match no stored user and password (HTTP 401). */
+  final class AuthenticationFailed(msg: String) extends IllegalArgumentException(msg)
+
+  /** An authenticated user lacks the statement's privilege (HTTP 403). */
+  final class NotAuthorized(msg: String) extends IllegalArgumentException(msg)
+
   private def usersTable(spark: SparkSession, root: String) =
     new TxLogTable(spark, s"$root/_users")
   private def grantsTable(spark: SparkSession, root: String) =
@@ -55,57 +63,49 @@ object InfluxAuth {
     d.map("%02x".format(_)).mkString
   }
 
-  private def users(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val t = usersTable(spark, root)
-    if (t.version.isEmpty)
-      Seq.empty[(String, String, Boolean)].toDF("user", "pw_hash", "is_admin")
-    else t.read()
-  }
+  /** `_users` as user -> (pw_hash, is_admin). */
+  private def users(spark: SparkSession, root: String)
+      : TxLogTable.Snapshot[Map[String, (String, Boolean)]] =
+    usersTable(spark, root).snapshot("users")(_.map(r => r.getAs[String]("user") ->
+      (r.getAs[String]("pw_hash"), r.getAs[Boolean]("is_admin"))).toMap)
 
-  private def grants(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val t = grantsTable(spark, root)
-    if (t.version.isEmpty)
-      Seq.empty[(String, String, String)].toDF("user", "db", "privilege")
-    else t.read()
-  }
+  /** `_grants` as (user, db) -> the one privilege the pair holds. */
+  private def grants(spark: SparkSession, root: String)
+      : TxLogTable.Snapshot[Map[(String, String), String]] =
+    grantsTable(spark, root).snapshot("grants")(_.map(r =>
+      (r.getAs[String]("user"), r.getAs[String]("db")) -> r.getAs[String]("privilege")).toMap)
 
-  private def userExists(spark: SparkSession, root: String, u: String): Boolean =
-    users(spark, root).filter(col("user") === u).limit(1).count() > 0
-
-  private def requireUser(spark: SparkSession, root: String, u: String): Unit =
-    if (!userExists(spark, root, u)) throw new IllegalArgumentException(
-      s"InfluxQL: user not found: $u")
+  /** The user's (pw_hash, is_admin); fails on a missing user. */
+  private def requireUser(spark: SparkSession, root: String, u: String): (String, Boolean) =
+    users(spark, root).value.getOrElse(u,
+      throw new IllegalArgumentException(s"InfluxQL: user not found: $u"))
 
   /** SHOW USERS shape: (user, admin) ordered by user. */
-  def showUsers(spark: SparkSession, root: String): DataFrame =
-    users(spark, root).select(col("user"), col("is_admin").as("admin"))
-      .orderBy("user")
+  def showUsers(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    users(spark, root).value.toSeq.sortBy(_._1)
+      .map { case (u, (_, admin)) => (u, admin) }.toDF("user", "admin")
+  }
 
   /** SHOW GRANTS FOR u shape: (database, privilege) ordered by database,
     * privilege rendered the InfluxDB way (`ALL PRIVILEGES` for ALL).
     */
   def showGrants(spark: SparkSession, root: String, u: String): DataFrame = {
+    import spark.implicits._
     requireUser(spark, root, u)
-    grants(spark, root).filter(col("user") === u)
-      .select(col("db").as("database"),
-        when(col("privilege") === "ALL", "ALL PRIVILEGES")
-          .otherwise(col("privilege")).as("privilege"))
-      .orderBy("database")
+    grants(spark, root).value.toSeq
+      .collect { case ((`u`, db), p) => (db, if (p == "ALL") "ALL PRIVILEGES" else p) }
+      .sortBy(_._1).toDF("database", "privilege")
   }
 
   /** True iff (user, password) matches the stored digest. */
   def authenticate(spark: SparkSession, root: String, u: String,
                    password: String): Boolean =
-    users(spark, root)
-      .filter(col("user") === u && col("pw_hash") === hashPassword(u, password))
-      .limit(1).count() > 0
+    users(spark, root).value.get(u).exists(_._1 == hashPassword(u, password))
 
   /** True iff `u` holds the global admin flag. */
   def isAdmin(spark: SparkSession, root: String, u: String): Boolean =
-    users(spark, root).filter(col("user") === u && col("is_admin")).limit(1)
-      .count() > 0
+    users(spark, root).value.get(u).exists(_._2)
 
   /** True iff `u` may `need` ("READ" | "WRITE") on `db`: admin always,
     * else the held privilege must be `need` or ALL.
@@ -113,14 +113,12 @@ object InfluxAuth {
   def authorized(spark: SparkSession, root: String, u: String, db: String,
                  need: String): Boolean =
     isAdmin(spark, root, u) ||
-      grants(spark, root).filter(col("user") === u && col("db") === db &&
-        (col("privilege") === need || col("privilege") === "ALL"))
-        .limit(1).count() > 0
+      grants(spark, root).value.get((u, db)).exists(p => p == need || p == "ALL")
 
   /** Parse + execute one user-management statement. Mutations return the
     * refreshed SHOW USERS (user statements) or SHOW GRANTS FOR the target
     * (grant statements), so every statement answers with the surface it
-    * changed — the [[InfluxQL.runRetention]] convention.
+    * changed — the [[RetentionPolicies.run]] convention.
     */
   def run(spark: SparkSession, root: String, text: String): DataFrame = {
     import spark.implicits._
@@ -156,8 +154,10 @@ object InfluxAuth {
       // of concurrent CREATEs of one user exactly one lands
       uTab.appendChecked(Seq((u, hashPassword(u, pw), admin))
           .toDF("user", "pw_hash", "is_admin")) {
-        if (userExists(spark, root, u)) throw new IllegalArgumentException(
+        val s = users(spark, root)
+        if (s.value.contains(u)) throw new IllegalArgumentException(
           s"InfluxQL: user already exists: $u")
+        s.version
       }
       return showUsers(spark, root)
     }
@@ -176,9 +176,8 @@ object InfluxAuth {
       p.expectSym("=")
       val pw = str(p)
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      requireUser(spark, root, u)
-      // merge needs full rows (one-user control-plane lookup, never data)
-      val admin = isAdmin(spark, root, u)
+      // merge needs full rows
+      val (_, admin) = requireUser(spark, root, u)
       uTab.merge(Seq((u, hashPassword(u, pw), admin))
         .toDF("user", "pw_hash", "is_admin"), keys = Seq("user"))
       return showUsers(spark, root)
@@ -193,9 +192,7 @@ object InfluxAuth {
       val u = p.ident()
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
       requireUser(spark, root, u)
-      val current = grants(spark, root)
-        .filter(col("user") === u && col("db") === db)
-        .select("privilege").as[String].collect().headOption
+      val current = grants(spark, root).value.get((u, db))
       if (grant) // GRANT replaces the held privilege (InfluxDB SetPrivilege)
         gTab.merge(Seq((u, db, priv)).toDF("user", "db", "privilege"),
           keys = Seq("user", "db"))
@@ -216,9 +213,7 @@ object InfluxAuth {
     p.expectKw(if (grant) "TO" else "FROM")
     val u = p.ident()
     if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-    val hash = users(spark, root).filter(col("user") === u)
-      .select("pw_hash").as[String].collect().headOption.getOrElse(
-        throw new IllegalArgumentException(s"InfluxQL: user not found: $u"))
+    val (hash, _) = requireUser(spark, root, u)
     uTab.merge(Seq((u, hash, grant)).toDF("user", "pw_hash", "is_admin"),
       keys = Seq("user"))
     showUsers(spark, root)

@@ -22,7 +22,7 @@ import graft.storage.TxLogTable
   * carries the same ACID history as the data it governs:
   *
   *   <root>/_databases            control plane: one row per database
-  *   <root>/_retention_policies   shared per-(db, policy) rows (runRetention)
+  *   <root>/_retention_policies   shared per-(db, policy) rows (RetentionPolicies)
   *   <root>/<db>/points           the db's points table (narrow layout)
   *   <root>/<db>/<target>         SELECT ... INTO targets for that db
   *
@@ -37,10 +37,13 @@ import graft.storage.TxLogTable
   *     store (unknown rp fails like InfluxDB); storage is per-db, not
   *     per-rp — policies govern expiry, not placement, in this engine.
   *
-  * Scale posture: `_databases` and `_retention_policies` are control-plane
-  * tables (rows = number of databases/policies); every data-plane statement
-  * routes to ONE db's points table and plans there — the catalog adds no
-  * join, shuffle, or scan of its own.
+  * Scale posture: `_databases`, `_retention_policies`, `_field_types` and
+  * the user, CQ and subscription registries are control-plane tables (rows
+  * = number of databases, policies, fields, ...), each read as a
+  * driver-side snapshot ([[TxLogTable.snapshot]]) decoded once per commit:
+  * a metadata check is a lookup, never a Spark job. Every data-plane
+  * statement routes to ONE db's points table and plans there — the
+  * catalog adds no join, shuffle, or scan of its own.
   */
 final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
                           val defaultDb: String = "graft",
@@ -78,8 +81,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     * the next statement.
     */
   def databaseNames(): Seq[String] =
-    dbTable.snapshot("names")(_.select("name").collect().map(_.getString(0)).toSeq.sorted)
-      .getOrElse(Seq.empty)
+    dbTable.snapshot("names")(_.map(_.getAs[String]("name")).sorted).value
 
   def databaseExists(db: String): Boolean = databaseNames().contains(db)
 
@@ -98,7 +100,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
       dbTable.merge(Seq(db).toDF("name"), Seq("name"))
       // a NEW database gets InfluxDB's autogen policy; an existing one
       // keeps whatever policies it has (CREATE DATABASE is a no-op then)
-      InfluxQL.runRetention(spark,
+      RetentionPolicies.run(spark,
         s"CREATE RETENTION POLICY autogen ON $db DURATION INF REPLICATION 1 DEFAULT",
         rootDir)
     }
@@ -110,8 +112,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     if (databaseExists(db)) {
       // metadata first: the db stops being listed before anything else
       dbTable.delete(col("name") === db)
-      val policies = new TxLogTable(spark, s"$rootDir/_retention_policies")
-      if (policies.version.nonEmpty) policies.delete(col("db") === db)
+      RetentionPolicies.dropDatabase(spark, rootDir, db)
       // field types die with the db: a re-created db starts typeless
       val ftypes = fieldTypesTable
       if (ftypes.version.nonEmpty) ftypes.delete(col("db") === db)
@@ -405,13 +406,11 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     * dense-grid frontier (LOCF carry-bucket seeds, linear's donor-run
     * contiguity) is only valid while the CQ is its target's SOLE content
     * writer — an external append would silently mis-seed every later
-    * fill. Loud 4xx-style error, InfluxDB's partial-write idiom. One
-    * bounded control-plane registry read (same cost shape as the
-    * field-type registry this face already consults per write).
+    * fill. Loud 4xx-style error, InfluxDB's partial-write idiom. A lookup
+    * on the CQ registry's driver-side snapshot.
     */
   private def refuseCqTarget(db: String, table: String): Unit =
-    if (ContinuousQueries.anyDefined(spark, rootDir) &&
-        ContinuousQueries.cqTargets(spark, rootDir, db).contains(table))
+    if (ContinuousQueries.cqTargets(spark, rootDir, db).contains(table))
       throw new IllegalArgumentException(
         s"InfluxQL: measurement $table on $db is a continuous query target " +
           "and accepts writes only from its CQ; write to the CQ's source " +
@@ -442,17 +441,6 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
       Seq.empty[(String, String, Long, Double)]
         .toDF("device", "transducer", "ts_us", "value")
     } else t.read()
-  }
-
-  /** The db's default retention policy name (`autogen` when none is
-    * registered — the seed policy every new database gets).
-    */
-  private def defaultRp(db: String): String = {
-    val policies = new TxLogTable(spark, s"$rootDir/_retention_policies")
-    if (policies.version.isEmpty) "autogen"
-    else policies.read()
-      .filter(col("db") === db && col("is_default") === true)
-      .select("name").collect().headOption.map(_.getString(0)).getOrElse("autogen")
   }
 
   /** SHOW SHARDS — the storage-operational statement (InfluxDB's shard
@@ -491,7 +479,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
         try walk.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum
         finally walk.close()
       }
-      (id, db, defaultRp(db), id,
+      (id, db, RetentionPolicies.defaultName(spark, rootDir, db), id,
         if (stats.isNullAt(0)) None else Some(stats.getLong(0)),
         if (stats.isNullAt(1)) None else Some(stats.getLong(1)),
         stats.getLong(2), bytes)
@@ -587,22 +575,22 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     // partial-write 400, never a silent flip): registration commits FIRST
     // — a crash between the two leaves a registered type with no data,
     // which only ever REJECTS more, never corrupts. A registration is a
-    // compare-and-set on the registry version it was derived from
+    // compare-and-set on the registry snapshot it was derived from
     // (appendIfAt), so of two writers deriving from one version the
     // second's commit is refused and it re-derives against the winner's
     // types (first-seen wins JVM- and process-wide, the registry is ACID
     // like the data)
     @scala.annotation.tailrec
     def register(): Map[(String, String), String] = {
-      val at = fieldTypesTable.version
-      val known = fieldTypes(db, at)
+      val snap = fieldTypesSnapshot
+      val known = snap.value.getOrElse(db, Map.empty)
       val fresh = LineProtocol.firstSeenTypes(lines, known, tsUnitNs)
       if (fresh.isEmpty) known
       else {
         import spark.implicits._
         fieldTypesTable.appendIfAt(fresh.toSeq
           .map { case ((m, f), t) => (db, m, f, t) }
-          .toDF("db", "measurement", "field", "ftype"), at)
+          .toDF("db", "measurement", "field", "ftype"), snap.version)
         register()
       }
     }
@@ -627,16 +615,18 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
   private def fieldTypesTable: TxLogTable =
     new TxLogTable(spark, s"$rootDir/_field_types")
 
-  /** The registered first-seen types of `db` as a driver map (bounded by
-    * the db's schema size — fields × measurements, never points).
+  /** Every db's registered first-seen types, db -> (measurement, field) ->
+    * type, as a driver-side snapshot (bounded by the schema size — fields
+    * × measurements, never points).
     */
-  def fieldTypes(db: String, at: Option[Long] = fieldTypesTable.version)
-      : Map[(String, String), String] =
-    at.fold(Map.empty[(String, String), String]) { v =>
-      fieldTypesTable.readVersion(v).filter(col("db") === db)
-        .select("measurement", "field", "ftype").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    }
+  private def fieldTypesSnapshot: TxLogTable.Snapshot[Map[String, Map[(String, String), String]]] =
+    fieldTypesTable.snapshot("types")(_.groupMap(_.getAs[String]("db"))(r =>
+      (r.getAs[String]("measurement"), r.getAs[String]("field")) -> r.getAs[String]("ftype"))
+      .map { case (db, ts) => db -> ts.toMap })
+
+  /** The registered first-seen types of `db`. */
+  def fieldTypes(db: String): Map[(String, String), String] =
+    fieldTypesSnapshot.value.getOrElse(db, Map.empty)
 
   /** One statement in, one DataFrame out — the full dialect with database
     * routing. SELECT plans against the FROM qualifier's db (`defaultDb`
@@ -656,12 +646,12 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
       require(t.split("\\s+").length == 2, s"trailing input in '$t'")
       showDatabases()
     } else if (InfluxCatalog.isRetentionStmt(up))
-      InfluxQL.runRetention(spark, t, rootDir, requireDb)
+      RetentionPolicies.run(spark, t, rootDir, requireDb)
     else if (InfluxCatalog.isCqStmt(up))
       ContinuousQueries.run(spark, rootDir, t, requireDb)
     else if (InfluxCatalog.isSubscriptionStmt(up))
       Subscriptions.run(spark, rootDir, t, (db, rp) => {
-        requireDb(db); requireRp(db, rp)
+        requireDb(db); requireRetentionPolicy(db, rp)
       })
     else if (up.startsWith("CREATE USER") || up.startsWith("DROP USER") ||
              up.startsWith("SET PASSWORD") || up.startsWith("GRANT") ||
@@ -733,7 +723,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
       if (q.into.nonEmpty) {
         val db = q.fromDb.getOrElse(defaultDb)
         requireDb(db)
-        q.fromRp.foreach(requireRp(db, _))
+        q.fromRp.foreach(requireRetentionPolicy(db, _))
         InfluxQL.runInto(points(db), stripQualifier(t, q), s"$rootDir/$db",
           refuseTarget = refuseCqTarget(db, _))
           .toDF("target", "version")
@@ -756,7 +746,8 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     *     documented simplification, the data path stays gated)
     *
     * Admins pass every check. Authentication failure and authorization
-    * failure are distinct, loud errors.
+    * failure are distinct, loud errors: [[InfluxAuth.AuthenticationFailed]]
+    * and [[InfluxAuth.NotAuthorized]].
     */
   def runAs(user: String, password: String, text: String): DataFrame = {
     authorize(user, password, text)
@@ -772,11 +763,11 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     */
   def authorize(user: String, password: String, text: String): Unit = {
     if (!InfluxAuth.authenticate(spark, rootDir, user, password))
-      throw new IllegalArgumentException(
+      throw new InfluxAuth.AuthenticationFailed(
         s"InfluxQL: authentication failed for user $user")
     val t = text.trim
     val up = t.toUpperCase
-    def deny(what: String): Nothing = throw new IllegalArgumentException(
+    def deny(what: String): Nothing = throw new InfluxAuth.NotAuthorized(
       s"InfluxQL: user $user is not authorized ($what required)")
     def needAdmin(): Unit =
       if (!InfluxAuth.isAdmin(spark, rootDir, user)) deny("admin")
@@ -952,7 +943,7 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     val q = InfluxQL.parse(text)
     val db = q.fromDb.getOrElse(defaultDb)
     requireDb(db)
-    q.fromRp.foreach(requireRp(db, _))
+    q.fromRp.foreach(requireRetentionPolicy(db, _))
     val local = q.copy(fromDb = None, fromRp = None)
     if (pointsTable(db).version.isEmpty) InfluxQL.planEmpty(spark, local)
     else InfluxQL.planResolved(points(db), local)
@@ -963,15 +954,9 @@ final class InfluxCatalog(val spark: SparkSession, val rootDir: String,
     * policy governs expiry, not placement — but an unknown name still
     * fails loudly like InfluxDB's 404).
     */
-  def requireRetentionPolicy(db: String, rp: String): Unit = requireRp(db, rp)
-
-  private def requireRp(db: String, rp: String): Unit = {
-    val policies = new TxLogTable(spark, s"$rootDir/_retention_policies")
-    val known = policies.version.nonEmpty &&
-      policies.read().filter(col("db") === db && col("name") === rp).count() > 0
-    if (!known) throw new IllegalArgumentException(
-      s"InfluxQL: retention policy not found: $rp on $db")
-  }
+  def requireRetentionPolicy(db: String, rp: String): Unit =
+    if (!RetentionPolicies.exists(spark, rootDir, db, rp))
+      throw new IllegalArgumentException(s"InfluxQL: retention policy not found: $rp on $db")
 
   /** `CREATE DATABASE x` / `DROP DATABASE x`: the identifier at word `i`.
     * Accepts the double-quoted form every stock client sends

@@ -1247,135 +1247,6 @@ object InfluxQL {
     table.delete(conds.map(condColumn).foldLeft(from)(_ && _))
   }
 
-  /** Retention-policy DDL — the statements that make expiry expressible in
-    * the dialect instead of a Scala API call (the InfluxDB user's actual
-    * interface to the engine's retention primitives):
-    *
-    *   CREATE RETENTION POLICY <name> ON <db> DURATION <dur|INF>
-    *     [REPLICATION <n>] [DEFAULT]
-    *   ALTER  RETENTION POLICY <name> ON <db> [same clauses]
-    *   DROP   RETENTION POLICY <name> ON <db>
-    *   SHOW   RETENTION POLICIES [ON <db>]
-    *
-    * Policies persist in a [[graft.storage.TxLogTable]] at
-    * `<root>/_retention_policies` — control-plane rows with the same ACID
-    * history as the data they govern. DURATION INF stores -1 (never
-    * expires); a finite duration must be >= 1h (InfluxDB's floor). DEFAULT
-    * flips the db's previous default off in the same commit
-    * (one-default-per-db). CREATE is an upsert (idempotent re-issue, like
-    * re-running any of this engine's DDL). Every statement returns the
-    * affected db's policies in SHOW shape:
-    * (db, name, duration_us, replica_n, is_default) ordered by name.
-    *
-    * Enforcement is a separate, schedulable step — [[retentionCutoffUs]]
-    * feeds [[graft.storage.TxLogTable.expireOlderThan]] (×1000 for the ns
-    * point store) or day-floors into
-    * [[graft.storage.PointStore.expirePartitionsBefore]]; or call
-    * [[enforceRetention]] for the one-line form.
-    */
-  def runRetention(spark: org.apache.spark.sql.SparkSession, text: String,
-                   root: String, requireDb: String => Unit = null): DataFrame = {
-    import spark.implicits._
-    val table = new graft.storage.TxLogTable(spark, s"$root/_retention_policies")
-    def policies(): DataFrame =
-      if (table.version.isEmpty)
-        Seq.empty[(String, String, Long, Long, Boolean)]
-          .toDF("db", "name", "duration_us", "replica_n", "is_default")
-      else table.read()
-    def show(db: Option[String]): DataFrame = {
-      val all = policies()
-      db.map(d => all.filter(col("db") === d)).getOrElse(all)
-        .select("db", "name", "duration_us", "replica_n", "is_default")
-        .orderBy("db", "name")
-    }
-    val p = new P(tokenize(text))
-    if (p.kw("SHOW")) {
-      p.expectKw("RETENTION"); p.expectKw("POLICIES")
-      val db = if (p.kw("ON")) Some(p.ident()) else None
-      if (requireDb != null) db.foreach(requireDb)
-      if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      return show(db)
-    }
-    val alter = p.kw("ALTER")
-    val create = !alter && p.kw("CREATE")
-    val drop = !alter && !create && p.kw("DROP")
-    if (!(alter || create || drop))
-      p.fail("expected CREATE, ALTER, DROP or SHOW RETENTION ...")
-    p.expectKw("RETENTION"); p.expectKw("POLICY")
-    val name = p.next() match {
-      case TIdent(s) => s
-      case TStr(s, _) => s
-      case t => p.fail(s"expected policy name, got '${t.raw}'")
-    }
-    p.expectKw("ON")
-    val db = p.ident()
-    if (requireDb != null) requireDb(db)
-    if (drop) {
-      if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      if (table.version.nonEmpty)
-        table.delete(col("db") === db && col("name") === name)
-      return show(Some(db))
-    }
-    var dur: Option[Long] = None
-    var repl = 1L
-    var dflt = false
-    var progressed = true
-    while (progressed && !p.done) {
-      if (p.kw("DURATION")) dur = Some(p.peek match {
-        case Some(TDur(us, _)) => p.next(); us
-        case Some(TIdent(s)) if s.equalsIgnoreCase("INF") => p.next(); -1L
-        case t => p.fail(s"expected duration or INF, got '${t.map(_.raw).getOrElse("<end>")}'")
-      })
-      else if (p.kw("REPLICATION")) repl = p.num().toLong
-      else if (p.kw("DEFAULT")) dflt = true
-      else progressed = false
-    }
-    if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-    val durUs = dur.getOrElse(
-      p.fail(s"${if (alter) "ALTER" else "CREATE"} RETENTION POLICY needs DURATION"))
-    require(durUs == -1L || durUs >= 3600000000L,
-      "InfluxQL: retention DURATION must be >= 1h or INF")
-    val newRow = Seq((db, name, durUs, repl, dflt))
-      .toDF("db", "name", "duration_us", "replica_n", "is_default")
-    val updates =
-      if (dflt && table.version.nonEmpty) {
-        // one default per db: the previous default flips off IN THE SAME
-        // merge commit — no window where the db has two defaults
-        val prior = table.read()
-          .filter(col("db") === db && col("is_default") && col("name") =!= name)
-          .withColumn("is_default", lit(false))
-        newRow.unionByName(prior)
-      } else newRow
-    table.merge(updates, Seq("db", "name"))
-    show(Some(db))
-  }
-
-  /** The expiry cutoff (µs since epoch) the db's DEFAULT retention policy
-    * implies at `nowUs`: `now - duration`. None when the db has no default
-    * policy or its duration is INF.
-    */
-  def retentionCutoffUs(spark: org.apache.spark.sql.SparkSession, root: String,
-                        db: String, nowUs: Long): Option[Long] = {
-    val table = new graft.storage.TxLogTable(spark, s"$root/_retention_policies")
-    if (table.version.isEmpty) return None
-    table.read().filter(col("db") === db && col("is_default"))
-      .select("duration_us").collect().headOption
-      .map(_.getLong(0)).filter(_ >= 0L).map(nowUs - _)
-  }
-
-  /** Apply the db's default retention policy to an ACID points table: one
-    * [[graft.storage.TxLogTable.expireOlderThan]] commit at the policy
-    * cutoff. `usToCol` converts the cutoff to the retention column's unit
-    * (pass `_ * 1000` for the nanosecond point store). Returns the
-    * committed version; None when the db has no finite default policy.
-    */
-  def enforceRetention(spark: org.apache.spark.sql.SparkSession,
-                       table: graft.storage.TxLogTable, tsCol: String,
-                       root: String, db: String, nowUs: Long,
-                       usToCol: Long => Long = identity): Option[Long] =
-    retentionCutoffUs(spark, root, db, nowUs)
-      .map(c => table.expireOlderThan(tsCol, usToCol(c)))
-
   /** Post-parse resolution against the points schema: `GROUP BY *` expands
     * to the tag columns; a regex FROM groups per measurement (InfluxDB
     * keeps matching measurements as separate series), so `transducer`

@@ -41,28 +41,28 @@ object Subscriptions {
   private def table(spark: SparkSession, root: String) =
     new TxLogTable(spark, s"$root/_subscriptions")
 
-  private def defs(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val t = table(spark, root)
-    if (t.version.isEmpty)
-      Seq.empty[(String, String, String, String, String)]
-        .toDF("db", "retention_policy", "name", "mode", "destinations")
-    else t.read()
-  }
+  /** One registered subscription, destinations as stored (joined). */
+  private final case class Sub(db: String, rp: String, name: String, mode: String,
+                               destinations: String)
+
+  /** The registry, (db, rp, name)-ordered, as a driver-side snapshot. */
+  private def defs(spark: SparkSession, root: String): TxLogTable.Snapshot[Seq[Sub]] =
+    table(spark, root).snapshot("defs")(_.map(r => Sub(r.getAs[String]("db"),
+      r.getAs[String]("retention_policy"), r.getAs[String]("name"),
+      r.getAs[String]("mode"), r.getAs[String]("destinations")))
+      .sortBy(s => (s.db, s.rp, s.name)))
 
   /** SHOW shape: (db, retention_policy, name, mode, destinations, dropped).
     * `dropped` is the fan-out's cap gauge for the row's database
     * ([[droppedFor]]) — InfluxDB exposes its subscriber drop counters
     * through SHOW STATS; surfacing them on the listing too makes a
     * misbehaving cap observable right where the operator manages the
-    * subscription. Control-plane collect: rows = number of subscriptions.
+    * subscription.
     */
   def show(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    defs(spark, root).orderBy("db", "retention_policy", "name")
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4), droppedFor(root, r.getString(0))))
+    defs(spark, root).value
+      .map(s => (s.db, s.rp, s.name, s.mode, s.destinations, droppedFor(root, s.db)))
       .toDF("db", "retention_policy", "name", "mode", "destinations", "dropped")
   }
 
@@ -93,12 +93,11 @@ object Subscriptions {
     p.expectSym(".")
     val rp = p.ident()
     requireRp(db, rp)
-    def exists: Boolean = defs(spark, root).filter(
-      col("db") === db && col("retention_policy") === rp &&
-        col("name") === name).limit(1).count() > 0
+    def exists(s: TxLogTable.Snapshot[Seq[Sub]]): Boolean =
+      s.value.exists(x => x.db == db && x.rp == rp && x.name == name)
     if (!create) {
       if (!p.done) p.fail(s"trailing input from '${p.next().raw}'")
-      if (!exists) throw new IllegalArgumentException(
+      if (!exists(defs(spark, root))) throw new IllegalArgumentException(
         s"InfluxQL: subscription not found: $name on $db.$rp")
       table(spark, root).delete(
         col("db") === db && col("retention_policy") === rp && col("name") === name)
@@ -122,8 +121,10 @@ object Subscriptions {
     // of concurrent CREATEs of one name exactly one lands
     table(spark, root).appendChecked(Seq((db, rp, name, mode, dests.result().mkString(DestSep)))
         .toDF("db", "retention_policy", "name", "mode", "destinations")) {
-      if (exists) throw new IllegalArgumentException(
+      val s = defs(spark, root)
+      if (exists(s)) throw new IllegalArgumentException(
         s"InfluxQL: subscription already exists: $name on $db.$rp")
+      s.version
     }
     show(spark, root)
   }
@@ -204,10 +205,8 @@ object Subscriptions {
              maxRowsPerBatch: Option[Int] = None): Unit = {
     // control-plane read from the driver-side snapshot: one Spark read per
     // registry commit, none at all while no subscription was ever created
-    val subs = table(SparkSession.active, root).snapshot("fanOut")(
-        _.select("db", "mode", "destinations").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getString(2).split(DestSep).toSeq)).toSeq)
-      .getOrElse(Nil).collect { case (`db`, mode, dests) => (mode, dests) }
+    val subs = defs(SparkSession.active, root).value
+      .collect { case s if s.db == db => (s.mode, s.destinations.split(DestSep).toSeq) }
     if (subs.nonEmpty) {
       val factory = publishFactory
       val pts = points

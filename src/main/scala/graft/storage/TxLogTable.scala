@@ -3,7 +3,7 @@ package graft.storage
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -60,16 +60,6 @@ class TxLogTable(spark: SparkSession, path: String) {
     val vs = listLog(logDir)
     if (vs.isEmpty) None else Some(vs.max)
   }
-
-  /** Stable identity of this commit-log INCARNATION: the filesystem fileKey
-    * (device+inode on POSIX) of the earliest commit file still in the log.
-    * A table dir removed and recreated at the same path restarts version
-    * numbering from 0, so `version` alone cannot key a cross-request cache
-    * — the earliest commit file's inode changes with every incarnation
-    * (commit files are hard-link-created, never rewritten in place). Same
-    * cost class as [[version]]: one directory list + one stat, no Spark job.
-    */
-  def incarnation: Option[String] = stamp.flatMap(_._2)
 
   def read(): DataFrame =
     readVersion(version.getOrElse(throw new IllegalStateException(s"no committed version at $path")))
@@ -132,12 +122,12 @@ class TxLogTable(spark: SparkSession, path: String) {
     catch { case _: CommitConflict => deleteRecursively(root.resolve(dir)); false }
   }
 
-  /** Check-then-append as one compare-and-set: `check` throws to refuse;
-    * `df` commits only on the version `check` ran against, re-checked from
-    * a fresh version until it lands or `check` refuses.
+  /** Check-then-append as one compare-and-set: `check` throws to refuse,
+    * else returns the version it read (a [[snapshot]]'s); `df` commits only
+    * on that version, re-checked until it lands or `check` refuses.
     */
-  def appendChecked(df: DataFrame)(check: => Unit): Unit =
-    while ({ val at = version; check; !appendIfAt(df, at) }) ()
+  def appendChecked(df: DataFrame)(check: => Option[Long]): Unit =
+    while (!appendIfAt(df, check)) ()
 
   // a range-clustered merge-maintained table REFUSES plain appends: the
   // granular merge's correctness rests on the committed snapshot being
@@ -234,35 +224,47 @@ class TxLogTable(spark: SparkSession, path: String) {
     }._1
   }
 
-  /** `decode` of the current snapshot, kept on the driver: decoded once per
-    * commit and then served from a JVM-wide cache entry per (table path,
-    * `tag`), stamped with the commit version PLUS the log incarnation, so a
-    * table dir removed and recreated at the same path (version numbering
-    * restarts) never serves a stale value. Steady state is one commit-log
-    * list + one stat + a map hit, never a Spark job. None before the first
-    * commit. For control-plane tables whose decoded value is small.
+  /** `decode` of the current snapshot's rows, kept on the driver: decoded
+    * once per commit and then served from a JVM-wide cache entry per (table
+    * path, `tag`), stamped with the commit version PLUS the log incarnation,
+    * so a table dir removed and recreated at the same path (version
+    * numbering restarts) never serves a stale value. Steady state is one
+    * commit-log list + one stat + a map hit, never a Spark job. Before the
+    * first commit the value is `decode(Nil)`. The result carries the version
+    * it decoded, so a check-then-append fences [[appendIfAt]] on exactly
+    * what its check read. For control-plane tables whose rows are few.
     */
-  def snapshot[T](tag: String)(decode: DataFrame => T): Option[T] =
-    stamp.map { case st @ (v, _) =>
+  def snapshot[T](tag: String)(decode: Seq[Row] => T): Snapshot[T] =
+    stamp.fold(Snapshot(None, decode(Nil))) { case st @ (v, _) =>
       val key = (root.toAbsolutePath.normalize.toString, tag)
       SnapshotCache.get(key) match {
-        case (`st`, value) => value.asInstanceOf[T]
+        case (`st`, value) => Snapshot(Some(v), value.asInstanceOf[T])
         case _ =>
-          val value = decode(readVersion(v))
+          val value = decode(readVersion(v).collect().toSeq)
           SnapshotCache.put(key, (st, value))
-          value
+          Snapshot(Some(v), value)
       }
     }
 
-  /** (latest version, [[incarnation]]) from one commit-log listing. */
+  /** (latest version, incarnation) from one commit-log listing, no Spark
+    * job. The incarnation is the fileKey (device+inode on POSIX) and mtime
+    * of the earliest commit file still in the log. A table dir removed and
+    * recreated at the same path restarts version numbering from 0, so the
+    * version alone cannot key a cross-request cache; nor can the inode
+    * alone, which the filesystem may hand straight to the new commit 0.
+    * The pair changes with every incarnation (commit files are
+    * hard-link-created, never rewritten in place).
+    */
   private def stamp: Option[(Long, Option[String])] = {
     if (!Files.isDirectory(logDir)) return None
     val vs = listLog(logDir)
     if (vs.isEmpty) None
     else Some((vs.max,
-      try Some(String.valueOf(Files.readAttributes(logDir.resolve(s"${vs.min}.json"),
-        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey))
-      catch { case _: java.io.IOException => None }))
+      try {
+        val a = Files.readAttributes(logDir.resolve(s"${vs.min}.json"),
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        Some(s"${a.fileKey}@${a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}")
+      } catch { case _: java.io.IOException => None }))
   }
 
   /** [[append]], materialized as MANY range-clustered data directories in
@@ -994,6 +996,11 @@ object TxLogTable {
   val TxnCheckpointInterval: Long = 10L
 
   final class CommitConflict(msg: String) extends RuntimeException(msg)
+
+  /** A table's rows as [[TxLogTable.snapshot]] decoded them at commit
+    * `version` (None: no commit yet).
+    */
+  final case class Snapshot[T](version: Option[Long], value: T)
 
   /** [[TxLogTable.snapshot]]'s entries: (path, tag) -> (stamp, value). */
   private val SnapshotCache = new java.util.concurrent.ConcurrentHashMap[

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.storage.TxLogTable
 
@@ -50,8 +49,7 @@ object RegistryMaintenance {
     */
   def activeIds(spark: SparkSession, tablePath: String): Set[String] =
     new TxLogTable(spark, tablePath).snapshot("activeIds")(
-      _.filter(col("active")).select(col("deviceId")).as(Encoders.STRING).collect().toSet)
-      .getOrElse(Set.empty)
+      _.filter(_.getAs[Boolean]("active")).map(_.getAs[String]("deviceId")).toSet).value
 
   /** [[activeIds]] in the shape `Ingest.registryFilter` expects: a
     * driver-local frame (a LocalRelation — broadcasting it scans nothing).

@@ -205,6 +205,112 @@ class InfluxHttpSpec extends SparkSuite {
     assert(viaHeader.statusCode() == 200, viaHeader.body())
   }
 
+  test("/query decides 401 and 403 by the failure's type, never by its message") {
+    cat.run("CREATE USER texter WITH PASSWORD 'tpw'")
+    cat.run("GRANT READ ON tele TO texter")
+    // parse errors echo the offending token: that is the statement's own
+    // error, not an auth outcome of the whole request
+    Seq("not authorized", "authentication failed").foreach { word =>
+      val r = get(s"/query?db=tele&u=texter&p=tpw&q=${enc(s"SELECT value FROM temp '$word'")}")
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().contains(""""statement_id": 0, "error"""") &&
+        r.body().contains("trailing input") && r.body().contains(word), r.body())
+    }
+    assert(get(s"/query?db=tele&u=texter&p=WRONG&q=${enc("SELECT value FROM temp")}")
+      .statusCode() == 401)
+    assert(post("/query", s"db=tele&u=texter&p=tpw&q=${enc("DROP MEASUREMENT temp")}",
+      contentType = "application/x-www-form-urlencoded").statusCode() == 403)
+  }
+
+  test("control tables are driver-side snapshots: warm requests read none, credentials add no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val croot = java.nio.file.Files.createTempDirectory("control_snapshots").toString
+    val c = new InfluxCatalog(spark, croot, defaultDb = "tele")
+    c.run("CREATE DATABASE tele")
+    c.run("CREATE RETENTION POLICY week ON tele DURATION 7d DEFAULT")
+    c.run("CREATE USER reader WITH PASSWORD 'rpw'")
+    c.run("GRANT ALL ON tele TO reader")
+    c.run("CREATE CONTINUOUS QUERY c0 ON tele BEGIN SELECT count(value) AS n " +
+      "INTO cnt FROM temp GROUP BY time(1m) END")
+    c.run("CREATE SUBSCRIPTION s0 ON tele.week DESTINATIONS ALL 'mq/s0'")
+    val nowNs = System.currentTimeMillis() * 1000000L
+    val s = new InfluxHttpServer(c, port = 0)
+    s.start()
+    val b = s"http://127.0.0.1:${s.boundPort}"
+    val sel = s"/query?db=tele&q=${enc("SELECT count(value) FROM temp")}"
+    def query(creds: String): Unit = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(s"$b$sel$creds")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200 && !r.body().contains("error"), r.body())
+    }
+    def write(i: Int): Unit = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(s"$b/write?db=tele&u=reader&p=rpw"))
+        .POST(HttpRequest.BodyPublishers.ofString(s"temp,device=a value=$i ${nowNs + i}")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 204, r.body())
+    }
+    val control = Seq("_users", "_grants", "_retention_policies", "_field_types",
+      "_continuous_queries", "_subscriptions")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jl = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // the plans and job count of everything `body` ran, plus the sentinel's
+    // own jobs: both listeners sit on the shared listener queue, so once
+    // the sentinel's plan arrived every earlier event did too
+    var n = 0
+    def observe(body: => Unit): (Seq[String], Int) = {
+      plans.clear(); jobs.set(0)
+      body
+      n += 1
+      spark.range(1).toDF(s"control_sentinel_$n").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = plans.toArray(Array.empty[String]).toSeq
+      while (!seen.exists(_.contains(s"control_sentinel_$n")) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_.contains(s"control_sentinel_$n")), "listeners delivered nothing within 30 s")
+      (seen.filterNot(_.contains(s"control_sentinel_$n")), jobs.get())
+    }
+    def controlReads(ps: Seq[String]) = control.filter(t => ps.exists(_.contains(t)))
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      // warm-up: the first /write registers the field type, and each table
+      // is decoded once, at its first check after a commit
+      val (cold, _) = observe { write(0); query(""); query("&u=reader&p=rpw") }
+      assert(controlReads(cold).contains("_field_types"), cold)
+      val (_, sentinelJobs) = observe(())
+      val (anonPlans, anonJobs) = observe(query(""))
+      val (credPlans, credJobs) = observe(query("&u=reader&p=rpw"))
+      info(s"warm HTTP SELECT: ${anonJobs - sentinelJobs} jobs without credentials, " +
+        s"${credJobs - sentinelJobs} with u/p")
+      assert(controlReads(anonPlans ++ credPlans).isEmpty, credPlans)
+      assert(credJobs == anonJobs, s"u/p added ${credJobs - anonJobs} jobs")
+      Seq[(String, () => Unit)](
+        "executeAs SELECT" -> (() =>
+          c.executeAs("reader", "rpw", "SELECT count(value) FROM temp").collect()),
+        "/write of known field types" -> (() => write(1)),
+        "retention sweep" -> (() => graft.ServiceMain.retentionSweep(spark, croot)),
+        "SHOW SHARDS" -> (() => c.run("SHOW SHARDS").collect())
+      ).foreach { case (what, body) =>
+        val (ps, _) = observe(body())
+        assert(controlReads(ps).isEmpty, s"$what read ${controlReads(ps)}:\n$ps")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(jl)
+      spark.listenerManager.unregister(ql)
+      s.stop()
+    }
+  }
+
   test("authRequired refuses anonymous requests like auth-enabled InfluxDB") {
     val authed = new InfluxHttpServer(cat, port = 0, authRequired = true)
     authed.start()

@@ -3,7 +3,7 @@ package graft
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.functions.{col, concat, lit, timestamp_micros}
-import graft.influxql.InfluxQL
+import graft.influxql.{InfluxQL, RetentionPolicies}
 
 /** Randomized differential test: the InfluxQL planner against an exact
   * in-memory reference interpreter, over the aggregate subset (functions,
@@ -1422,7 +1422,7 @@ class InfluxQLDifferentialSpec extends SparkSuite {
           val dur = durs(rnd.nextInt(4))
           val repl = 1L + rnd.nextInt(3)
           val dflt = rnd.nextBoolean()
-          InfluxQL.runRetention(spark,
+          RetentionPolicies.run(spark,
             s"$verb RETENTION POLICY $name ON $db DURATION ${durTxt(dur)} " +
               s"REPLICATION $repl${if (dflt) " DEFAULT" else ""}", root)
           if (dflt) model = model.map { case (k @ (d, _), v) =>
@@ -1430,18 +1430,18 @@ class InfluxQLDifferentialSpec extends SparkSuite {
           }
           model += (db, name) -> (dur, repl, dflt)
         case 2 => // DROP (possibly of a policy that never existed)
-          InfluxQL.runRetention(spark,
+          RetentionPolicies.run(spark,
             s"DROP RETENTION POLICY $name ON $db", root)
           model -= ((db, name))
         case 3 => // SHOW, with or without ON
           val on = if (rnd.nextBoolean()) Some(db) else None
-          val got = InfluxQL.runRetention(spark,
+          val got = RetentionPolicies.run(spark,
             s"SHOW RETENTION POLICIES${on.map(" ON " + _).getOrElse("")}", root)
             .as[(String, String, Long, Long, Boolean)].collect().toSeq
           assert(got == modelShow(on), s"iter $iter SHOW${on.getOrElse("")}")
       }
       // every mutation's returned SHOW matches the model too
-      val all = InfluxQL.runRetention(spark, "SHOW RETENTION POLICIES", root)
+      val all = RetentionPolicies.run(spark, "SHOW RETENTION POLICIES", root)
         .as[(String, String, Long, Long, Boolean)].collect().toSeq
       assert(all == modelShow(None), s"iter $iter full-store drift")
       // invariant: at most one default per db
@@ -1532,7 +1532,7 @@ class InfluxQLDifferentialSpec extends SparkSuite {
       }
       // invariant every iteration: the full policy store holds exactly the
       // live dbs' policies (DROP DATABASE cascaded, nothing leaked)
-      assert(InfluxQL.runRetention(spark, "SHOW RETENTION POLICIES", root)
+      assert(RetentionPolicies.run(spark, "SHOW RETENTION POLICIES", root)
         .as[(String, String, Long, Long, Boolean)].collect().toSeq ==
         polShow(None), s"iter $iter policy-store drift")
     }

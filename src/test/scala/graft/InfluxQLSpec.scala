@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.influxql.InfluxQL
+import graft.influxql.{InfluxQL, RetentionPolicies}
 import graft.influxql.InfluxQL._
 
 class InfluxQLSpec extends SparkSuite {
@@ -1294,7 +1294,7 @@ class InfluxQLSpec extends SparkSuite {
   test("retention DDL: CREATE/ALTER/SHOW/DROP round-trip the policy store") {
     val root = java.nio.file.Files.createTempDirectory("retention").toString
     def rp(text: String) =
-      InfluxQL.runRetention(spark, text, root)
+      RetentionPolicies.run(spark, text, root)
         .as[(String, String, Long, Long, Boolean)].collect().toSeq
 
     // empty store: SHOW answers, not throws
@@ -1336,18 +1336,18 @@ class InfluxQLSpec extends SparkSuite {
     ).toDF("device", "transducer", "ts_ns", "value"))
 
     // no finite default policy yet: enforcement is a no-op
-    assert(InfluxQL.enforceRetention(spark, table, "ts_ns", root, "telemetry",
+    assert(RetentionPolicies.enforce(spark, table, "ts_ns", root, "telemetry",
       nowUs, _ * 1000L).isEmpty)
-    InfluxQL.runRetention(spark,
+    RetentionPolicies.run(spark,
       "CREATE RETENTION POLICY keep30 ON telemetry DURATION 30d DEFAULT", root)
-    val v = InfluxQL.enforceRetention(spark, table, "ts_ns", root, "telemetry",
+    val v = RetentionPolicies.enforce(spark, table, "ts_ns", root, "telemetry",
       nowUs, _ * 1000L)
     assert(v.nonEmpty)
     assert(table.read().select("value").as[Double].collect().toSet == Set(2.0, 3.0))
     // INF default: cutoff is None, nothing further expires
-    InfluxQL.runRetention(spark,
+    RetentionPolicies.run(spark,
       "ALTER RETENTION POLICY keep30 ON telemetry DURATION INF DEFAULT", root)
-    assert(InfluxQL.retentionCutoffUs(spark, root, "telemetry", nowUs).isEmpty)
+    assert(RetentionPolicies.cutoffUs(spark, root, "telemetry", nowUs).isEmpty)
   }
 
   test("database DDL: CREATE/SHOW/DROP with autogen policy and cascading drop") {
@@ -1377,7 +1377,7 @@ class InfluxQLSpec extends SparkSuite {
     assert(cat.run("DROP DATABASE tele").as[String].collect().toSeq == Seq("other"))
     assert(intercept[IllegalArgumentException](cat.run("SELECT mean(value) FROM temp"))
       .getMessage.contains("database not found"))
-    assert(InfluxQL.runRetention(spark, "SHOW RETENTION POLICIES", root)
+    assert(RetentionPolicies.run(spark, "SHOW RETENTION POLICIES", root)
       .as[(String, String, Long, Long, Boolean)].collect().forall(_._1 == "other"))
     // recreate: fresh autogen, no resurrected data
     cat.run("CREATE DATABASE tele")
@@ -1435,6 +1435,111 @@ class InfluxQLSpec extends SparkSuite {
       assert(a.run("SELECT mean(value) FROM temp").collect().isEmpty)
       assert(b.run("SHOW DATABASES").as[String].collect().toSeq == Seq("other", "tele"))
     } finally spark.listenerManager.unregister(l)
+  }
+
+  test("control-table SHOW statements keep their columns and types, empty or not") {
+    val root = java.nio.file.Files.createTempDirectory("catalog_show_shapes").toString
+    val cat = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    val shapes = Seq(
+      "SHOW USERS" -> "user:string,admin:boolean",
+      "SHOW GRANTS FOR u" -> "database:string,privilege:string",
+      "SHOW RETENTION POLICIES" ->
+        "db:string,name:string,duration_us:bigint,replica_n:bigint,is_default:boolean",
+      "SHOW CONTINUOUS QUERIES" -> "db:string,name:string,query:string",
+      "SHOW SUBSCRIPTIONS" ->
+        "db:string,retention_policy:string,name:string,mode:string,destinations:string,dropped:bigint")
+    def shape(stmt: String): (String, Int) = {
+      val df = cat.run(stmt)
+      (df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","),
+        df.collect().length)
+    }
+    // never-committed tables, and `_retention_policies` committed but empty
+    assert(shape("SHOW USERS") == (shapes.head._2, 0))
+    cat.run("CREATE USER u WITH PASSWORD 'pw'") // SHOW GRANTS FOR needs its user
+    cat.run("CREATE DATABASE tele")
+    cat.run("DROP RETENTION POLICY autogen ON tele")
+    shapes.tail.foreach { case (stmt, cols) => assert(shape(stmt) == (cols, 0), stmt) }
+    cat.run("GRANT READ ON tele TO u")
+    cat.run("CREATE RETENTION POLICY autogen ON tele DURATION INF DEFAULT")
+    cat.run("CREATE CONTINUOUS QUERY c ON tele BEGIN SELECT count(value) AS n " +
+      "INTO cnt FROM temp GROUP BY time(1m) END")
+    cat.run("CREATE SUBSCRIPTION s ON tele.autogen DESTINATIONS ALL 'mq/s'")
+    shapes.foreach { case (stmt, cols) => assert(shape(stmt) == (cols, 1), stmt) }
+  }
+
+  test("control-table snapshots: a change through one catalog shows at another's next statement") {
+    import graft.influxql.InfluxAuth.{AuthenticationFailed, NotAuthorized}
+    val root = java.nio.file.Files.createTempDirectory("catalog_snapshots").toString
+    val a = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    val b = new graft.influxql.InfluxCatalog(spark, root, defaultDb = "tele")
+    a.run("CREATE DATABASE tele")
+    a.writePoints("tele", pts(("d", "temp", 1L, 1.0), ("d", "temp", 2L, 3.0)))
+    val sel = "SELECT mean(value) FROM temp"
+    def selectAs(pw: String) = b.runAs("u", pw, sel).as[Double].collect().toSeq
+
+    // users and grants: every check at b runs warm on the snapshot it cached
+    a.run("CREATE USER u WITH PASSWORD 'pw1'")
+    assert(b.run("SHOW USERS").as[(String, Boolean)].collect().toSeq == Seq(("u", false)))
+    assert(intercept[NotAuthorized](selectAs("pw1")).getMessage.contains("READ"))
+    a.run("GRANT READ ON tele TO u")
+    assert(selectAs("pw1") == Seq(2.0))
+    a.run("SET PASSWORD FOR u = 'pw2'")
+    intercept[AuthenticationFailed](selectAs("pw1"))
+    assert(selectAs("pw2") == Seq(2.0))
+    a.run("REVOKE READ ON tele FROM u")
+    intercept[NotAuthorized](selectAs("pw2"))
+    a.run("DROP USER u")
+    intercept[AuthenticationFailed](selectAs("pw2"))
+    assert(b.run("SHOW USERS").collect().isEmpty)
+
+    // retention policies: the rp qualifier, SHOW SHARDS' default and SHOW
+    val qualified = "SELECT mean(value) FROM tele.week.temp"
+    assert(intercept[IllegalArgumentException](b.run(qualified))
+      .getMessage.contains("retention policy not found"))
+    a.run("CREATE RETENTION POLICY week ON tele DURATION 7d")
+    assert(b.run(qualified).as[Double].collect().toSeq == Seq(2.0))
+    def shardRps = b.run("SHOW SHARDS").select("retention_policy").as[String].collect().toSet
+    assert(shardRps == Set("autogen"))
+    a.run("ALTER RETENTION POLICY week ON tele DURATION 14d DEFAULT")
+    assert(shardRps == Set("week"))
+    assert(b.run("SHOW RETENTION POLICIES ON tele").as[(String, String, Long, Long, Boolean)]
+      .collect().toSeq == Seq(("tele", "autogen", -1L, 1L, false),
+        ("tele", "week", 14L * 86400000000L, 1L, true)))
+    a.run("DROP RETENTION POLICY week ON tele")
+    assert(intercept[IllegalArgumentException](b.run(qualified))
+      .getMessage.contains("retention policy not found"))
+    assert(shardRps == Set("autogen"))
+
+    // continuous queries: SHOW and the sole-writer refusal of the target
+    a.run("CREATE CONTINUOUS QUERY c ON tele BEGIN SELECT count(value) AS n " +
+      "INTO cnt FROM temp GROUP BY time(1m) END")
+    assert(b.run("SHOW CONTINUOUS QUERIES").select("name").as[String].collect().toSeq == Seq("c"))
+    val into = "SELECT mean(value) INTO cnt FROM temp"
+    assert(intercept[IllegalArgumentException](b.run(into))
+      .getMessage.contains("continuous query target"))
+    a.run("DROP CONTINUOUS QUERY c ON tele")
+    assert(b.run("SHOW CONTINUOUS QUERIES").collect().isEmpty)
+    b.run(into).collect()
+
+    // subscriptions
+    a.run("CREATE SUBSCRIPTION s ON tele.autogen DESTINATIONS ALL 'mq/s'")
+    assert(b.run("SHOW SUBSCRIPTIONS").select("name").as[String].collect().toSeq == Seq("s"))
+    a.run("DROP SUBSCRIPTION s ON tele.autogen")
+    assert(b.run("SHOW SUBSCRIPTIONS").collect().isEmpty)
+
+    // a root deleted and recreated restarts every log's version numbering:
+    // the new `_users` commit 0 must not be served from the old commit 0
+    val dir2 = java.nio.file.Files.createTempDirectory("catalog_reincarnated")
+    val c = new graft.influxql.InfluxCatalog(spark, dir2.toString)
+    def auth(pw: String) = graft.influxql.InfluxAuth.authenticate(spark, dir2.toString, "v", pw)
+    c.run("CREATE USER v WITH PASSWORD 'old'")
+    assert(auth("old"))
+    val walk = java.nio.file.Files.walk(dir2)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+    finally walk.close()
+    java.nio.file.Files.createDirectories(dir2)
+    c.run("CREATE USER v WITH PASSWORD 'new'")
+    assert(!auth("old") && auth("new"))
   }
 
   test("database routing: qualified FROM forms, ON <db> SHOW, rp validation") {
